@@ -1,6 +1,7 @@
 package graft.ops
 
-import graft.{PlanProbe, SparkEntry, SparkSpec}
+import graft.{PlanProbe, ResultDigest, SparkEntry, SparkSpec}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.joins.CartesianProductExec
@@ -38,6 +39,9 @@ class SideEffectPlanAuditSpec extends SparkSpec {
       case q => Seq(q)
     }
 
+  /** Each gate's returned read-back frame, in sweep order. */
+  private val frames = scala.collection.mutable.LinkedHashMap.empty[String, DataFrame]
+
   /** One probed sweep shared by the asserts: run every side-effectful
     * gate with capture on, then wait for the async listener bus to drain
     * (QueryExecutionListener events are delivered off-thread — a count
@@ -51,6 +55,7 @@ class SideEffectPlanAuditSpec extends SparkSpec {
     try {
       sideEffectful.foreach { q =>
         val frame = q.fn(spark, dir)
+        frames(q.name) = frame
         // The returned read-back frame is part of the query too.
         buf.add((s"${q.name}/result", frame.queryExecution.executedPlan))
         spark.catalog.clearCache()
@@ -121,5 +126,75 @@ class SideEffectPlanAuditSpec extends SparkSpec {
       } => label
     }
     assert(offenders.isEmpty, s"unpruned lineitem scans in: ${offenders.distinct}")
+  }
+
+  /** Result digests ([[ResultDigest]]) of every gate in the sweep, taken
+    * after capture stops so the digest jobs stay out of the plan audit. */
+  private lazy val digests: Map[String, String] = {
+    captured
+    frames.map { case (name, frame) => name -> ResultDigest.of(frame) }.toMap
+  }
+
+  /** Golden results at sf0.001, one digest per gate, recorded before the
+    * stream-run helpers were factored out of the gates. Every gate gave the
+    * same digest in two separate runs, so none is left out. */
+  private val golden: Map[String, String] = Map(
+    "q100_ann_incremental" -> "30:-18859429106593029172",
+    "q103_stream_ann_ingest" -> "30:-18859429106593029172",
+    "q108_stream_drift" -> "3:-2407127156875061536",
+    "q114_stream_scd2" -> "802:-44100155694093480067",
+    "q116_stream_click_outcomes" -> "210:241262754330038378488",
+    "q117_stream_enrich" -> "919:-44382809689626819109",
+    "q126_stream_topk" -> "20:-32207454295371562912",
+    "q158_stream_markov" -> "28:32146897535012020751",
+    "q160_csv_rejects" -> "1:-1646496868876501050",
+    "q161_jsonl_rejects" -> "1:-1646496868876501050",
+    "q173_digest_sink" -> "1:1670896406367999574",
+    "q174_gen_stream" -> "8:8190397022099365841",
+    "q183_stream_crosstab" -> "75:-17435455549021849500",
+    "q184_stream_recent" -> "15:9409187039640106399",
+    "q232_ann_retrain" -> "30:-40145584499409813429",
+    "q233_dedup_incremental_cluster" -> "45:12006533575907797954",
+    "q234_stream_ann_maintain" -> "30:-40145584499409813429",
+    "q238_stream_heavy_ngrams" -> "2405:5166210642854713508",
+    "q244_stream_cluster_maintain" -> "45:12006533575907797954",
+    "q246_orc_roundtrip" -> "2:886491037952160796",
+    "q247_stream_band_compact" -> "28:15508736139979272794",
+    "q252_stream_hll_vocab" -> "5:26102952933517201653",
+    "q255_countmin_audit" -> "20:-22623003246791527233",
+    "q256_xml_rejects" -> "1:-1646496868876501050",
+    "q257_stream_sliding" -> "1902:-79530790784762966053",
+    "q259_stream_full_maintenance" -> "78:-66462764295163821319",
+    "q279_stream_forget" -> "44:31486383968642992577",
+    "q296_stream_ivm_join" -> "150:-4411133300313852952",
+    "q301_stream_late_dim" -> "25:-7461748711897071253",
+    "q322_stream_sprt" -> "5:1110841337990054317",
+    "q347_stream_ewma" -> "25:-39961180988090103661",
+    "q355_stream_sequential" -> "125:130120600970079302191",
+    "q384_stream_cc_ingest" -> "200:120712814036679371327",
+    "q393_stream_weighted_sample" -> "32:13920708801349231823",
+    "q397_stream_tri_support" -> "2324:-260336566990494328804",
+    "q402_stream_cms_maintain" -> "128:88985206234424105792",
+    "q411_stream_core3_maintain" -> "200:-5031006332547526538",
+    "q419_stream_lpa_maintain" -> "200:120712814036679371327",
+    "q424_stream_msf_maintain" -> "199:89078390005473879583",
+    "q427_stream_bloom_maintain" -> "2048:765269747449253924056",
+    "q435_stream_cdc_maintain" -> "10:-15818207582308826858",
+    "q444_stream_community_maintain" -> "11:19065638761006302590",
+    "q453_stream_seq_graph" -> "200:41116014056557995627",
+    "q92_stream_tumbling" -> "977:47939514682493848849",
+    "q94_stream_attribution" -> "2:188746760471796526",
+    "q95_stream_sessions" -> "946:74337264934469196750",
+    "q96_stream_dedup" -> "1000:-68337564230679830690",
+    "q99_stream_dedup_incremental" -> "28:26461330821654279106"
+  )
+
+  test("every gate's result matches its golden digest") {
+    val table = digests.toSeq.sortBy(_._1)
+      .map { case (n, d) => s"""    "$n" -> "$d",""" }.mkString("\n")
+    assert(digests.keySet == golden.keySet,
+      s"golden table out of date; current digests:\n$table")
+    val diff = digests.collect { case (n, d) if golden(n) != d => s"$n: ${golden(n)} -> $d" }
+    assert(diff.isEmpty, s"results changed:\n${diff.toSeq.sorted.mkString("\n")}")
   }
 }
