@@ -262,10 +262,6 @@ object Dedup {
     * path can release the cache once its eager checkpoint has consumed
     * it — without this, a long-running stream leaks one dead cache entry
     * per trigger. */
-  private[graft] def pairsWithCacheDev(archiveBands: DataFrame,
-      newBands: DataFrame): (DataFrame, DataFrame) =
-    pairsWithCache(archiveBands, newBands)
-
   private def pairsWithCache(archiveBands: DataFrame,
       newBands: DataFrame): (DataFrame, DataFrame) = {
     // Persist into ITS OWN val: Dataset.unpersist(cascade=false) only

@@ -1,40 +1,70 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import graft.{Q, Tables}
-import org.apache.spark.sql.SparkSession
+import org.apache.commons.io.FileUtils
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+import org.apache.spark.sql.types.{BooleanType, DoubleType, LongType, StringType, StructType,
+  TimestampNTZType}
+import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
-/** Oracle-gated streaming execution (SURVEY §2.8): q92 runs the tumbling
-  * event-window aggregation through an ACTUAL `writeStream` (file source →
-  * watermark → windowed agg → parquet file sink, `Trigger.AvailableNow`)
-  * and gates the files the sink wrote against the same DuckDB SQL as the
-  * batch q21 — turning the batch-parity theorem the streaming specs prove
-  * into a driver-checked CORRECTNESS row.
+/** Oracle-gated streaming executions (SURVEY §2.8): every gate runs a real
+  * stream to completion and returns a read-back frame that the driver
+  * checks against a DuckDB oracle, like any batch query.
   *
-  * Append mode only emits a window once the watermark passes its end, so
-  * the input is staged into a scratch dir with one SENTINEL event appended
-  * 80 minutes after the real maximum: the final watermark (max+80m−1h =
-  * max+20m) closes every real window (each ends ≤ max+10m) while the
-  * sentinel's own window stays open and is never emitted. The sentinel is
-  * additionally filtered on read-back, so the checked result is exactly
-  * the batch q21 surface.
+  * Anatomy of a gate. [[gate]] hands the body a fresh `graft-<q>-` work
+  * directory named after the query id; the body then
+  *  1. stages its input under `<work>/in` as one parquet file per
+  *     micro-batch, in arrival order ([[stageOrderedBatches]],
+  *     [[stageParityBatches]]), or as a copy of the events table
+  *     ([[stageEvents]], [[stageWithSentinels]]);
+  *  2. runs one step per trigger: a fold gate passes its step to
+  *     [[foldStream]], which calls it with the trigger's session, batch and
+  *     batch id; a sink gate hands a streaming frame to [[runToParquet]],
+  *     which appends it to `<work>/out`;
+  *  3. reads back what the run published (the newest generation through
+  *     [[genBefore]] or [[lastGen]], the committed batches through
+  *     [[committedBatchesBefore]], or the sink files) and shapes the
+  *     oracle's result.
   *
-  * At 100 TB the same topology runs unbounded: the file sink's per-window
-  * append IS the incremental publish, and state stays bounded by the
-  * 1-hour watermark (windows close and evict as event time advances).
-  */
+  * Which helper owns which part of the run protocol:
+  *  - [[streamSession]]: the isolated child session the stream runs on;
+  *  - [[stagedStream]]: the file source over the staged input, one file
+  *    per trigger;
+  *  - [[foldStream]]: the `foreachBatch` wiring of a step;
+  *  - [[finish]]: the checkpoint under `<work>/ckpt`, the available-now
+  *    trigger, the wait for completion, the plan probe, dropping the
+  *    staged input, and deleting `<work>` at JVM exit (read-backs are lazy,
+  *    so the published outputs must outlive the gate).
+  *
+  * Replay contract of every step: the foreachBatch id is stable under
+  * at-least-once redelivery, so a step rewrites only its own `gen=<id>` /
+  * `batch=<id>` outputs and reads only what was published under ids
+  * strictly below its own. A replayed batch therefore recomputes identical
+  * outputs from identical inputs. */
 object StreamGate {
 
   private val Sentinel = "__sentinel__"
+
+  /** A gate named `name`: `body` gets the session, the data dir, and a
+    * fresh work directory `graft-<q>-`, where `<q>` is the query id that
+    * prefixes `name`. */
+  private def gate(name: String, oracle: String)(
+      body: (SparkSession, String, Path) => DataFrame): Q =
+    Q(name, oracle) { (s, dir) =>
+      body(s, dir, Files.createTempDirectory(s"graft-${name.takeWhile(_ != '_')}-"))
+    }
 
   /** Stage `<dir>/events.parquet` (a single file in the driver testdata
     * layout) into `<work>/in/events.parquet/` as a DIRECTORY of files —
     * the streaming file source only accepts directories. Returns the
     * source root to hand to `EventStream.events`. */
-  private def stageEvents(dir: String, work: java.nio.file.Path): String = {
+  private def stageEvents(dir: String, work: Path): String = {
     val in = work.resolve("in").resolve("events.parquet")
     Files.createDirectories(in)
     val src = Paths.get(dir, "events.parquet")
@@ -50,25 +80,23 @@ object StreamGate {
     work.resolve("in").toString
   }
 
-  /** Drop the staged input copy once the stream has consumed it — the
-    * returned DataFrame reads only the OUTPUT dir, so the copies need not
-    * outlive the query (they otherwise accumulate across bench passes). */
-  private def dropStagedInput(work: java.nio.file.Path): Unit =
-    org.apache.commons.io.FileUtils.deleteQuietly(work.resolve("in").toFile)
-
-  /** Append sentinel rows to the staged input in its STORED ts layout —
-    * the testdata's physical type has varied across drops (Long nanos /
-    * µs NTZ / µs UTC, see [[graft.Tables]]), and a sentinel file whose
-    * `ts` type disagrees with the staged files would fail the stream's
-    * schema. Rows are (event_id, ts-in-µs, user_id, event_type, value,
-    * props); the µs value is converted to whatever the files store. */
-  private def appendSentinels(
-      s: SparkSession, in: java.nio.file.Path,
-      rows: Seq[(Long, Long, Long, String, Double, String)]): Unit = {
-    import org.apache.spark.sql.types.{LongType, TimestampNTZType}
+  /** [[stageEvents]] plus sentinel rows `leadMicros` past the real maximum
+    * `ts`; each sentinel is (event_id, user_id, event_type) with value 0.0
+    * and empty props. Sentinels are written in the staged files' STORED
+    * ts layout — the testdata's physical type has varied across drops
+    * (Long nanos / µs NTZ / µs UTC, see [[graft.Tables]]), and a sentinel
+    * file whose `ts` type disagrees with the staged files would fail the
+    * stream's schema. Returns the source root. */
+  private def stageWithSentinels(s: SparkSession, dir: String, work: Path,
+      leadMicros: Long,
+      sentinels: Seq[(Long, Long, String)] = Seq((-1L, -1L, Sentinel))): String = {
+    val srcRoot = stageEvents(dir, work)
+    val in = Paths.get(srcRoot, "events.parquet").toString
+    val micros = Tables(s, dir, "events")
+      .agg(max(unix_micros(col("ts")))).collect()(0).getLong(0) + leadMicros
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val stored = s.read.parquet(in.toString).schema
-    def tsVal(micros: Long): Any = stored("ts").dataType match {
+    val stored = s.read.parquet(in).schema
+    val ts: Any = stored("ts").dataType match {
       case LongType => micros * 1000L
       case TimestampNTZType =>
         java.time.LocalDateTime.ofEpochSecond(
@@ -80,11 +108,10 @@ object StreamGate {
           Math.floorDiv(micros, 1000000L),
           Math.floorMod(micros, 1000000L) * 1000L))
     }
-    val jrows = new java.util.ArrayList[org.apache.spark.sql.Row]()
-    rows.foreach { case (id, micros, uid, typ, v, props) =>
-      jrows.add(org.apache.spark.sql.Row(id, tsVal(micros), uid, typ, v, props))
-    }
-    s.createDataFrame(jrows, stored).write.mode("append").parquet(in.toString)
+    val rows = new java.util.ArrayList[Row]()
+    sentinels.foreach { case (id, uid, typ) => rows.add(Row(id, ts, uid, typ, 0.0, "")) }
+    s.createDataFrame(rows, stored).write.mode("append").parquet(in)
+    srcRoot
   }
 
   /** A dedicated child session for one stream execution: same
@@ -99,8 +126,7 @@ object StreamGate {
     * tables, so the child session is capped at 8 partitions (measured:
     * q94 8.1 s → 3.1 s warm at local[32]); at 100 TB the same dial is
     * sized UP to the key cardinality instead. */
-  private def streamSession(s: org.apache.spark.sql.SparkSession)
-      : org.apache.spark.sql.SparkSession = {
+  private def streamSession(s: SparkSession): SparkSession = {
     val ss = s.newSession()
     if (scala.util.Try(
         ss.conf.get("spark.sql.shuffle.partitions").toInt).toOption.forall(_ > 8))
@@ -111,45 +137,60 @@ object StreamGate {
     ss
   }
 
-  /** Run `df` through the shared parquet sink (append, AvailableNow) under
-    * `work`, wait for completion, drop the staged input, and return the
-    * output path for read-back. The caller's read of the output is lazy,
-    * so `work` (sink files + checkpoint) must outlive this call — it is
-    * registered for deletion at JVM exit instead, bounding the scratch
-    * footprint to one process lifetime (the staged INPUT copy, the big
-    * part, is still dropped eagerly). */
-  private def runToParquet(df: org.apache.spark.sql.DataFrame,
-      work: java.nio.file.Path): String = {
-    val out = work.resolve("out").toString
-    val query = df.writeStream
-      .format("parquet")
-      .option("path", out)
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .outputMode("append")
+  /** The staged input `in` as a file stream of `schema` on a child
+    * session, one file per trigger (the source takes files oldest-first,
+    * which is the staging order). */
+  private def stagedStream(s: SparkSession, schema: StructType, in: String): DataFrame =
+    streamSession(s).readStream.schema(schema)
+      .option("maxFilesPerTrigger", "1").parquet(in)
+
+  /** Start `w` with its checkpoint under `work` and the available-now
+    * trigger, wait for it to drain, record its plan, and drop the staged
+    * input (the read-back reads only outputs, and the copies would
+    * otherwise accumulate across bench passes). The read-back is lazy, so
+    * `work` itself (outputs + checkpoint) is deleted at JVM exit instead,
+    * bounding the scratch footprint to one process lifetime. */
+  private def finish(w: DataStreamWriter[Row], work: Path): Unit = {
+    val query = w.option("checkpointLocation", work.resolve("ckpt").toString)
       .trigger(Trigger.AvailableNow())
       .start()
     query.awaitTermination()
     graft.PlanProbe.recordStreaming(query)
-    dropStagedInput(work)
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(work.toFile)
+    FileUtils.deleteQuietly(work.resolve("in").toFile)
+    FileUtils.forceDeleteOnExit(work.toFile)
+  }
+
+  /** Run the staged input `in` (of `schema`) through `step` once per
+    * trigger: `step(session, batch, id)` gets the trigger's session, its
+    * micro-batch and its replay-stable batch id. Returns once every staged
+    * file has been consumed. */
+  private[streaming] def foldStream(s: SparkSession, work: Path,
+      schema: StructType, in: String)(
+      step: (SparkSession, DataFrame, Long) => Unit): Unit =
+    finish(stagedStream(s, schema, in).writeStream
+      .foreachBatch((batch: DataFrame, id: Long) => step(batch.sparkSession, batch, id)),
+      work)
+
+  /** Run `df` through the shared parquet sink (append) under `work` and
+    * return the output path for read-back. */
+  private def runToParquet(df: DataFrame, work: Path): String = {
+    val out = work.resolve("out").toString
+    finish(df.writeStream.format("parquet").option("path", out)
+      .outputMode("append"), work)
     out
   }
 
   /** Stage `df` as two deterministic micro-batches under `<work>/in`:
-    * even `idCol` values, then odd, one parquet file each with strictly
-    * increasing modification times (the file source processes
-    * oldest-first under `maxFilesPerTrigger=1`). Returns the input dir. */
-  private def stageParityBatches(work: java.nio.file.Path,
-      df: org.apache.spark.sql.DataFrame, idCol: String): String =
+    * even `idCol` values, then odd (see [[stageOrderedBatches]]). */
+  private def stageParityBatches(work: Path, df: DataFrame, idCol: String): String =
     stageOrderedBatches(work,
       Seq(0, 1).map(p => df.filter(col(idCol) % 2 === p)))
 
   /** Stage arbitrary DataFrames as deterministic micro-batches under
     * `<work>/in`, one parquet file each, arrival order = sequence order
-    * (strictly increasing mtimes; the file source processes oldest-first
-    * under `maxFilesPerTrigger=1`). Returns the input dir. */
-  private def stageOrderedBatches(work: java.nio.file.Path,
-      dfs: Seq[org.apache.spark.sql.DataFrame]): String = {
+    * (strictly increasing mtimes; the file source takes files
+    * oldest-first, one per trigger). Returns the input dir. */
+  private[streaming] def stageOrderedBatches(work: Path, dfs: Seq[DataFrame]): String = {
     val in = work.resolve("in")
     Files.createDirectories(in)
     dfs.zipWithIndex.foreach { case (df, i) =>
@@ -157,7 +198,7 @@ object StreamGate {
       df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = {
         val listing = Files.list(tmp)
-        try listing.toArray.map(_.asInstanceOf[java.nio.file.Path])
+        try listing.toArray.map(_.asInstanceOf[Path])
           .filter(_.toString.endsWith(".parquet")).head
         finally listing.close()
       }
@@ -165,29 +206,145 @@ object StreamGate {
       Files.move(part, dest)
       require(dest.toFile.setLastModified(System.currentTimeMillis()
         - dfs.size * 60000L + i * 60000L))
-      org.apache.commons.io.FileUtils.deleteQuietly(tmp.toFile)
+      FileUtils.deleteQuietly(tmp.toFile)
     }
     in.toString
   }
 
-  val q92StreamTumbling: Q = Q(
+  /** Stage an edge set (`u`, `v`, ...) as three micro-batches by
+    * (u+v) mod 3. The set is persisted across the three writes, so its
+    * plan (a lineitem self-join + support aggregate) runs once, not once
+    * per batch. */
+  private def stageEdgeThirds(work: Path, edges: DataFrame): String = {
+    edges.persist(MEMORY_AND_DISK)
+    val in = stageOrderedBatches(work,
+      Seq(0, 1, 2).map(r => edges.filter((col("u") + col("v")) % 3 === r)))
+    edges.unpersist()
+    in
+  }
+
+  /** The events table staged as three chronological micro-batches (cuts
+    * at 2024-01-11 and 2024-01-21) and streamed on the RocksDB state
+    * store, which transformWithState requires (the default HDFS-backed
+    * provider has no column families); set on the ISOLATED child
+    * session. Cross-batch transitions then genuinely traverse the state. */
+  private def eventThirdsStream(s: SparkSession, dir: String, work: Path): DataFrame = {
+    val ev = Tables(s, dir, "events")
+    val cut1 = lit("2024-01-11").cast("timestamp")
+    val cut2 = lit("2024-01-21").cast("timestamp")
+    val in = stageOrderedBatches(work, Seq(
+      ev.filter(col("ts") < cut1),
+      ev.filter(col("ts") >= cut1 && col("ts") < cut2),
+      ev.filter(col("ts") >= cut2)))
+    val stream = stagedStream(s, ev.schema, in)
+    stream.sparkSession.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    stream
+  }
+
+  /** Union-read the committed `batch=K` subdirs of an accumulator store
+    * with K strictly below `id` — the replay-total read: a crashed
+    * trigger's own dir (k == id, possibly `_temporary`-only) is never
+    * enumerated, and no whole-directory schema inference runs (inference
+    * over a half-born store throws and would wedge the replay
+    * permanently — the q296 review lesson). Batches below `id` are
+    * committed by the stream's own ordering: the source never advances
+    * past an uncommitted trigger. */
+  private[graft] def committedBatchesBefore(
+      sb: SparkSession, store: String, id: Long, empty: DataFrame): DataFrame = {
+    val p = new HPath(store)
+    val fs = p.getFileSystem(sb.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) empty
+    else {
+      // Stream ordering already guarantees k < id is committed; the
+      // data-file check additionally makes the read total against
+      // out-of-contract states (a `_temporary`-only dir from a manual
+      // copy or an interrupted cleanup reads as absent, not as a throw).
+      val done = fs.listStatus(p).toSeq
+        .filter(_.getPath.getName.startsWith("batch="))
+        .filter(st => fs.listStatus(st.getPath).exists { f =>
+          val n = f.getPath.getName
+          !n.startsWith("_") && !n.startsWith(".")
+        })
+        .map(_.getPath.getName.stripPrefix("batch=").toLong)
+        .filter(_ < id).sorted
+      if (done.isEmpty) empty
+      else done.map(k => sb.read.parquet(s"$store/batch=$k"))
+        .reduce(_.unionByName(_))
+    }
+  }
+
+  /** The newest stored generation strictly before `id` (replay-safe base
+    * resolution: a redelivered batch never reads its own output). Like
+    * [[committedBatchesBefore]], only dirs containing committed data
+    * files count — a `_temporary`-only dir from an interrupted cleanup
+    * must neither throw nor shadow the older complete generation. */
+  private[graft] def latestGenBefore(s: SparkSession,
+      store: String, id: Long): Option[DataFrame] = {
+    val p = new HPath(store)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) None
+    else fs.listStatus(p).toSeq
+      .filter(_.getPath.getName.startsWith("gen="))
+      .filter(st => fs.listStatus(st.getPath).exists { f =>
+        val n = f.getPath.getName
+        !n.startsWith("_") && !n.startsWith(".")
+      })
+      .map(_.getPath.getName.stripPrefix("gen=").toLong)
+      .filter(_ < id)
+      .sorted.lastOption
+      .map(g => s.read.parquet(s"$store/gen=$g"))
+  }
+
+  /** An empty frame with the columns of the DDL `schema`, built on
+    * `range(0)`: a LONG column is the range's `id`, a STRING column is
+    * `""`, a BOOLEAN column is `id <> id`, a DOUBLE column is `id` cast. */
+  private def emptyFrame(s: SparkSession, schema: String): DataFrame =
+    s.range(0).select(StructType.fromDDL(schema).fields.toSeq.map { f =>
+      (f.dataType match {
+        case LongType => col("id")
+        case StringType => lit("")
+        case BooleanType => col("id") =!= col("id")
+        case DoubleType => col("id").cast(DoubleType)
+      }).as(f.name)
+    }: _*)
+
+  /** The newest generation of `store` before `id` ([[latestGenBefore]]),
+    * or an empty frame of `schema` ([[emptyFrame]]) while it has none. */
+  private def genBefore(s: SparkSession, store: String, id: Long,
+      schema: String): DataFrame =
+    latestGenBefore(s, store, id).getOrElse(emptyFrame(s, schema))
+
+  /** The final generation of `store`; a run that published none failed. */
+  private def lastGen(s: SparkSession, store: String): DataFrame =
+    latestGenBefore(s, store, Long.MaxValue)
+      .getOrElse(sys.error(s"no generation was published under $store"))
+
+  /** q92 runs the tumbling event-window aggregation through an ACTUAL
+    * `writeStream` (file source → watermark → windowed agg → parquet file
+    * sink) and gates the files the sink wrote against the same DuckDB SQL
+    * as the batch q21 — turning the batch-parity theorem the streaming
+    * specs prove into a driver-checked CORRECTNESS row.
+    *
+    * Append mode only emits a window once the watermark passes its end, so
+    * the input is staged with one SENTINEL event appended 80 minutes after
+    * the real maximum: the final watermark (max+80m−1h = max+20m) closes
+    * every real window (each ends ≤ max+10m) while the sentinel's own
+    * window stays open and is never emitted. The sentinel is additionally
+    * filtered on read-back, so the checked result is exactly the batch q21
+    * surface.
+    *
+    * At 100 TB the same topology runs unbounded: the file sink's per-window
+    * append IS the incremental publish, and state stays bounded by the
+    * 1-hour watermark (windows close and evict as event time advances). */
+  val q92StreamTumbling: Q = gate(
     "q92_stream_tumbling",
     s"""SELECT CAST(floor(epoch(ts) / 600) * 600 AS BIGINT) AS win_start,
        |       event_type,
        |       count(*) AS n,
        |       ${Q.oSum6("value")} AS sum_value
-       |FROM events GROUP BY 1, 2 ORDER BY win_start, event_type""".stripMargin) { (s, dir) =>
-    val work = Files.createTempDirectory("graft-q92-")
-    val srcRoot = stageEvents(dir, work)
-    val in = Paths.get(srcRoot, "events.parquet")
-
-    // Sentinel 80 min past the real max ts (written in the staged
-    // files' stored layout).
-    val maxTsMicros = Tables(s, dir, "events")
-      .agg(max(unix_micros(col("ts")))).collect()(0).getLong(0)
-    appendSentinels(s, in,
-      Seq((-1L, maxTsMicros + 80L * 60 * 1000000, -1L, Sentinel, 0.0, "")))
-
+       |FROM events GROUP BY 1, 2 ORDER BY win_start, event_type""".stripMargin) { (s, dir, work) =>
+    val srcRoot = stageWithSentinels(s, dir, work, 80L * 60 * 1000000)
     val agg = EventStream.events(streamSession(s), srcRoot)
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "10 minutes"), col("event_type"))
@@ -211,7 +368,7 @@ object StreamGate {
     * discipline re-derived for the longer window. State is bounded by
     * size/slide × the watermark horizon per key; at 100 TB the overlap
     * factor (2×) is the knob traded against trend smoothness. */
-  val q257StreamSliding: Q = Q(
+  val q257StreamSliding: Q = gate(
     "q257_stream_sliding",
     s"""WITH t AS (SELECT event_type, value,
        |                  CAST(floor(epoch(ts) / 600) * 600 AS BIGINT) AS w0
@@ -220,14 +377,8 @@ object StreamGate {
        |      FROM t)
        |SELECT win_start, event_type, count(*) AS n,
        |       ${Q.oSum6("value")} AS sum_value
-       |FROM x GROUP BY 1, 2 ORDER BY win_start, event_type""".stripMargin) { (s, dir) =>
-    val work = Files.createTempDirectory("graft-q257-")
-    val srcRoot = stageEvents(dir, work)
-    val in = Paths.get(srcRoot, "events.parquet")
-    val maxTsMicros = Tables(s, dir, "events")
-      .agg(max(unix_micros(col("ts")))).collect()(0).getLong(0)
-    appendSentinels(s, in,
-      Seq((-1L, maxTsMicros + 100L * 60 * 1000000, -1L, Sentinel, 0.0, "")))
+       |FROM x GROUP BY 1, 2 ORDER BY win_start, event_type""".stripMargin) { (s, dir, work) =>
+    val srcRoot = stageWithSentinels(s, dir, work, 100L * 60 * 1000000)
     val agg = EventStream.events(streamSession(s), srcRoot)
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "20 minutes", "10 minutes"), col("event_type"))
@@ -249,7 +400,7 @@ object StreamGate {
     * needed and the sink's files equal the batch θ-join the oracle runs.
     * At 100 TB the same topology holds: both sides' state evicts once the
     * watermark passes click_ts + 30 min. */
-  val q94StreamAttribution: Q = Q(
+  val q94StreamAttribution: Q = gate(
     "q94_stream_attribution",
     """SELECT c.user_id, c.event_id AS click_id, p.event_id AS buy_id,
       |       CAST(floor(epoch(c.ts)) AS BIGINT) AS click_s,
@@ -259,8 +410,7 @@ object StreamGate {
       |  ON c.user_id = p.user_id
       | AND c.event_type = 'click' AND p.event_type = 'purchase'
       | AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 30 MINUTE
-      |ORDER BY c.user_id, click_id, buy_id""".stripMargin) { (s, dir) =>
-    val work = Files.createTempDirectory("graft-q94-")
+      |ORDER BY c.user_id, click_id, buy_id""".stripMargin) { (s, dir, work) =>
     val joined = EventStream.attributionJoin(
       EventStream.events(streamSession(s), stageEvents(dir, work)))
     s.read.parquet(runToParquet(joined, work))
@@ -274,7 +424,7 @@ object StreamGate {
     * q92 closes every real session: one far-future event whose own
     * session stays open and unemitted. Oracle = the lag/running-sum
     * session derivation (the q22 equivalence), at per-session grain. */
-  val q95StreamSessions: Q = Q(
+  val q95StreamSessions: Q = gate(
     "q95_stream_sessions",
     """WITH marks AS (
       |  SELECT user_id, ts,
@@ -289,17 +439,10 @@ object StreamGate {
       |SELECT user_id, CAST(floor(epoch(min(ts))) AS BIGINT) AS sess_start,
       |       count(*) AS n_events
       |FROM sess GROUP BY user_id, sess_id
-      |ORDER BY user_id, sess_start""".stripMargin) { (s, dir) =>
-    val work = Files.createTempDirectory("graft-q95-")
-    val srcRoot = stageEvents(dir, work)
-    val in = Paths.get(srcRoot, "events.parquet")
-    val maxTsMicros = Tables(s, dir, "events")
-      .agg(max(unix_micros(col("ts")))).collect()(0).getLong(0)
+      |ORDER BY user_id, sess_start""".stripMargin) { (s, dir, work) =>
     // 2 h past max ts: final watermark = max + 1 h, past every real
     // session's end (≤ max + 30 min). The sentinel's session stays open.
-    appendSentinels(s, in,
-      Seq((-1L, maxTsMicros + 2L * 60 * 60 * 1000000, -1L, Sentinel, 0.0, "")))
-
+    val srcRoot = stageWithSentinels(s, dir, work, 2L * 60 * 60 * 1000000)
     val sessions = EventStream.sessionCounts(
       EventStream.events(streamSession(s), srcRoot))
     s.read.parquet(runToParquet(sessions, work))
@@ -318,12 +461,11 @@ object StreamGate {
     * 100 TB/day state holds only the ids inside the 1-hour late-data
     * horizon — constant memory, which a batch distinct over an unbounded
     * log cannot offer. */
-  val q96StreamDedup: Q = Q(
+  val q96StreamDedup: Q = gate(
     "q96_stream_dedup",
     """SELECT event_id, CAST(floor(epoch(ts)) AS BIGINT) AS ts_s,
       |       user_id, event_type, value, props
-      |FROM events ORDER BY event_id""".stripMargin) { (s, dir) =>
-    val work = Files.createTempDirectory("graft-q96-")
+      |FROM events ORDER BY event_id""".stripMargin) { (s, dir, work) =>
     val srcRoot = stageEvents(dir, work)
     val in = Paths.get(srcRoot, "events.parquet")
     // Second full copy: every event is delivered (at least) twice. The
@@ -332,7 +474,7 @@ object StreamGate {
     // that surfaced the new files would copy dup-dup-* third copies).
     val files = {
       val listing = Files.list(in)
-      try listing.toArray.map(_.asInstanceOf[java.nio.file.Path]).toSeq
+      try listing.toArray.map(_.asInstanceOf[Path]).toSeq
       finally listing.close()
     }
     files.foreach { f =>
@@ -359,37 +501,22 @@ object StreamGate {
     * the day-N production topology (SCALE.md): at 100 TB the micro-batch
     * is a day's crawl, the index is the persisted archive, and per-trigger
     * cost is O(batch), never O(archive²). */
-  val q99StreamDedupIncremental: Q = Q(
+  val q99StreamDedupIncremental: Q = gate(
     "q99_stream_dedup_incremental",
     s"""WITH ${graft.ops.Dedup.duckLshPairCtes}
        |SELECT doc_a, doc_b, (doc_a % 2 = doc_b % 2) AS both_new
-       |FROM pairs ORDER BY doc_a, doc_b""".stripMargin) { (s, dir) =>
-    val work = Files.createTempDirectory("graft-q99-")
+       |FROM pairs ORDER BY doc_a, doc_b""".stripMargin) { (s, dir, work) =>
     val docs = Tables(s, dir, "documents")
     val in = stageParityBatches(work, docs, "doc_id")
     val idx = work.resolve("bandidx").toString
     val outPairs = work.resolve("out").toString
-    val ss = streamSession(s)
-    val query = ss.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(in.toString)
-      .writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-          // The foreachBatch id is replay-stable: a redelivered batch
-          // overwrites its own band subdir and pair output (idempotent).
-          val pairs = graft.ops.Dedup.incrementalDayRun(
-            batch.sparkSession, idx, batch.toDF(), id)
-          pairs.write.mode("overwrite").parquet(s"$outPairs/batch=$id")
-          pairs.unpersist()
-          ()
-      }
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    graft.PlanProbe.recordStreaming(query)
-    dropStagedInput(work)
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(work.toFile)
+    foldStream(s, work, docs.schema, in) { (sb, batch, id) =>
+      // The foreachBatch id is replay-stable: a redelivered batch
+      // overwrites its own band subdir and pair output (idempotent).
+      val pairs = graft.ops.Dedup.incrementalDayRun(sb, idx, batch, id)
+      pairs.write.mode("overwrite").parquet(s"$outPairs/batch=$id")
+      pairs.unpersist()
+    }
     s.read.parquet(outPairs)
       .select(col("doc_a"), col("doc_b"), col("both_new"))
       .orderBy(col("doc_a"), col("doc_b"))
@@ -404,33 +531,19 @@ object StreamGate {
     * assignment commutes with arrival order, so the stream-built index
     * answers identically to a full rebuild — whether the days arrived by
     * batch job (q100) or by stream (this gate). */
-  val q103StreamAnnIngest: Q = Q(
+  val q103StreamAnnIngest: Q = gate(
     "q103_stream_ann_ingest",
-    graft.ops.Similarity.q100AnnIncremental.oracle.get) { (s, dir) =>
-    val work = Files.createTempDirectory("graft-q103-")
+    graft.ops.Similarity.q100AnnIncremental.oracle.get) { (s, dir, work) =>
     // Two deterministic "days" (even vec_ids, then odd) — the same split
     // q100 builds by batch calls.
     val e = graft.ops.Similarity.embWithNorm(s, dir)
     val in = stageParityBatches(work, e, "vec_id")
     val idx = work.resolve("ivfidx").toString
-    val ss = streamSession(s)
-    val query = ss.readStream.schema(e.schema)
-      .option("maxFilesPerTrigger", "1").parquet(in.toString)
-      .writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-          // The foreachBatch id is replay-stable: a redelivered batch
-          // overwrites its own assign/batch=<id> dir (idempotent publish).
-          graft.ops.Similarity.ivfAppend(batch.sparkSession, idx, batch.toDF(), id)
-          ()
-      }
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    graft.PlanProbe.recordStreaming(query)
-    dropStagedInput(work)
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(work.toFile)
+    foldStream(s, work, e.schema, in) { (sb, batch, id) =>
+      // The foreachBatch id is replay-stable: a redelivered batch
+      // overwrites its own assign/batch=<id> dir (idempotent publish).
+      graft.ops.Similarity.ivfAppend(sb, idx, batch, id)
+    }
     graft.ops.Similarity.ivfQuery(s, idx, e, e.filter(col("vec_id") < 10))
       .orderBy(col("query_id"), col("rank"))
   }
@@ -455,40 +568,122 @@ object StreamGate {
     * generation — readers resolve the pointer, never an intermediate
     * state. This is the operational answer to "who calls ivfRetrain":
     * the ingest stream itself, on a measured breach, not a calendar. */
-  val q234StreamAnnMaintain: Q = Q(
+  val q234StreamAnnMaintain: Q = gate(
     "q234_stream_ann_maintain",
-    graft.ops.Similarity.q48AnnIvf.oracle.get) { (s, dir) =>
-    val work = Files.createTempDirectory("graft-q234-")
+    graft.ops.Similarity.q48AnnIvf.oracle.get) { (s, dir, work) =>
     val e = graft.ops.Similarity.embWithNorm(s, dir)
     val in = stageParityBatches(work, e, "vec_id")
     val idx = work.resolve("ivfidx").toString
-    val ss = streamSession(s)
-    val query = ss.readStream.schema(e.schema)
-      .option("maxFilesPerTrigger", "1").parquet(in.toString)
-      .writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-          val sb = batch.sparkSession
-          graft.ops.Similarity.ivfAppend(sb, idx, batch.toDF(), id)
-          val root = graft.ops.Similarity.ivfCurrentRoot(sb, idx)
-          val n = sb.read.parquet(s"$root/assign").count()
-          val n0 = sb.read.parquet(s"$root/trainmeta").first().getLong(0)
-          // 2·n0 − 1, not 2·n0: an integer-halved stream (odd corpus →
-          // first day one row larger) must still count as "doubled".
-          if (n >= 2L * n0 - 1L)
-            graft.ops.Similarity.ivfRetrain(sb, idx,
-              graft.ops.Similarity.embWithNorm(sb, dir), lloydIters = 0)
-          ()
-      }
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    graft.PlanProbe.recordStreaming(query)
-    dropStagedInput(work)
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(work.toFile)
+    foldStream(s, work, e.schema, in) { (sb, batch, id) =>
+      graft.ops.Similarity.ivfAppend(sb, idx, batch, id)
+      val root = graft.ops.Similarity.ivfCurrentRoot(sb, idx)
+      val n = sb.read.parquet(s"$root/assign").count()
+      val n0 = sb.read.parquet(s"$root/trainmeta").first().getLong(0)
+      // 2·n0 − 1, not 2·n0: an integer-halved stream (odd corpus →
+      // first day one row larger) must still count as "doubled".
+      if (n >= 2L * n0 - 1L)
+        graft.ops.Similarity.ivfRetrain(sb, idx,
+          graft.ops.Similarity.embWithNorm(sb, dir), lloydIters = 0)
+    }
     graft.ops.Similarity.ivfQuery(s, idx, e, e.filter(col("vec_id") < 10))
       .orderBy(col("query_id"), col("rank"))
+  }
+
+  /** In-loop band-index maintenance of q247/q259: a no-op while the
+    * store fits the replay window (keepRecent = 2), one generation fold
+    * once it doesn't. The cap-cross precondition must be checked BEFORE a
+    * fold coarsens batch boundaries into `batch=-1` (a crossing between
+    * two folded batches is invisible afterwards) — and ONLY then: between
+    * folds the boundaries are intact, so the next pre-fold check (or the
+    * final one, [[checkCompacted]]) still sees every boundary since the
+    * last fold. Gating on pendingFold keeps the check O(folds × index),
+    * not O(triggers × index). */
+  private def compactInLoop(sb: SparkSession, idx: String): Unit = {
+    if (graft.ops.Dedup.pendingFold(sb, idx, keepRecent = 2))
+      graft.ops.Dedup.assertNoMidStreamCapCross(sb, idx)
+    graft.ops.Dedup.compactBandIndex(sb, idx, keepRecent = 2)
+  }
+
+  /** After a q247/q259 run: the final cap-cross check covers the
+    * boundaries created since the last in-loop fold (which checked
+    * everything before it), and the maintenance must actually have
+    * fired — a promoted `_bandgen-` pointer is the proof. */
+  private def checkCompacted(s: SparkSession, idx: String, q: String): Unit = {
+    graft.ops.Dedup.assertNoMidStreamCapCross(s, idx)
+    val p = new HPath(idx)
+    require(p.getFileSystem(s.sparkContext.hadoopConfiguration).listStatus(p)
+      .exists(_.getPath.getName.startsWith("_bandgen-")),
+      s"$q: in-loop compaction never promoted a generation")
+  }
+
+  /** The ids of the `batch=<id>` generations of the label store `lbl`. */
+  private def labelBatches(s: SparkSession, lbl: String): Array[Long] = {
+    val p = new HPath(lbl)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    if (fs.exists(p))
+      fs.listStatus(p).map(_.getPath.getName).filter(_.startsWith("batch="))
+        .map(_.stripPrefix("batch=").toLong)
+    else Array.empty[Long]
+  }
+
+  /** Label refresh of q244/q259. Prior labels = the highest generation
+    * BELOW this batch id (a replay must not read its own crashed
+    * attempt's output); they re-enter as their star forest — one
+    * (min, member) edge per labeled doc, q233's exact re-entry shape — and
+    * resolve with the batch's `pairs` into the cumulative labels,
+    * published as `batch=<id>`. */
+  private def refreshLabels(sb: SparkSession, lbl: String, pairs: DataFrame,
+      id: Long): Unit = {
+    val star = labelBatches(sb, lbl).filter(_ < id).maxOption match {
+      case Some(p) =>
+        sb.read.parquet(s"$lbl/batch=$p")
+          .filter(col("doc_id") =!= col("cluster_id"))
+          .select(col("cluster_id").as("doc_a"), col("doc_id").as("doc_b"))
+      case None => emptyFrame(sb, "doc_a LONG, doc_b LONG")
+    }
+    graft.ops.Fuzzy.resolveClusters(sb,
+        star.unionByName(pairs.select(col("doc_a"), col("doc_b"))))
+      .write.mode("overwrite").parquet(s"$lbl/batch=$id")
+  }
+
+  /** HLL vocabulary fold of q252/q259: the batch's per-language sketch
+    * unioned into the newest generation before `id`, published as
+    * `gen=<id>`. */
+  private def foldHll(sb: SparkSession, store: String, batch: DataFrame,
+      id: Long): Unit = {
+    // §2.5: the staged batch is one scan partition — shard before
+    // the per-token explode+hash so the sketch build parallelizes.
+    val own = Tables.shard(batch)
+      .select(col("lang"), explode_outer(split(col("text"), " ")).as("w"))
+      .groupBy(col("lang"))
+      .agg(expr("hll_sketch_agg(w, 12)").as("sk"))
+    val prev = latestGenBefore(sb, store, id)
+      .getOrElse(own.limit(0))
+      .select(col("lang"), col("sk").as("sk_prev"))
+    // Lossless union per language; a language seen on only one
+    // side carries its side's sketch through unchanged.
+    own.join(prev, Seq("lang"), "full_outer")
+      .select(col("lang"),
+        when(col("sk").isNotNull && col("sk_prev").isNotNull,
+          expr("hll_union(sk, sk_prev)"))
+          .otherwise(coalesce(col("sk"), col("sk_prev"))).as("sk"))
+      .coalesce(1)
+      .write.mode("overwrite").parquet(s"$store/gen=$id")
+  }
+
+  /** The exact per-language vocabulary of `docs` and whether the folded
+    * sketch in `store` estimated it within ±5%: (lang, n_vocab, hll_ok). */
+  private def hllVocab(s: SparkSession, store: String, docs: DataFrame): DataFrame = {
+    val folded = lastGen(s, store)
+      .select(col("lang"),
+        expr("hll_sketch_estimate(sk)").cast("double").as("est"))
+    docs.select(col("lang"), explode_outer(split(col("text"), " ")).as("w"))
+      .groupBy(col("lang"))
+      .agg(countDistinct(col("w")).as("n_vocab"))
+      .join(broadcast(folded), "lang")
+      .select(col("lang"), col("n_vocab"),
+        (col("est") >= col("n_vocab") * 0.95 &&
+          col("est") <= col("n_vocab") * 1.05).as("hll_ok"))
   }
 
   /** q247: band-index COMPACTION inside the streaming loop — the q234
@@ -510,61 +705,27 @@ object StreamGate {
     * measured condition (store past the replay window), not a calendar.
     * The final pointer is asserted — the gate fails if compaction
     * silently stopped firing. */
-  val q247StreamBandCompact: Q = Q(
+  val q247StreamBandCompact: Q = gate(
     "q247_stream_band_compact",
     s"""WITH ${graft.ops.Dedup.duckLshPairCtes}
        |SELECT doc_a, doc_b, (doc_a % 4 = doc_b % 4) AS both_new
-       |FROM pairs ORDER BY doc_a, doc_b""".stripMargin) { (s, dir) =>
-    val work = Files.createTempDirectory("graft-q247-")
+       |FROM pairs ORDER BY doc_a, doc_b""".stripMargin) { (s, dir, work) =>
     val docs = graft.Tables(s, dir, "documents")
     val in = stageOrderedBatches(work,
       Seq(0, 1, 2, 3).map(p => docs.filter(col("doc_id") % 4 === p)))
     val idx = work.resolve("bandidx").toString
     val outPairs = work.resolve("out").toString
-    val ss = streamSession(s)
-    val query = ss.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(in.toString)
-      .writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-          val sb = batch.sparkSession
-          // Direct-to-parquet day run: the pair join's one pass IS the
-          // publish (the checkpoint-then-rewrite pass this replaced was
-          // two passes over the pair table per trigger).
-          graft.ops.Dedup.incrementalDayRunTo(sb, idx, batch.toDF(), id,
-            s"$outPairs/batch=$id")
-          // The cap-cross precondition must be checked BEFORE a fold
-          // coarsens batch boundaries into `batch=-1` (a crossing
-          // between two folded batches is invisible afterwards) — and
-          // ONLY then: between folds the boundaries are intact, so the
-          // next pre-fold check (or the final one) still sees every
-          // boundary since the last fold. Gating on pendingFold keeps
-          // the check O(folds × index), not O(triggers × index).
-          if (graft.ops.Dedup.pendingFold(sb, idx, keepRecent = 2))
-            graft.ops.Dedup.assertNoMidStreamCapCross(sb, idx)
-          // Maintenance in the loop: no-op while the store fits the
-          // replay window, one generation fold once it doesn't.
-          graft.ops.Dedup.compactBandIndex(sb, idx, keepRecent = 2)
-          ()
-      }
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    graft.PlanProbe.recordStreaming(query)
-    dropStagedInput(work)
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(work.toFile)
-    // Final cap-cross check: covers the boundaries created since the
-    // last in-loop fold (which checked everything before it).
-    graft.ops.Dedup.assertNoMidStreamCapCross(s, idx)
-    // The maintenance must actually have fired: a promoted generation
-    // pointer is the proof (batches 2 and 3 each pushed the store past
-    // keepRecent=2).
-    val fs = new org.apache.hadoop.fs.Path(idx)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    require(fs.listStatus(new org.apache.hadoop.fs.Path(idx))
-      .exists(_.getPath.getName.startsWith("_bandgen-")),
-      "q247: in-loop compaction never promoted a generation")
+    foldStream(s, work, docs.schema, in) { (sb, batch, id) =>
+      // Direct-to-parquet day run: the pair join's one pass IS the
+      // publish (the checkpoint-then-rewrite pass this replaced was
+      // two passes over the pair table per trigger).
+      graft.ops.Dedup.incrementalDayRunTo(sb, idx, batch, id,
+        s"$outPairs/batch=$id")
+      compactInLoop(sb, idx)
+    }
+    // Batches 2 and 3 each push the store past keepRecent=2, so a
+    // generation must have been promoted.
+    checkCompacted(s, idx, "q247")
     s.read.parquet(outPairs)
       .select(col("doc_a"), col("doc_b"), col("both_new"))
       .orderBy(col("doc_a"), col("doc_b"))
@@ -597,10 +758,9 @@ object StreamGate {
     * degrading to shuffle if a purge wave ever isn't), the purge is
     * ∝ store size ONLY on command triggers, and ingest triggers pay one
     * anti-join more than q99. */
-  val q279StreamForget: Q = Q(
+  val q279StreamForget: Q = gate(
     "q279_stream_forget",
-    graft.ops.Dedup.q269ForgetDocs.oracle.get) { (s, dir) =>
-    val work = Files.createTempDirectory("graft-q279-")
+    graft.ops.Dedup.q269ForgetDocs.oracle.get) { (s, dir, work) =>
     val docs = Tables(s, dir, "documents")
     val forgetIds = docs.filter(col("doc_id") % 37 === 0)
     // Command rows ride the document schema: the payload is the doc_id.
@@ -613,42 +773,28 @@ object StreamGate {
       docs.filter(col("doc_id") % 2 === 1)))      // ingest day 1 (late arrivals)
     val idx = work.resolve("bandidx").toString
     val supp = work.resolve("suppress").toString
-    val ss = streamSession(s)
-    val query = ss.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(in.toString)
-      .writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-          val sb = batch.sparkSession
-          val fs = new org.apache.hadoop.fs.Path(supp)
-            .getFileSystem(sb.sparkContext.hadoopConfiguration)
-          val adds = batch.toDF().filter(col("lang") =!= "__forget__")
-          if (adds.take(1).nonEmpty) {
-            // Suppression first: a doc whose erasure already arrived must
-            // never re-enter the store. Unhinted anti-join (deletion-set
-            // discipline: broadcast when small, shuffle when not).
-            val clean =
-              if (fs.exists(new org.apache.hadoop.fs.Path(supp)))
-                adds.join(sb.read.parquet(supp).select(col("doc_id")),
-                  Seq("doc_id"), "left_anti")
-              else adds
-            graft.ops.Dedup.incrementalDayRun(sb, idx, clean, id).unpersist()
-          }
-          val forget = batch.toDF().filter(col("lang") === "__forget__")
-            .select(col("doc_id"))
-          if (forget.take(1).nonEmpty) {
-            forget.write.mode("overwrite").parquet(s"$supp/batch=$id")
-            graft.ops.Dedup.forgetDocs(sb, idx, forget)
-          }
-          ()
+    foldStream(s, work, docs.schema, in) { (sb, batch, id) =>
+      val fs = new HPath(supp)
+        .getFileSystem(sb.sparkContext.hadoopConfiguration)
+      val adds = batch.filter(col("lang") =!= "__forget__")
+      if (adds.take(1).nonEmpty) {
+        // Suppression first: a doc whose erasure already arrived must
+        // never re-enter the store. Unhinted anti-join (deletion-set
+        // discipline: broadcast when small, shuffle when not).
+        val clean =
+          if (fs.exists(new HPath(supp)))
+            adds.join(sb.read.parquet(supp).select(col("doc_id")),
+              Seq("doc_id"), "left_anti")
+          else adds
+        graft.ops.Dedup.incrementalDayRun(sb, idx, clean, id).unpersist()
       }
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    graft.PlanProbe.recordStreaming(query)
-    dropStagedInput(work)
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(work.toFile)
+      val forget = batch.filter(col("lang") === "__forget__")
+        .select(col("doc_id"))
+      if (forget.take(1).nonEmpty) {
+        forget.write.mode("overwrite").parquet(s"$supp/batch=$id")
+        graft.ops.Dedup.forgetDocs(sb, idx, forget)
+      }
+    }
     // Zero trace: neither a purged row nor a suppressed late arrival may
     // be in the live generation.
     val leftover = s.read.parquet(graft.ops.Dedup.bandIndexRoot(s, idx))
@@ -673,66 +819,51 @@ object StreamGate {
     * read. With the even/odd staging, batch 1's score against batch 0's
     * archive is EXACTLY the batch q98 computation — its oracle gates the
     * sink. */
-  val q108StreamDrift: Q = Q(
+  val q108StreamDrift: Q = gate(
     "q108_stream_drift",
-    graft.ops.Curation.q98QualityDrift.oracle.get) { (s, dir) =>
-    val work = Files.createTempDirectory("graft-q108-")
+    graft.ops.Curation.q98QualityDrift.oracle.get) { (s, dir, work) =>
     val docs = Tables(s, dir, "documents")
     val in = stageParityBatches(work, docs, "doc_id")
     val hist = work.resolve("hist").toString
     val outDir = work.resolve("out").toString
-    val ss = streamSession(s)
-    val query = ss.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(in)
-      .writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-          val sb = batch.sparkSession
-          val own = batch.toDF()
-            .groupBy(graft.ops.Curation.lengthBucket.as("bucket"))
-            .agg(count(lit(1)).as("n_new"))
-          val histPath = new org.apache.hadoop.fs.Path(hist)
-          val fs = histPath.getFileSystem(sb.sparkContext.hadoopConfiguration)
-          val histDirs =
-            if (fs.exists(histPath))
-              fs.listStatus(histPath).filter(_.isDirectory)
-                .map(_.getPath.getName)
-                .filter(n => n.startsWith("batch=") && n != s"batch=$id")
-                .toSeq
-            else Seq.empty[String]
-          if (fs.exists(histPath)) {
-            // Archive = every batch but this one (replay-safe, like the
-            // q99 band index): sum the stored per-batch histograms. An
-            // explicit path list, not filter(batch =!= id) — the literal
-            // id would force a fresh whole-stage codegen compile per
-            // trigger (see Dedup.incrementalDayRun). A replayed batch
-            // whose subdir is the ONLY one present still computes (and
-            // overwrites) its psi row against an empty archive, exactly
-            // as the filtered read did.
-            val arch = (if (histDirs.nonEmpty)
-              sb.read.option("basePath", hist)
-                .parquet(histDirs.map(d => s"$hist/$d"): _*)
-                .select(col("bucket"), col("n"))
-            else own.limit(0).select(col("bucket"), col("n_new").as("n")))
-              .groupBy(col("bucket")).agg(sum(col("n")).as("n_arch"))
-            val c = arch.join(own, Seq("bucket"), "full_outer")
-              .select(col("bucket"),
-                coalesce(col("n_arch"), lit(0L)).as("n_arch"),
-                coalesce(col("n_new"), lit(0L)).as("n_new"))
-            graft.ops.Curation.psiOf(c)
-              .write.mode("overwrite").parquet(s"$outDir/batch=$id")
-          }
-          own.select(col("bucket"), col("n_new").as("n"))
-            .write.mode("overwrite").parquet(s"$hist/batch=$id")
-          ()
+    foldStream(s, work, docs.schema, in) { (sb, batch, id) =>
+      val own = batch
+        .groupBy(graft.ops.Curation.lengthBucket.as("bucket"))
+        .agg(count(lit(1)).as("n_new"))
+      val histPath = new HPath(hist)
+      val fs = histPath.getFileSystem(sb.sparkContext.hadoopConfiguration)
+      val histDirs =
+        if (fs.exists(histPath))
+          fs.listStatus(histPath).filter(_.isDirectory)
+            .map(_.getPath.getName)
+            .filter(n => n.startsWith("batch=") && n != s"batch=$id")
+            .toSeq
+        else Seq.empty[String]
+      if (fs.exists(histPath)) {
+        // Archive = every batch but this one (replay-safe, like the
+        // q99 band index): sum the stored per-batch histograms. An
+        // explicit path list, not filter(batch =!= id) — the literal
+        // id would force a fresh whole-stage codegen compile per
+        // trigger (see Dedup.incrementalDayRun). A replayed batch
+        // whose subdir is the ONLY one present still computes (and
+        // overwrites) its psi row against an empty archive, exactly
+        // as the filtered read did.
+        val arch = (if (histDirs.nonEmpty)
+          sb.read.option("basePath", hist)
+            .parquet(histDirs.map(d => s"$hist/$d"): _*)
+            .select(col("bucket"), col("n"))
+        else own.limit(0).select(col("bucket"), col("n_new").as("n")))
+          .groupBy(col("bucket")).agg(sum(col("n")).as("n_arch"))
+        val c = arch.join(own, Seq("bucket"), "full_outer")
+          .select(col("bucket"),
+            coalesce(col("n_arch"), lit(0L)).as("n_arch"),
+            coalesce(col("n_new"), lit(0L)).as("n_new"))
+        graft.ops.Curation.psiOf(c)
+          .write.mode("overwrite").parquet(s"$outDir/batch=$id")
       }
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    graft.PlanProbe.recordStreaming(query)
-    dropStagedInput(work)
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(work.toFile)
+      own.select(col("bucket"), col("n_new").as("n"))
+        .write.mode("overwrite").parquet(s"$hist/batch=$id")
+    }
     s.read.parquet(outDir)
       .select(col("bucket"), col("n_arch"), col("n_new"), col("psi_contrib"))
       .orderBy(col("bucket"))
@@ -749,33 +880,18 @@ object StreamGate {
     * theorem q113 proves once, checked here under micro-batch delivery.
     * Per-trigger cost is O(batch + current rows); the closed history
     * rides along in the generation file but is never re-windowed. */
-  val q114StreamScd2: Q = Q(
+  val q114StreamScd2: Q = gate(
     "q114_stream_scd2",
-    graft.ops.Events.q107Scd2History.oracle.get) { (s, dir) =>
-    val work = Files.createTempDirectory("graft-q114-")
+    graft.ops.Events.q107Scd2History.oracle.get) { (s, dir, work) =>
     val ev = Tables(s, dir, "events")
     val cut = lit("2024-01-08").cast("timestamp")
     val in = stageOrderedBatches(work,
       Seq(ev.filter(col("ts") < cut), ev.filter(col("ts") >= cut)))
     val store = work.resolve("scd2").toString
-    val ss = streamSession(s)
-    val query = ss.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1").parquet(in)
-      .writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-          scd2Publish(store, batch.toDF(), id)
-      }
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    graft.PlanProbe.recordStreaming(query)
-    dropStagedInput(work)
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(work.toFile)
-    val last = latestGenBefore(s, store, Long.MaxValue)
-      .getOrElse(sys.error("q114: no SCD2 generation was published"))
-    last.orderBy(col("user_id"), col("version"))
+    foldStream(s, work, ev.schema, in) { (_, batch, id) =>
+      scd2Publish(store, batch, id)
+    }
+    lastGen(s, store).orderBy(col("user_id"), col("version"))
   }
 
   /** q116: the LEFT-OUTER stream-stream join gated end-to-end — every
@@ -791,7 +907,7 @@ object StreamGate {
     * never join) and are filtered on read-back. At 100 TB this is the
     * funnel-outcome topology: state is watermark-bounded on both sides,
     * and the outer emission IS the incremental "no conversion" feed. */
-  val q116StreamClickOutcomes: Q = Q(
+  val q116StreamClickOutcomes: Q = gate(
     "q116_stream_click_outcomes",
     """SELECT c.user_id, c.event_id AS click_id, p.event_id AS buy_id,
       |       CAST(floor(epoch(c.ts)) AS BIGINT) AS click_s,
@@ -802,19 +918,12 @@ object StreamGate {
       | AND p.event_type = 'purchase'
       | AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 30 MINUTE
       |WHERE c.event_type = 'click'
-      |ORDER BY c.user_id, click_id, buy_id NULLS FIRST""".stripMargin) { (s, dir) =>
-    val work = Files.createTempDirectory("graft-q116-")
-    val srcRoot = stageEvents(dir, work)
-    val in = Paths.get(srcRoot, "events.parquet")
-    val maxTsMicros = Tables(s, dir, "events")
-      .agg(max(unix_micros(col("ts")))).collect()(0).getLong(0)
+      |ORDER BY c.user_id, click_id, buy_id NULLS FIRST""".stripMargin) { (s, dir, work) =>
     // 3 h past max: final watermark = max + 2 h > every real click's
     // eviction deadline (≤ max + 30 min); the sentinels' own state never
     // evicts and never emits.
-    val sentinelMicros = maxTsMicros + 3L * 60 * 60 * 1000000
-    appendSentinels(s, in, Seq(
-      (-1L, sentinelMicros, -1L, "click", 0.0, ""),
-      (-2L, sentinelMicros, -2L, "purchase", 0.0, "")))
+    val srcRoot = stageWithSentinels(s, dir, work, 3L * 60 * 60 * 1000000,
+      Seq((-1L, -1L, "click"), (-2L, -2L, "purchase")))
     val joined = EventStream.attributionJoin(
       EventStream.events(streamSession(s), srcRoot), "left_outer")
     s.read.parquet(runToParquet(joined, work))
@@ -832,7 +941,7 @@ object StreamGate {
     * state, bounded by the watermark. The watermark node sits BEFORE the
     * join, so the sentinel advances event time even though the inner join
     * drops its unmatched (negative) user_id. */
-  val q117StreamEnrich: Q = Q(
+  val q117StreamEnrich: Q = gate(
     "q117_stream_enrich",
     s"""SELECT CAST(floor(epoch(e.ts) / 3600) * 3600 AS BIGINT) AS win_start,
        |       n.n_name AS nation, count(*) AS n,
@@ -840,16 +949,10 @@ object StreamGate {
        |FROM events e
        |JOIN customer c ON e.user_id = c.c_custkey
        |JOIN nation n ON c.c_nationkey = n.n_nationkey
-       |GROUP BY 1, 2 ORDER BY win_start, nation""".stripMargin) { (s, dir) =>
-    val work = Files.createTempDirectory("graft-q117-")
-    val srcRoot = stageEvents(dir, work)
-    val in = Paths.get(srcRoot, "events.parquet")
-    val maxTsMicros = Tables(s, dir, "events")
-      .agg(max(unix_micros(col("ts")))).collect()(0).getLong(0)
+       |GROUP BY 1, 2 ORDER BY win_start, nation""".stripMargin) { (s, dir, work) =>
     // 3 h past max: final watermark = max + 2 h, past every 1-hour
     // window's end (≤ max + 1 h); the sentinel's own window stays open.
-    appendSentinels(s, in,
-      Seq((-1L, maxTsMicros + 3L * 60 * 60 * 1000000, -1L, Sentinel, 0.0, "")))
+    val srcRoot = stageWithSentinels(s, dir, work, 3L * 60 * 60 * 1000000)
     val ss = streamSession(s)
     val dim = broadcast(Tables(ss, dir, "customer")
       .join(Tables(ss, dir, "nation"),
@@ -866,17 +969,12 @@ object StreamGate {
       .orderBy(col("win_start"), col("nation"))
   }
 
-  /** One q114 trigger: SCD2-build `batch` alone, stitch it onto the
-    * newest generation published BEFORE `id`, and overwrite `gen=<id>`.
-    * Deterministic in (store-state-before-id, batch, id), so at-least-once
-    * redelivery of a batch rewrites its generation with identical rows. */
   /** q126's per-trigger counter merge: batch (token, df, tf) partials are
     * summed into the newest generation strictly before `id` and published
     * as `gen=<id>` (replay overwrites its own generation from the same
     * base — idempotent under at-least-once delivery). The additive df
     * merge is valid iff each document arrives in exactly one batch. */
-  private[graft] def vocabPublish(store: String,
-      batch: org.apache.spark.sql.DataFrame, id: Long): Unit = {
+  private[graft] def vocabPublish(store: String, batch: DataFrame, id: Long): Unit = {
     val cur = batch
       .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
       .groupBy(col("tok"))
@@ -889,13 +987,15 @@ object StreamGate {
     merged.write.mode("overwrite").parquet(s"$store/gen=$id")
   }
 
-  private[graft] def scd2Publish(store: String,
-      batch: org.apache.spark.sql.DataFrame, id: Long): Unit = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val b = graft.ops.Events.scd2Of(batch).persist(lvl)
+  /** One q114 trigger: SCD2-build `batch` alone, stitch it onto the
+    * newest generation published BEFORE `id`, and overwrite `gen=<id>`.
+    * Deterministic in (store-state-before-id, batch, id), so at-least-once
+    * redelivery of a batch rewrites its generation with identical rows. */
+  private[graft] def scd2Publish(store: String, batch: DataFrame, id: Long): Unit = {
+    val b = graft.ops.Events.scd2Of(batch).persist(MEMORY_AND_DISK)
     latestGenBefore(batch.sparkSession, store, id) match {
       case Some(h) =>
-        val hp = h.persist(lvl)
+        val hp = h.persist(MEMORY_AND_DISK)
         graft.ops.Events.scd2Merge(hp, b)
           .write.mode("overwrite").parquet(s"$store/gen=$id")
         hp.unpersist()
@@ -903,62 +1003,6 @@ object StreamGate {
         b.write.mode("overwrite").parquet(s"$store/gen=$id")
     }
     b.unpersist()
-    ()
-  }
-
-  /** Union-read the committed `batch=K` subdirs of an accumulator store
-    * with K strictly below `id` — the replay-total read: a crashed
-    * trigger's own dir (k == id, possibly `_temporary`-only) is never
-    * enumerated, and no whole-directory schema inference runs (inference
-    * over a half-born store throws and would wedge the replay
-    * permanently — the q296 review lesson). Batches below `id` are
-    * committed by the stream's own ordering: the source never advances
-    * past an uncommitted trigger. */
-  private[graft] def committedBatchesBefore(
-      sb: org.apache.spark.sql.SparkSession, store: String, id: Long,
-      empty: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(store)
-    val fs = p.getFileSystem(sb.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) empty
-    else {
-      // Stream ordering already guarantees k < id is committed; the
-      // data-file check additionally makes the read total against
-      // out-of-contract states (a `_temporary`-only dir from a manual
-      // copy or an interrupted cleanup reads as absent, not as a throw).
-      val done = fs.listStatus(p).toSeq
-        .filter(_.getPath.getName.startsWith("batch="))
-        .filter(st => fs.listStatus(st.getPath).exists { f =>
-          val n = f.getPath.getName
-          !n.startsWith("_") && !n.startsWith(".")
-        })
-        .map(_.getPath.getName.stripPrefix("batch=").toLong)
-        .filter(_ < id).sorted
-      if (done.isEmpty) empty
-      else done.map(k => sb.read.parquet(s"$store/batch=$k"))
-        .reduce(_.unionByName(_))
-    }
-  }
-
-  /** The newest stored generation strictly before `id` (replay-safe base
-    * resolution: a redelivered batch never reads its own output). Like
-    * [[committedBatchesBefore]], only dirs containing committed data
-    * files count — a `_temporary`-only dir from an interrupted cleanup
-    * must neither throw nor shadow the older complete generation. */
-  private[graft] def latestGenBefore(s: org.apache.spark.sql.SparkSession,
-      store: String, id: Long): Option[org.apache.spark.sql.DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(store)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else fs.listStatus(p).toSeq
-      .filter(_.getPath.getName.startsWith("gen="))
-      .filter(st => fs.listStatus(st.getPath).exists { f =>
-        val n = f.getPath.getName
-        !n.startsWith("_") && !n.startsWith(".")
-      })
-      .map(_.getPath.getName.stripPrefix("gen=").toLong)
-      .filter(_ < id)
-      .sorted.lastOption
-      .map(g => s.read.parquet(s"$store/gen=$g"))
   }
 
   /** q126: streaming top-k vocabulary maintenance — the design lesson this
@@ -975,65 +1019,35 @@ object StreamGate {
     * the final generation. At 100 TB the counter table is
     * token-partitioned and the merge is a co-partitioned sum; the top-k
     * read is TakeOrdered over it — still never a global sort. */
-  val q126StreamTopK: Q = Q(
+  val q126StreamTopK: Q = gate(
     "q126_stream_topk",
-    graft.ops.Training.q58VocabTopK.oracle.get) { (s, dir) =>
-    val work = Files.createTempDirectory("graft-q126-")
+    graft.ops.Training.q58VocabTopK.oracle.get) { (s, dir, work) =>
     val docs = Tables(s, dir, "documents")
     val in = stageParityBatches(work, docs, "doc_id")
     val store = work.resolve("vocab").toString
-    val ss = streamSession(s)
-    val query = ss.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(in)
-      .writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-          vocabPublish(store, batch.toDF(), id)
-      }
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    graft.PlanProbe.recordStreaming(query)
-    dropStagedInput(work)
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(work.toFile)
-    latestGenBefore(s, store, Long.MaxValue)
-      .getOrElse(sys.error("q126: no vocabulary generation was published"))
-      .orderBy(col("df").desc, col("tok"))
+    foldStream(s, work, docs.schema, in) { (_, batch, id) =>
+      vocabPublish(store, batch, id)
+    }
+    lastGen(s, store).orderBy(col("df").desc, col("tok"))
       .limit(20)
   }
 
   /** q158: the Markov transition feed (q155) run as an ACTUAL
     * transformWithState stream — per-user last-event ValueState completes
     * each (prev → next) edge in the trigger that sees `next`, across three
-    * time-split micro-batches (`maxFilesPerTrigger=1`, the q114 staging),
+    * time-split micro-batches (one file per trigger, the q114 staging),
     * so cross-batch transitions genuinely traverse the RocksDB-backed
     * state. The sink's edge rows roll up to exactly the batch transition
     * matrix — q155's DuckDB oracle gates the sink. At 100 TB/day the
     * state is one tiny row per user (TTL-evictable), versus a batch lag
     * window that re-sorts the full history every run. */
-  val q158StreamMarkov: Q = Q(
+  val q158StreamMarkov: Q = gate(
     "q158_stream_markov",
-    graft.ops.Events.q155MarkovTransitions.oracle.get) { (s, dir) =>
-    val work = Files.createTempDirectory("graft-q158-")
-    val ev = Tables(s, dir, "events")
-    val cut1 = lit("2024-01-11").cast("timestamp")
-    val cut2 = lit("2024-01-21").cast("timestamp")
-    val in = stageOrderedBatches(work, Seq(
-      ev.filter(col("ts") < cut1),
-      ev.filter(col("ts") >= cut1 && col("ts") < cut2),
-      ev.filter(col("ts") >= cut2)))
-    val ss = streamSession(s)
-    // transformWithState requires the RocksDB store (the default HDFS-backed
-    // provider has no column families); set on the ISOLATED child session.
-    ss.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    import ss.implicits._
-    val stream = ss.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1").parquet(in)
+    graft.ops.Events.q155MarkovTransitions.oracle.get) { (s, dir, work) =>
+    val stream = eventThirdsStream(s, dir, work)
       .select(col("user_id"), unix_micros(col("ts")).as("micros"),
         col("event_id"), col("event_type"))
-      .as[TransitionStream.Ev]
+      .as(Encoders.product[TransitionStream.Ev])
     val edges = TransitionStream.transitions(stream)
     s.read.parquet(runToParquet(edges.toDF(), work))
       .groupBy(col("from_type"), col("to_type"))
@@ -1047,27 +1061,14 @@ object StreamGate {
     * cell, which must equal the batch groupBy count. Completes the
     * transformWithState state-shape trio under the driver oracle
     * (ValueState: q158; timers: TimerSessions specs; MapState: here). */
-  val q183StreamCrosstab: Q = Q(
+  val q183StreamCrosstab: Q = gate(
     "q183_stream_crosstab",
     """SELECT user_id, event_type, count(*) AS n
       |FROM events GROUP BY 1, 2
-      |ORDER BY user_id, event_type""".stripMargin) { (s, dir) =>
-    val work = Files.createTempDirectory("graft-q183-")
-    val ev = Tables(s, dir, "events")
-    val cut1 = lit("2024-01-11").cast("timestamp")
-    val cut2 = lit("2024-01-21").cast("timestamp")
-    val in = stageOrderedBatches(work, Seq(
-      ev.filter(col("ts") < cut1),
-      ev.filter(col("ts") >= cut1 && col("ts") < cut2),
-      ev.filter(col("ts") >= cut2)))
-    val ss = streamSession(s)
-    ss.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    import ss.implicits._
-    val stream = ss.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1").parquet(in)
+      |ORDER BY user_id, event_type""".stripMargin) { (s, dir, work) =>
+    val stream = eventThirdsStream(s, dir, work)
       .select(col("user_id"), col("event_type"))
-      .as[CrosstabStream.Ev]
+      .as(Encoders.product[CrosstabStream.Ev])
     val cells = CrosstabStream.crosstab(stream)
     s.read.parquet(runToParquet(cells.toDF(), work))
       .groupBy(col("user_id"), col("event_type"))
@@ -1080,7 +1081,7 @@ object StreamGate {
     * the oracle recomputes the same buffer as a rank window over the full
     * history. Cross-batch correctness is the point: a user's buffer must
     * stitch events from different triggers in (ts, event_id) order. */
-  val q184StreamRecent: Q = Q(
+  val q184StreamRecent: Q = gate(
     "q184_stream_recent",
     """WITH r AS (
       |  SELECT user_id, event_id,
@@ -1091,24 +1092,11 @@ object StreamGate {
       |SELECT user_id, CAST(max(n) AS BIGINT) AS n_seen,
       |       string_agg(CAST(event_id AS VARCHAR), ',' ORDER BY rn DESC) AS last5
       |FROM r WHERE rn <= 5
-      |GROUP BY user_id ORDER BY user_id""".stripMargin) { (s, dir) =>
-    val work = Files.createTempDirectory("graft-q184-")
-    val ev = Tables(s, dir, "events")
-    val cut1 = lit("2024-01-11").cast("timestamp")
-    val cut2 = lit("2024-01-21").cast("timestamp")
-    val in = stageOrderedBatches(work, Seq(
-      ev.filter(col("ts") < cut1),
-      ev.filter(col("ts") >= cut1 && col("ts") < cut2),
-      ev.filter(col("ts") >= cut2)))
-    val ss = streamSession(s)
-    ss.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    import ss.implicits._
-    val stream = ss.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1").parquet(in)
+      |GROUP BY user_id ORDER BY user_id""".stripMargin) { (s, dir, work) =>
+    val stream = eventThirdsStream(s, dir, work)
       .select(col("user_id"), unix_micros(col("ts")).as("micros"),
         col("event_id"))
-      .as[RecentBuffer.Ev]
+      .as(Encoders.product[RecentBuffer.Ev])
     val out = RecentBuffer.recent(stream)
     s.read.parquet(runToParquet(out.toDF(), work))
       .groupBy(col("user_id"))
@@ -1126,8 +1114,7 @@ object StreamGate {
     * ≤ N_total/(k+1) (Agarwal et al., PODS'12). All inputs are ≤ 2k tiny
     * counter rows; the scalar cut is a 1-row aggregate (the StreamGate
     * driver-scalar discipline — bounded by construction). */
-  private[graft] def foldSketch(prev: org.apache.spark.sql.DataFrame,
-      own: org.apache.spark.sql.DataFrame, k: Int): org.apache.spark.sql.DataFrame = {
+  private[graft] def foldSketch(prev: DataFrame, own: DataFrame, k: Int): DataFrame = {
     // ONE materialization feeds all three consumers (count, cut, result):
     // `own` is a freq_sketch aggregate whose retained tail is
     // merge-order-dependent, so re-executing it per action could compute
@@ -1163,41 +1150,24 @@ object StreamGate {
     * (merge rule preserves the bound), so the exact recount + threshold
     * (share > 1/k > 1/(k+1)) over the full corpus must hash-match the
     * batch q235 oracle — which is exactly what the driver checks. */
-  val q238StreamHeavyNgrams: Q = Q(
+  val q238StreamHeavyNgrams: Q = gate(
     "q238_stream_heavy_ngrams",
-    graft.ops.TextAnalysis.duckHeavyNgramsOracle) { (s, dir) =>
+    graft.ops.TextAnalysis.duckHeavyNgramsOracle) { (s, dir, work) =>
     val k = graft.ops.TextAnalysis.HhCapacity
-    val work = Files.createTempDirectory("graft-q238-")
     val docs = Tables(s, dir, "documents")
     val in = stageParityBatches(work, docs, "doc_id")
     val store = work.resolve("sketch").toString
-    val ss = streamSession(s)
-    val query = ss.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(in)
-      .writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-          val sb = batch.sparkSession
-          graft.functions.GraftFunctions.register(sb)
-          val own = graft.ops.TextAnalysis.trigrams(batch.toDF())
-            .agg(expr(s"freq_sketch(gram, $k)").as("cand"))
-            .select(explode(col("cand")).as("e"))
-            .select(col("e.item").as("gram"), col("e.lb").as("cnt"))
-          val prev = latestGenBefore(sb, store, id).getOrElse(own.limit(0))
-          foldSketch(prev, own, k).coalesce(1)
-            .write.mode("overwrite").parquet(s"$store/gen=$id")
-          ()
-      }
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    graft.PlanProbe.recordStreaming(query)
-    dropStagedInput(work)
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(work.toFile)
-    val cands = latestGenBefore(s, store, Long.MaxValue)
-      .getOrElse(sys.error("q238: no sketch generation was published"))
-      .select(col("gram"))
+    foldStream(s, work, docs.schema, in) { (sb, batch, id) =>
+      graft.functions.GraftFunctions.register(sb)
+      val own = graft.ops.TextAnalysis.trigrams(batch)
+        .agg(expr(s"freq_sketch(gram, $k)").as("cand"))
+        .select(explode(col("cand")).as("e"))
+        .select(col("e.item").as("gram"), col("e.lb").as("cnt"))
+      val prev = latestGenBefore(sb, store, id).getOrElse(own.limit(0))
+      foldSketch(prev, own, k).coalesce(1)
+        .write.mode("overwrite").parquet(s"$store/gen=$id")
+    }
+    val cands = lastGen(s, store).select(col("gram"))
     val tok = graft.ops.TextAnalysis.trigrams(docs)
     val tot = tok.agg(count(lit(1)).as("n"))
     graft.ops.TextAnalysis.hhRecount(tok, cands.crossJoin(broadcast(tot)))
@@ -1218,7 +1188,7 @@ object StreamGate {
     * full-corpus closure — q47's oracle rendering verbatim — and the
     * mid-stream hot-cap precondition is CHECKED over every batch
     * boundary ([[graft.ops.Dedup.assertNoMidStreamCapCross]]). */
-  val q244StreamClusterMaintain: Q = Q(
+  val q244StreamClusterMaintain: Q = gate(
     "q244_stream_cluster_maintain",
     s"""WITH RECURSIVE ${graft.ops.Dedup.duckLshPairCtes},
        |edges AS (SELECT doc_a AS u, doc_b AS v FROM pairs
@@ -1226,60 +1196,18 @@ object StreamGate {
        |reach AS (SELECT u, v FROM edges
        |          UNION SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u)
        |SELECT u AS doc_id, least(u, min(v)) AS cluster_id
-       |FROM reach GROUP BY u ORDER BY doc_id""".stripMargin) { (s, dir) =>
-    val work = Files.createTempDirectory("graft-q244-")
+       |FROM reach GROUP BY u ORDER BY doc_id""".stripMargin) { (s, dir, work) =>
     val docs = graft.Tables(s, dir, "documents")
     val in = stageParityBatches(work, docs, "doc_id")
     val idx = work.resolve("bandidx").toString
     val lbl = work.resolve("labels").toString
-    val ss = streamSession(s)
-    val query = ss.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(in.toString)
-      .writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-          val sb = batch.sparkSession
-          val pairs = graft.ops.Dedup.incrementalDayRun(sb, idx, batch.toDF(), id)
-          // Prior labels = the highest generation BELOW this batch id (a
-          // replay must not read its own crashed attempt's output).
-          val lblPath = new org.apache.hadoop.fs.Path(lbl)
-          val fs = lblPath.getFileSystem(sb.sparkContext.hadoopConfiguration)
-          val prevIds =
-            if (fs.exists(lblPath))
-              fs.listStatus(lblPath).map(_.getPath.getName)
-                .filter(_.startsWith("batch="))
-                .map(_.stripPrefix("batch=").toLong).filter(_ < id)
-            else Array.empty[Long]
-          // The archive re-enters as its star forest: one (min, member)
-          // edge per labeled doc — q233's exact re-entry shape.
-          val star = prevIds.maxOption match {
-            case Some(p) =>
-              sb.read.parquet(s"$lbl/batch=$p")
-                .filter(col("doc_id") =!= col("cluster_id"))
-                .select(col("cluster_id").as("doc_a"), col("doc_id").as("doc_b"))
-            case None =>
-              sb.range(0).select(col("id").as("doc_a"), col("id").as("doc_b"))
-          }
-          graft.ops.Fuzzy.resolveClusters(sb,
-              star.unionByName(pairs.select(col("doc_a"), col("doc_b"))))
-            .write.mode("overwrite").parquet(s"$lbl/batch=$id")
-          pairs.unpersist()
-          ()
-      }
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    graft.PlanProbe.recordStreaming(query)
-    dropStagedInput(work)
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(work.toFile)
+    foldStream(s, work, docs.schema, in) { (sb, batch, id) =>
+      val pairs = graft.ops.Dedup.incrementalDayRun(sb, idx, batch, id)
+      refreshLabels(sb, lbl, pairs, id)
+      pairs.unpersist()
+    }
     graft.ops.Dedup.assertNoMidStreamCapCross(s, idx)
-    val fs = new org.apache.hadoop.fs.Path(lbl)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val last = fs.listStatus(new org.apache.hadoop.fs.Path(lbl))
-      .map(_.getPath.getName).filter(_.startsWith("batch="))
-      .map(_.stripPrefix("batch=").toLong).max
-    s.read.parquet(s"$lbl/batch=$last")
+    s.read.parquet(s"$lbl/batch=${labelBatches(s, lbl).max}")
       .select(col("doc_id"), col("cluster_id"))
       .orderBy(col("doc_id"))
   }
@@ -1304,62 +1232,19 @@ object StreamGate {
     * estimate landed within ±5% (≈3σ at lgK=12, rse ≈ 1.6%). At 100 TB
     * this replaces a vocabulary-scale distinct per reporting window with
     * a kilobyte-sized mergeable state read. */
-  val q252StreamHllVocab: Q = Q(
+  val q252StreamHllVocab: Q = gate(
     "q252_stream_hll_vocab",
     """WITH t AS (SELECT lang, unnest(string_split(text, ' ')) AS w
       |           FROM documents)
       |SELECT lang, count(DISTINCT w) AS n_vocab, true AS hll_ok
-      |FROM t GROUP BY 1 ORDER BY 1""".stripMargin) { (s, dir) =>
-    val work = Files.createTempDirectory("graft-q252-")
+      |FROM t GROUP BY 1 ORDER BY 1""".stripMargin) { (s, dir, work) =>
     val docs = graft.Tables(s, dir, "documents")
     val in = stageParityBatches(work, docs, "doc_id")
     val store = work.resolve("hllgen").toString
-    val ss = streamSession(s)
-    val query = ss.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(in.toString)
-      .writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-          val sb = batch.sparkSession
-          // §2.5: the staged batch is one scan partition — shard before
-          // the per-token explode+hash so the sketch build parallelizes.
-          val own = Tables.shard(batch.toDF())
-            .select(col("lang"), explode_outer(split(col("text"), " ")).as("w"))
-            .groupBy(col("lang"))
-            .agg(expr("hll_sketch_agg(w, 12)").as("sk"))
-          val prev = latestGenBefore(sb, store, id)
-            .getOrElse(own.limit(0))
-            .select(col("lang"), col("sk").as("sk_prev"))
-          // Lossless union per language; a language seen on only one
-          // side carries its side's sketch through unchanged.
-          own.join(prev, Seq("lang"), "full_outer")
-            .select(col("lang"),
-              when(col("sk").isNotNull && col("sk_prev").isNotNull,
-                expr("hll_union(sk, sk_prev)"))
-                .otherwise(coalesce(col("sk"), col("sk_prev"))).as("sk"))
-            .coalesce(1)
-            .write.mode("overwrite").parquet(s"$store/gen=$id")
-          ()
-      }
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    graft.PlanProbe.recordStreaming(query)
-    dropStagedInput(work)
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(work.toFile)
-    val folded = latestGenBefore(s, store, Long.MaxValue)
-      .getOrElse(sys.error("q252: no sketch generation was published"))
-      .select(col("lang"),
-        expr("hll_sketch_estimate(sk)").cast("double").as("est"))
-    docs.select(col("lang"), explode_outer(split(col("text"), " ")).as("w"))
-      .groupBy(col("lang"))
-      .agg(countDistinct(col("w")).as("n_vocab"))
-      .join(broadcast(folded), "lang")
-      .select(col("lang"), col("n_vocab"),
-        (col("est") >= col("n_vocab") * 0.95 &&
-          col("est") <= col("n_vocab") * 1.05).as("hll_ok"))
-      .orderBy(col("lang"))
+    foldStream(s, work, docs.schema, in) { (sb, batch, id) =>
+      foldHll(sb, store, batch, id)
+    }
+    hllVocab(s, store, docs).orderBy(col("lang"))
   }
 
   /** q259: the SINGLE-LOOP day-2 composition gate — every maintenance
@@ -1387,7 +1272,7 @@ object StreamGate {
     * its parts: O(batch) pairing, O(labeled + batch-pairs) label
     * refresh, O(languages) sketch fold, no-op-until-breach compaction —
     * nothing scales with the archive. */
-  val q259StreamFullMaintenance: Q = Q(
+  val q259StreamFullMaintenance: Q = gate(
     "q259_stream_full_maintenance",
     s"""WITH RECURSIVE ${graft.ops.Dedup.duckLshPairCtes},
        |edges AS (SELECT doc_a AS u, doc_b AS v FROM pairs
@@ -1404,8 +1289,7 @@ object StreamGate {
        |UNION ALL SELECT 'labels', doc_id, cluster_id, TRUE FROM cl
        |UNION ALL SELECT 'vocab_' || lang, n_vocab, CAST(NULL AS BIGINT), TRUE
        |FROM vt
-       |ORDER BY part, a, b""".stripMargin) { (s, dir) =>
-    val work = Files.createTempDirectory("graft-q259-")
+       |ORDER BY part, a, b""".stripMargin) { (s, dir, work) =>
     val docs = graft.Tables(s, dir, "documents")
     val in = stageOrderedBatches(work,
       Seq(0, 1, 2, 3).map(p => docs.filter(col("doc_id") % 4 === p)))
@@ -1413,111 +1297,41 @@ object StreamGate {
     val lbl = work.resolve("labels").toString
     val store = work.resolve("hllgen").toString
     val outPairs = work.resolve("out").toString
-    val ss = streamSession(s)
-    val query = ss.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(in.toString)
-      .writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-          val sb = batch.sparkSession
-          val hconf = sb.sparkContext.hadoopConfiguration
-          // (1) pair against the archive, emit exactly-once pairs —
-          // written in the pair join's OWN pass (no checkpoint+rewrite);
-          // the label refresh below re-reads the tiny parquet output.
-          val pairs = graft.ops.Dedup.incrementalDayRunTo(
-            sb, idx, batch.toDF(), id, s"$outPairs/batch=$id")
-          // (2) label refresh under the label store's writer lease:
-          // prior generation's star forest ∪ this batch's pairs,
-          // published as cumulative batch=<id> (replay reads < id).
-          val lblPath = new org.apache.hadoop.fs.Path(lbl)
-          val lfs = lblPath.getFileSystem(hconf)
-          graft.ops.GenStore.withLease(lfs, lblPath) { _ =>
-            val prevIds =
-              if (lfs.exists(lblPath))
-                lfs.listStatus(lblPath).map(_.getPath.getName)
-                  .filter(_.startsWith("batch="))
-                  .map(_.stripPrefix("batch=").toLong).filter(_ < id)
-              else Array.empty[Long]
-            val star = prevIds.maxOption match {
-              case Some(p) =>
-                sb.read.parquet(s"$lbl/batch=$p")
-                  .filter(col("doc_id") =!= col("cluster_id"))
-                  .select(col("cluster_id").as("doc_a"), col("doc_id").as("doc_b"))
-              case None =>
-                sb.range(0).select(col("id").as("doc_a"), col("id").as("doc_b"))
-            }
-            graft.ops.Fuzzy.resolveClusters(sb,
-                star.unionByName(pairs.select(col("doc_a"), col("doc_b"))))
-              .write.mode("overwrite").parquet(s"$lbl/batch=$id")
-          }
-          pairs.unpersist()
-          // (3) HLL vocabulary fold under the sketch store's lease.
-          val storePath = new org.apache.hadoop.fs.Path(store)
-          val sfs = storePath.getFileSystem(hconf)
-          graft.ops.GenStore.withLease(sfs, storePath) { _ =>
-            // §2.5: one scan partition per staged batch — shard before
-            // the per-token explode+hash (same fix as q252's fold).
-            val own = Tables.shard(batch.toDF())
-              .select(col("lang"), explode_outer(split(col("text"), " ")).as("w"))
-              .groupBy(col("lang"))
-              .agg(expr("hll_sketch_agg(w, 12)").as("sk"))
-            val prev = latestGenBefore(sb, store, id)
-              .getOrElse(own.limit(0))
-              .select(col("lang"), col("sk").as("sk_prev"))
-            own.join(prev, Seq("lang"), "full_outer")
-              .select(col("lang"),
-                when(col("sk").isNotNull && col("sk_prev").isNotNull,
-                  expr("hll_union(sk, sk_prev)"))
-                  .otherwise(coalesce(col("sk"), col("sk_prev"))).as("sk"))
-              .coalesce(1)
-              .write.mode("overwrite").parquet(s"$store/gen=$id")
-          }
-          // (4) band-index compaction when the store outgrows the replay
-          // window — cap-cross precondition checked pre-fold only.
-          if (graft.ops.Dedup.pendingFold(sb, idx, keepRecent = 2))
-            graft.ops.Dedup.assertNoMidStreamCapCross(sb, idx)
-          graft.ops.Dedup.compactBandIndex(sb, idx, keepRecent = 2)
-          ()
+    foldStream(s, work, docs.schema, in) { (sb, batch, id) =>
+      val hconf = sb.sparkContext.hadoopConfiguration
+      // (1) pair against the archive, emit exactly-once pairs —
+      // written in the pair join's OWN pass (no checkpoint+rewrite);
+      // the label refresh below re-reads the tiny parquet output.
+      val pairs = graft.ops.Dedup.incrementalDayRunTo(
+        sb, idx, batch, id, s"$outPairs/batch=$id")
+      // (2) label refresh under the label store's writer lease:
+      // prior generation's star forest ∪ this batch's pairs,
+      // published as cumulative batch=<id> (replay reads < id).
+      val lblPath = new HPath(lbl)
+      graft.ops.GenStore.withLease(lblPath.getFileSystem(hconf), lblPath) { _ =>
+        refreshLabels(sb, lbl, pairs, id)
       }
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    graft.PlanProbe.recordStreaming(query)
-    dropStagedInput(work)
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(work.toFile)
-    // Final cap-cross check (boundaries since the last in-loop fold) and
-    // proof the compaction actually fired at least once.
-    graft.ops.Dedup.assertNoMidStreamCapCross(s, idx)
-    val ifs = new org.apache.hadoop.fs.Path(idx)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    require(ifs.listStatus(new org.apache.hadoop.fs.Path(idx))
-      .exists(_.getPath.getName.startsWith("_bandgen-")),
-      "q259: in-loop compaction never promoted a generation")
+      pairs.unpersist()
+      // (3) HLL vocabulary fold under the sketch store's lease.
+      val storePath = new HPath(store)
+      graft.ops.GenStore.withLease(storePath.getFileSystem(hconf), storePath) { _ =>
+        foldHll(sb, store, batch, id)
+      }
+      // (4) band-index compaction when the store outgrows the replay
+      // window — cap-cross precondition checked pre-fold only.
+      compactInLoop(sb, idx)
+    }
+    checkCompacted(s, idx, "q259")
     val pairsOut = s.read.parquet(outPairs)
       .select(lit("pairs").as("part"), col("doc_a").as("a"),
         col("doc_b").as("b"), col("both_new").as("ok"))
-    val lfs = new org.apache.hadoop.fs.Path(lbl)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val last = lfs.listStatus(new org.apache.hadoop.fs.Path(lbl))
-      .map(_.getPath.getName).filter(_.startsWith("batch="))
-      .map(_.stripPrefix("batch=").toLong).max
-    val labelsOut = s.read.parquet(s"$lbl/batch=$last")
+    val labelsOut = s.read.parquet(s"$lbl/batch=${labelBatches(s, lbl).max}")
       .select(lit("labels").as("part"), col("doc_id").as("a"),
         col("cluster_id").as("b"), lit(true).as("ok"))
-    val folded = latestGenBefore(s, store, Long.MaxValue)
-      .getOrElse(sys.error("q259: no sketch generation was published"))
-      .select(col("lang"),
-        expr("hll_sketch_estimate(sk)").cast("double").as("est"))
-    val vocabOut = docs
-      .select(col("lang"), explode_outer(split(col("text"), " ")).as("w"))
-      .groupBy(col("lang"))
-      .agg(countDistinct(col("w")).as("n_vocab"))
-      .join(broadcast(folded), "lang")
+    val vocabOut = hllVocab(s, store, docs)
       .select(concat(lit("vocab_"), col("lang")).as("part"),
         col("n_vocab").as("a"), lit(null).cast("long").as("b"),
-        (col("est") >= col("n_vocab") * 0.95 &&
-          col("est") <= col("n_vocab") * 1.05).as("ok"))
+        col("hll_ok").as("ok"))
     pairsOut.unionByName(labelsOut).unionByName(vocabOut)
       .orderBy(col("part"), col("a"), col("b"))
   }
@@ -1543,14 +1357,13 @@ object StreamGate {
     * is shuffle-free), and the view merge is |keys|-bounded. The oracle
     * is the from-scratch join over everything that streamed: equality
     * proves the maintenance algebra under micro-batch arrival. */
-  val q296StreamIvmJoin: Q = Q(
+  val q296StreamIvmJoin: Q = gate(
     "q296_stream_ivm_join",
     """SELECT o.o_custkey AS custkey, CAST(count(*) AS BIGINT) AS n_lines,
       |       CAST(sum(CAST(round(l.l_extendedprice * 100) AS BIGINT)) AS BIGINT)
       |         AS sum_cents
       |FROM lineitem l JOIN orders o ON o.o_orderkey = l.l_orderkey
-      |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, dir) =>
-    val work = Files.createTempDirectory("graft-q296-")
+      |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, dir, work) =>
     val o = Tables(s, dir, "orders").select(lit("o").as("kind"),
       col("o_orderkey").as("ok"), col("o_custkey").as("custkey"),
       lit(null).cast("long").as("cents"))
@@ -1567,55 +1380,35 @@ object StreamGate {
     val oacc = work.resolve("oacc").toString
     val lacc = work.resolve("lacc").toString
     val view = work.resolve("view").toString
-    val ss = streamSession(s)
-    val schema = topic.head.schema
-    // At production trigger counts the per-batch subdirs fold into
-    // generations (q247's compaction) before the union grows.
-    def accBefore(sb: SparkSession, store: String, id: Long,
-        empty: org.apache.spark.sql.DataFrame) =
-      committedBatchesBefore(sb, store, id, empty)
-    val query = ss.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(in)
-      .writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-          val sb = batch.sparkSession
-          val dO = batch.filter(col("kind") === "o")
-            .select(col("ok"), col("custkey"))
-          val dL = batch.filter(col("kind") === "l")
-            .select(col("ok"), col("cents"))
-          val oPrev = accBefore(sb, oacc, id, dO.limit(0))
-          val lPrev = accBefore(sb, lacc, id, dL.limit(0))
-          def agg(df: org.apache.spark.sql.DataFrame) =
-            df.groupBy(col("custkey"))
-              .agg(count(lit(1)).as("dn"), sum(col("cents")).as("dc"))
-          val delta = agg(dL.join(oPrev, "ok")
-            .unionByName(lPrev.join(dO, "ok"))
-            .unionByName(dL.join(dO, "ok")))
-          val vPrev = latestGenBefore(sb, view, id).getOrElse(
-            delta.select(col("custkey"), col("dn").as("n_lines"),
-              col("dc").as("sum_cents")).limit(0))
-          vPrev.join(delta, Seq("custkey"), "full_outer")
-            .select(col("custkey"),
-              (coalesce(col("n_lines"), lit(0L)) + coalesce(col("dn"), lit(0L)))
-                .as("n_lines"),
-              (coalesce(col("sum_cents"), lit(0L)) + coalesce(col("dc"), lit(0L)))
-                .as("sum_cents"))
-            .coalesce(1).write.mode("overwrite").parquet(s"$view/gen=$id")
-          dO.write.mode("overwrite").parquet(s"$oacc/batch=$id")
-          dL.write.mode("overwrite").parquet(s"$lacc/batch=$id")
-          ()
-      }
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    graft.PlanProbe.recordStreaming(query)
-    dropStagedInput(work)
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(work.toFile)
-    latestGenBefore(s, view, Long.MaxValue)
-      .getOrElse(sys.error("q296: no view generation was published"))
-      .orderBy(col("custkey"))
+    foldStream(s, work, topic.head.schema, in) { (sb, batch, id) =>
+      val dO = batch.filter(col("kind") === "o")
+        .select(col("ok"), col("custkey"))
+      val dL = batch.filter(col("kind") === "l")
+        .select(col("ok"), col("cents"))
+      // At production trigger counts the per-batch subdirs fold into
+      // generations (q247's compaction) before the union grows.
+      val oPrev = committedBatchesBefore(sb, oacc, id, dO.limit(0))
+      val lPrev = committedBatchesBefore(sb, lacc, id, dL.limit(0))
+      def agg(df: DataFrame) =
+        df.groupBy(col("custkey"))
+          .agg(count(lit(1)).as("dn"), sum(col("cents")).as("dc"))
+      val delta = agg(dL.join(oPrev, "ok")
+        .unionByName(lPrev.join(dO, "ok"))
+        .unionByName(dL.join(dO, "ok")))
+      val vPrev = latestGenBefore(sb, view, id).getOrElse(
+        delta.select(col("custkey"), col("dn").as("n_lines"),
+          col("dc").as("sum_cents")).limit(0))
+      vPrev.join(delta, Seq("custkey"), "full_outer")
+        .select(col("custkey"),
+          (coalesce(col("n_lines"), lit(0L)) + coalesce(col("dn"), lit(0L)))
+            .as("n_lines"),
+          (coalesce(col("sum_cents"), lit(0L)) + coalesce(col("dc"), lit(0L)))
+            .as("sum_cents"))
+        .coalesce(1).write.mode("overwrite").parquet(s"$view/gen=$id")
+      dO.write.mode("overwrite").parquet(s"$oacc/batch=$id")
+      dL.write.mode("overwrite").parquet(s"$lacc/batch=$id")
+    }
+    lastGen(s, view).orderBy(col("custkey"))
   }
 
   /** q301: STREAMING late-dimension backfill — q300's early-fact pattern
@@ -1640,7 +1433,7 @@ object StreamGate {
     * is the bucketed store the probe side co-partitions against. The
     * oracle is the complete naive join: equality proves park-and-reprobe
     * converges with nothing lost, duplicated, or double-flagged. */
-  val q301StreamLateDim: Q = Q(
+  val q301StreamLateDim: Q = gate(
     "q301_stream_late_dim",
     """SELECT CAST(c.c_nationkey AS BIGINT) AS nationkey,
       |       CAST(count(*) AS BIGINT) AS n_orders,
@@ -1649,8 +1442,7 @@ object StreamGate {
       |       CAST(count(*) FILTER (WHERE o.o_orderkey % 3 < c.c_custkey % 3)
       |            AS BIGINT) AS n_backfilled
       |FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey
-      |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, dir) =>
-    val work = Files.createTempDirectory("graft-q301-")
+      |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, dir, work) =>
     val dims = Tables(s, dir, "customer").select(lit("d").as("kind"),
       col("c_custkey").as("ck"), col("c_nationkey").cast("long").as("nk"),
       lit(null).cast("long").as("cents"), col("c_custkey").as("slotkey"))
@@ -1667,50 +1459,54 @@ object StreamGate {
     val dimacc = work.resolve("dimacc").toString
     val parked = work.resolve("parked").toString
     val enr = work.resolve("enr").toString
-    val ss = streamSession(s)
-    val query = ss.readStream.schema(topic.head.schema)
-      .option("maxFilesPerTrigger", "1").parquet(in)
-      .writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-          val sb = batch.sparkSession
-          val dN = batch.filter(col("kind") === "d").select(col("ck"), col("nk"))
-          val fN = batch.filter(col("kind") === "f")
-            .select(col("ck"), col("cents"), lit(id).as("arr"))
-          val dimsKnown = committedBatchesBefore(sb, dimacc, id, dN.limit(0))
-            .unionByName(dN)
-          val probe = latestGenBefore(sb, parked, id).getOrElse(fN.limit(0))
-            .unionByName(fN)
-          val joined = probe.join(dimsKnown, Seq("ck"), "left_outer")
-            .localCheckpoint() // one materialization feeds both splits
-          joined.filter(col("nk").isNotNull)
-            .select(col("ck"), col("nk"), col("cents"),
-              (col("arr") < id).as("backfilled"))
-            .write.mode("overwrite").parquet(s"$enr/batch=$id")
-          joined.filter(col("nk").isNull)
-            .select(col("ck"), col("cents"), col("arr"))
-            .coalesce(1).write.mode("overwrite").parquet(s"$parked/gen=$id")
-          dN.write.mode("overwrite").parquet(s"$dimacc/batch=$id")
-          ()
-      }
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    graft.PlanProbe.recordStreaming(query)
-    dropStagedInput(work)
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(work.toFile)
+    foldStream(s, work, topic.head.schema, in) { (sb, batch, id) =>
+      val dN = batch.filter(col("kind") === "d").select(col("ck"), col("nk"))
+      val fN = batch.filter(col("kind") === "f")
+        .select(col("ck"), col("cents"), lit(id).as("arr"))
+      val dimsKnown = committedBatchesBefore(sb, dimacc, id, dN.limit(0))
+        .unionByName(dN)
+      val probe = latestGenBefore(sb, parked, id).getOrElse(fN.limit(0))
+        .unionByName(fN)
+      val joined = probe.join(dimsKnown, Seq("ck"), "left_outer")
+        .localCheckpoint() // one materialization feeds both splits
+      joined.filter(col("nk").isNotNull)
+        .select(col("ck"), col("nk"), col("cents"),
+          (col("arr") < id).as("backfilled"))
+        .write.mode("overwrite").parquet(s"$enr/batch=$id")
+      joined.filter(col("nk").isNull)
+        .select(col("ck"), col("cents"), col("arr"))
+        .coalesce(1).write.mode("overwrite").parquet(s"$parked/gen=$id")
+      dN.write.mode("overwrite").parquet(s"$dimacc/batch=$id")
+    }
     val leftover = latestGenBefore(s, parked, Long.MaxValue)
       .map(_.count()).getOrElse(0L)
     require(leftover == 0L,
       s"q301: $leftover facts never matched a dimension row (FK breach)")
     committedBatchesBefore(s, enr, Long.MaxValue,
-        s.emptyDataFrame.select(lit(0L).as("ck"), lit(0L).as("nk"),
-          lit(0L).as("cents"), lit(false).as("backfilled")).limit(0))
+        emptyFrame(s, "ck LONG, nk LONG, cents LONG, backfilled BOOLEAN"))
       .groupBy(col("nk").as("nationkey"))
       .agg(count(lit(1)).as("n_orders"), sum(col("cents")).as("sum_cents"),
         count_if(col("backfilled")).as("n_backfilled"))
       .orderBy(col("nationkey"))
+  }
+
+  /** Stage `ev` (which has a `day` column) as five chronological 6-day
+    * slices from its first day; any trailing span beyond day 29 clamps
+    * into the last slice — the oracles apply the identical least(...)
+    * clamp. `ev` is persisted across staging: the first-day probe and the
+    * five slice writes otherwise re-scan and re-derive it six times.
+    * `shape` maps each slice to the rows staged. Returns the staged
+    * schema and the input dir. */
+  private def stageDaySlices(work: Path, ev: DataFrame,
+      shape: DataFrame => DataFrame = identity): (StructType, String) = {
+    ev.persist(MEMORY_AND_DISK)
+    val minDay = ev.agg(min(col("day"))).collect()(0).getLong(0)
+    val topic = (0 to 4).map { slice =>
+      shape(ev.filter(expr(s"least((day - ${minDay}L) div 6, 4L)") === slice))
+    }
+    val in = stageOrderedBatches(work, topic)
+    ev.unpersist()
+    (topic.head.schema, in)
   }
 
   /** q322: STREAMING SPRT — q319's sequential test in its native
@@ -1730,7 +1526,7 @@ object StreamGate {
     *
     * Per-trigger cost: one map-side-combined 1-row aggregate over the
     * batch plus a ≤id-row store read — O(batch) at any scale. */
-  val q322StreamSprt: Q = Q(
+  val q322StreamSprt: Q = gate(
     "q322_stream_sprt",
     s"""WITH d AS (SELECT CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day,
        |                  CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS p
@@ -1750,59 +1546,32 @@ object StreamGate {
        |      FROM c)
        |SELECT step, n, x, cum_llr_nano,
        |       ${graft.ops.Extended.SprtDecision} AS decision
-       |FROM k ORDER BY step""".stripMargin) { (s, dir) =>
-    val work = Files.createTempDirectory("graft-q322-")
-    // Persisted across staging: the minDay probe + five slice writes
-    // otherwise re-scan and re-derive the events frame six times.
-    val ev = Tables(s, dir, "events")
+       |FROM k ORDER BY step""".stripMargin) { (s, dir, work) =>
+    val (schema, in) = stageDaySlices(work, Tables(s, dir, "events")
       .select(expr("unix_timestamp(ts) div 86400").as("day"),
-        when(col("event_type") === "purchase", 1L).otherwise(0L).as("p"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val minDay = ev.agg(min(col("day"))).collect()(0).getLong(0)
-    // Five 6-day slices; any trailing span beyond day 29 clamps into the
-    // last slice — the oracle applies the identical least(...) clamp.
-    val topic = (0 to 4).map { slice =>
-      ev.filter(expr(s"least((day - ${minDay}L) div 6, 4L)") === slice)
-    }
-    val in = stageOrderedBatches(work, topic)
-    ev.unpersist()
+        when(col("event_type") === "purchase", 1L).otherwise(0L).as("p")))
     val acc = work.resolve("acc").toString
     val out = work.resolve("out").toString
-    val ss = streamSession(s)
-    val query = ss.readStream.schema(topic.head.schema)
-      .option("maxFilesPerTrigger", "1").parquet(in)
-      .writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-          val sb = batch.sparkSession
-          // coalesce: an empty trigger's sum() is NULL and would poison
-          // every later cumulative total (the slices are non-empty by
-          // construction here, but a replay-total store must not depend
-          // on that).
-          val d1 = batch.agg(count(lit(1)).as("dn"),
-            coalesce(sum(col("p")), lit(0L)).as("dx"))
-          val prev = committedBatchesBefore(sb, acc, id, d1.limit(0))
-          prev.unionByName(d1)
-            .agg(sum(col("dn")).as("n"), sum(col("dx")).as("x"))
-            .select(lit(id).as("step"), col("n"), col("x"),
-              expr(s"x * (${graft.ops.Extended.SprtL1})"
-                + s" + (n - x) * (${graft.ops.Extended.SprtL0})")
-                .as("cum_llr_nano"))
-            .withColumn("decision", expr(graft.ops.Extended.SprtDecision))
-            .coalesce(1).write.mode("overwrite").parquet(s"$out/batch=$id")
-          d1.coalesce(1).write.mode("overwrite").parquet(s"$acc/batch=$id")
-          ()
-      }
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    graft.PlanProbe.recordStreaming(query)
-    dropStagedInput(work)
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(work.toFile)
+    foldStream(s, work, schema, in) { (sb, batch, id) =>
+      // coalesce: an empty trigger's sum() is NULL and would poison
+      // every later cumulative total (the slices are non-empty by
+      // construction here, but a replay-total store must not depend
+      // on that).
+      val d1 = batch.agg(count(lit(1)).as("dn"),
+        coalesce(sum(col("p")), lit(0L)).as("dx"))
+      val prev = committedBatchesBefore(sb, acc, id, d1.limit(0))
+      prev.unionByName(d1)
+        .agg(sum(col("dn")).as("n"), sum(col("dx")).as("x"))
+        .select(lit(id).as("step"), col("n"), col("x"),
+          expr(s"x * (${graft.ops.Extended.SprtL1})"
+            + s" + (n - x) * (${graft.ops.Extended.SprtL0})")
+            .as("cum_llr_nano"))
+        .withColumn("decision", expr(graft.ops.Extended.SprtDecision))
+        .coalesce(1).write.mode("overwrite").parquet(s"$out/batch=$id")
+      d1.coalesce(1).write.mode("overwrite").parquet(s"$acc/batch=$id")
+    }
     committedBatchesBefore(s, out, Long.MaxValue,
-        s.range(0).select(lit(0L).as("step"), lit(0L).as("n"), lit(0L).as("x"),
-          lit(0L).as("cum_llr_nano"), lit("").as("decision")))
+        emptyFrame(s, "step LONG, n LONG, x LONG, cum_llr_nano LONG, decision STRING"))
       .orderBy(col("step"))
   }
 
@@ -1824,7 +1593,7 @@ object StreamGate {
     * recursive CTE; w by repeated ×0.64); the oracle renders each
     * trigger horizon as slice ≤ step, so equality proves every
     * trigger-time decision matches a batch re-analysis at that horizon. */
-  val q347StreamEwma: Q = Q(
+  val q347StreamEwma: Q = gate(
     "q347_stream_ewma",
     """WITH RECURSIVE d AS (
       |  SELECT event_type, CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day,
@@ -1865,86 +1634,61 @@ object StreamGate {
       |       arg_max(round(f.z, 4), f.t) AS z_last,
       |       CAST(count(*) FILTER (WHERE f.flag) AS BIGINT) AS n_flagged
       |FROM steps st JOIN fl f ON f.slice <= st.step
-      |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin) { (s, dir) =>
-    import org.apache.spark.sql.expressions.Window
-    val work = Files.createTempDirectory("graft-q347-")
+      |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin) { (s, dir, work) =>
     val dec = "decimal(38,0)"
-    // Persisted across staging (see q322): six passes -> one.
-    val ev = Tables(s, dir, "events")
+    val (schema, in) = stageDaySlices(work, Tables(s, dir, "events")
       .withColumn("sec", unix_timestamp(col("ts")))
       .select(col("event_type"), expr("sec div 86400").as("day"),
-        round(col("value") * 100).cast("long").as("cents"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val minDay = ev.agg(min(col("day"))).collect()(0).getLong(0)
-    val topic = (0 to 4).map { slice =>
-      ev.filter(expr(s"least((day - ${minDay}L) div 6, 4L)") === slice)
-    }
-    val in = stageOrderedBatches(work, topic)
-    ev.unpersist()
+        round(col("value") * 100).cast("long").as("cents")))
     val dayacc = work.resolve("dayacc").toString
     val out = work.resolve("out").toString
-    val ss = streamSession(s)
-    val query = ss.readStream.schema(topic.head.schema)
-      .option("maxFilesPerTrigger", "1").parquet(in)
-      .writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-          val dB = batch.groupBy(col("event_type"), col("day"))
-            .agg(sum(col("cents")).as("v"))
-          val days = committedBatchesBefore(batch.sparkSession, dayacc, id,
-            dB.limit(0)).unionByName(dB)
-            .localCheckpoint() // feeds baseline, series, AND the day write
-          val mind = days.agg(min(col("day")).as("mind"))
-          val base = days.crossJoin(broadcast(mind))
-            .filter(col("day") < col("mind") + 6)
-            .groupBy(col("event_type"))
-            .agg(count(lit(1)).cast(dec).as("n0"),
-              sum(col("v").cast(dec)).as("sv0"),
-              sum(col("v").cast(dec) * col("v")).as("svv0"))
-          val ser = days.withColumn("t", row_number().over(
-            Window.partitionBy(col("event_type")).orderBy(col("day"))))
-          val arr = ser.groupBy(col("event_type"))
-            .agg(expr("transform(array_sort(collect_list(struct(t, v))), p -> p.v)")
-              .as("arr"))
-            .join(broadcast(base), "event_type")
-          val states = arr.withColumn("sts",
-            expr("""aggregate(arr,
-                   |  array(named_struct(
-                   |    'z', CAST(sv0 AS DOUBLE) / CAST(n0 AS DOUBLE),
-                   |    'w', CAST(1 AS DOUBLE))),
-                   |  (acc, e) -> array_append(acc, named_struct(
-                   |    'z', 0.2D * CAST(e AS DOUBLE) + 0.8D * element_at(acc, -1).z,
-                   |    'w', element_at(acc, -1).w * 0.64D)))""".stripMargin))
-            .select(col("event_type"), col("n0"), col("sv0"), col("svv0"),
-              posexplode(col("sts")).as(Seq("t", "st")))
-            .filter(col("t") >= 1)
-          states.select(col("event_type"), col("t").cast("long").as("t"),
-              col("st.z").as("z"),
-              ((expr("CAST(n0 AS DOUBLE)") * col("st.z") - expr("CAST(sv0 AS DOUBLE)"))
-                * (expr("CAST(n0 AS DOUBLE)") * col("st.z") - expr("CAST(sv0 AS DOUBLE)"))
-                > expr("CAST(n0 * svv0 - sv0 * sv0 AS DOUBLE)")
-                  * (expr("CAST(1 AS DOUBLE)") - col("st.w"))).as("flag"))
-            .groupBy(col("event_type"))
-            .agg(count(lit(1)).as("n_days"),
-              expr("max_by(round(z, 4), t)").as("z_last"),
-              count(when(col("flag"), 1)).as("n_flagged"))
-            .select(lit(id).as("step"), col("event_type"), col("n_days"),
-              col("z_last"), col("n_flagged"))
-            .coalesce(1).write.mode("overwrite").parquet(s"$out/batch=$id")
-          dB.coalesce(1).write.mode("overwrite").parquet(s"$dayacc/batch=$id")
-          ()
-      }
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    graft.PlanProbe.recordStreaming(query)
-    dropStagedInput(work)
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(work.toFile)
-    committedBatchesBefore(s, out, Long.MaxValue,
-        s.range(0).select(lit(0L).as("step"), lit("").as("event_type"),
-          lit(0L).as("n_days"), lit(0.0).as("z_last"),
-          lit(0L).as("n_flagged")).limit(0))
+    foldStream(s, work, schema, in) { (sb, batch, id) =>
+      val dB = batch.groupBy(col("event_type"), col("day"))
+        .agg(sum(col("cents")).as("v"))
+      val days = committedBatchesBefore(sb, dayacc, id,
+        dB.limit(0)).unionByName(dB)
+        .localCheckpoint() // feeds baseline, series, AND the day write
+      val mind = days.agg(min(col("day")).as("mind"))
+      val base = days.crossJoin(broadcast(mind))
+        .filter(col("day") < col("mind") + 6)
+        .groupBy(col("event_type"))
+        .agg(count(lit(1)).cast(dec).as("n0"),
+          sum(col("v").cast(dec)).as("sv0"),
+          sum(col("v").cast(dec) * col("v")).as("svv0"))
+      val ser = days.withColumn("t", row_number().over(
+        Window.partitionBy(col("event_type")).orderBy(col("day"))))
+      val arr = ser.groupBy(col("event_type"))
+        .agg(expr("transform(array_sort(collect_list(struct(t, v))), p -> p.v)")
+          .as("arr"))
+        .join(broadcast(base), "event_type")
+      val states = arr.withColumn("sts",
+        expr("""aggregate(arr,
+               |  array(named_struct(
+               |    'z', CAST(sv0 AS DOUBLE) / CAST(n0 AS DOUBLE),
+               |    'w', CAST(1 AS DOUBLE))),
+               |  (acc, e) -> array_append(acc, named_struct(
+               |    'z', 0.2D * CAST(e AS DOUBLE) + 0.8D * element_at(acc, -1).z,
+               |    'w', element_at(acc, -1).w * 0.64D)))""".stripMargin))
+        .select(col("event_type"), col("n0"), col("sv0"), col("svv0"),
+          posexplode(col("sts")).as(Seq("t", "st")))
+        .filter(col("t") >= 1)
+      states.select(col("event_type"), col("t").cast("long").as("t"),
+          col("st.z").as("z"),
+          ((expr("CAST(n0 AS DOUBLE)") * col("st.z") - expr("CAST(sv0 AS DOUBLE)"))
+            * (expr("CAST(n0 AS DOUBLE)") * col("st.z") - expr("CAST(sv0 AS DOUBLE)"))
+            > expr("CAST(n0 * svv0 - sv0 * sv0 AS DOUBLE)")
+              * (expr("CAST(1 AS DOUBLE)") - col("st.w"))).as("flag"))
+        .groupBy(col("event_type"))
+        .agg(count(lit(1)).as("n_days"),
+          expr("max_by(round(z, 4), t)").as("z_last"),
+          count(when(col("flag"), 1)).as("n_flagged"))
+        .select(lit(id).as("step"), col("event_type"), col("n_days"),
+          col("z_last"), col("n_flagged"))
+        .coalesce(1).write.mode("overwrite").parquet(s"$out/batch=$id")
+      dB.coalesce(1).write.mode("overwrite").parquet(s"$dayacc/batch=$id")
+    }
+    committedBatchesBefore(s, out, Long.MaxValue, emptyFrame(s,
+        "step LONG, event_type STRING, n_days LONG, z_last DOUBLE, n_flagged LONG"))
       .orderBy(col("step"), col("event_type"))
   }
 
@@ -1961,7 +1705,7 @@ object StreamGate {
     *
     * Per-trigger cost: O(batch) to profile + a |users|·|types|-grain
     * store merge + the 25-pattern rollup; no event-grain state. */
-  val q355StreamSequential: Q = Q(
+  val q355StreamSequential: Q = gate(
     "q355_stream_sequential",
     """WITH d AS (SELECT user_id, event_type,
       |                  CAST(floor(epoch(ts)) AS BIGINT) AS sec,
@@ -1987,63 +1731,40 @@ object StreamGate {
       |       s.support, na.n_ante,
       |       s.support * 1000000 // na.n_ante AS confidence_ppm
       |FROM sup s JOIN na ON na.step = s.step AND na.event_type = s.antecedent
-      |ORDER BY 1, 2, 3""".stripMargin) { (s, dir) =>
-    val work = Files.createTempDirectory("graft-q355-")
-    // Persisted across staging (see q322): six passes -> one.
-    val ev = Tables(s, dir, "events")
-      .withColumn("sec", unix_timestamp(col("ts")))
-      .select(col("user_id"), col("event_type"), col("sec"),
-        expr("sec div 86400").as("day"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val minDay = ev.agg(min(col("day"))).collect()(0).getLong(0)
-    val topic = (0 to 4).map { slice =>
-      ev.filter(expr(s"least((day - ${minDay}L) div 6, 4L)") === slice)
-        .select(col("user_id"), col("event_type"), col("sec"))
-    }
-    val in = stageOrderedBatches(work, topic)
-    ev.unpersist()
+      |ORDER BY 1, 2, 3""".stripMargin) { (s, dir, work) =>
+    val (schema, in) = stageDaySlices(work, Tables(s, dir, "events")
+        .withColumn("sec", unix_timestamp(col("ts")))
+        .select(col("user_id"), col("event_type"), col("sec"),
+          expr("sec div 86400").as("day")),
+      _.select(col("user_id"), col("event_type"), col("sec")))
     val profacc = work.resolve("profacc").toString
     val out = work.resolve("out").toString
-    val ss = streamSession(s)
-    val query = ss.readStream.schema(topic.head.schema)
-      .option("maxFilesPerTrigger", "1").parquet(in)
-      .writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-          val pB = batch.groupBy(col("user_id"), col("event_type"))
-            .agg(min(col("sec")).as("mn"), max(col("sec")).as("mx"))
-          val p = committedBatchesBefore(batch.sparkSession, profacc, id,
-            pB.limit(0)).unionByName(pB)
-            .groupBy(col("user_id"), col("event_type"))
-            .agg(min(col("mn")).as("mn"), max(col("mx")).as("mx"))
-            .localCheckpoint() // feeds both sides of the pair join + na
-          val na = p.groupBy(col("event_type")).agg(count(lit(1)).as("n_ante"))
-          p.as("a").join(p.as("b"),
-              col("b.user_id") === col("a.user_id") &&
-                col("a.mn") < col("b.mx"))
-            .groupBy(col("a.event_type").as("antecedent"),
-              col("b.event_type").as("consequent"))
-            .agg(count(lit(1)).as("support"))
-            .join(broadcast(na.withColumnRenamed("event_type", "antecedent")),
-              "antecedent")
-            .select(lit(id).as("step"), col("antecedent"), col("consequent"),
-              col("support"), col("n_ante"),
-              expr("support * 1000000 div n_ante").as("confidence_ppm"))
-            .coalesce(1).write.mode("overwrite").parquet(s"$out/batch=$id")
-          pB.coalesce(1).write.mode("overwrite").parquet(s"$profacc/batch=$id")
-          ()
-      }
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    graft.PlanProbe.recordStreaming(query)
-    dropStagedInput(work)
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(work.toFile)
-    committedBatchesBefore(s, out, Long.MaxValue,
-        s.range(0).select(lit(0L).as("step"), lit("").as("antecedent"),
-          lit("").as("consequent"), lit(0L).as("support"),
-          lit(0L).as("n_ante"), lit(0L).as("confidence_ppm")).limit(0))
+    foldStream(s, work, schema, in) { (sb, batch, id) =>
+      val pB = batch.groupBy(col("user_id"), col("event_type"))
+        .agg(min(col("sec")).as("mn"), max(col("sec")).as("mx"))
+      val p = committedBatchesBefore(sb, profacc, id,
+        pB.limit(0)).unionByName(pB)
+        .groupBy(col("user_id"), col("event_type"))
+        .agg(min(col("mn")).as("mn"), max(col("mx")).as("mx"))
+        .localCheckpoint() // feeds both sides of the pair join + na
+      val na = p.groupBy(col("event_type")).agg(count(lit(1)).as("n_ante"))
+      p.as("a").join(p.as("b"),
+          col("b.user_id") === col("a.user_id") &&
+            col("a.mn") < col("b.mx"))
+        .groupBy(col("a.event_type").as("antecedent"),
+          col("b.event_type").as("consequent"))
+        .agg(count(lit(1)).as("support"))
+        .join(broadcast(na.withColumnRenamed("event_type", "antecedent")),
+          "antecedent")
+        .select(lit(id).as("step"), col("antecedent"), col("consequent"),
+          col("support"), col("n_ante"),
+          expr("support * 1000000 div n_ante").as("confidence_ppm"))
+        .coalesce(1).write.mode("overwrite").parquet(s"$out/batch=$id")
+      pB.coalesce(1).write.mode("overwrite").parquet(s"$profacc/batch=$id")
+    }
+    committedBatchesBefore(s, out, Long.MaxValue, emptyFrame(s,
+        "step LONG, antecedent STRING, consequent STRING, support LONG, " +
+          "n_ante LONG, confidence_ppm LONG"))
       .orderBy(col("step"), col("antecedent"), col("consequent"))
   }
 
@@ -2060,40 +1781,18 @@ object StreamGate {
     * final store answers q383's FROM-SCRATCH full-graph oracle: labels
     * are min-ids at every generation, so folds chain regardless of how
     * the edges arrived. */
-  val q384StreamCcIngest: Q = Q(
+  val q384StreamCcIngest: Q = gate(
     "q384_stream_cc_ingest",
-    graft.ops.Graph.q383CcIncremental.oracle.get) { (s, dir) =>
-    val work = Files.createTempDirectory("graft-q384-")
-    // Persist before staging (q411's rationale): three batch writes
-    // must not re-run the support join three times.
+    graft.ops.Graph.q383CcIncremental.oracle.get) { (s, dir, work) =>
     val e0 = graft.ops.Graph.supportedEdges(s, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val in = stageOrderedBatches(work,
-      Seq(0, 1, 2).map(r => e0.filter((col("u") + col("v")) % 3 === r)))
-    e0.unpersist()
+    val in = stageEdgeThirds(work, e0)
     val store = work.resolve("cclabels").toString
-    val ss = streamSession(s)
-    val query = ss.readStream.schema(e0.schema)
-      .option("maxFilesPerTrigger", "1").parquet(in.toString)
-      .writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-          val sb = batch.sparkSession
-          val prev = latestGenBefore(sb, store, id).getOrElse(
-            sb.range(0).select(col("id").as("n"), col("id").as("lab")))
-          graft.ops.Graph.ccFold(prev, batch.toDF())
-            .write.mode("overwrite").parquet(s"$store/gen=$id")
-          ()
-      }
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    graft.PlanProbe.recordStreaming(query)
-    dropStagedInput(work)
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(work.toFile)
-    latestGenBefore(s, store, Long.MaxValue)
-      .getOrElse(s.range(0).select(col("id").as("n"), col("id").as("lab")))
+    val labels = "n LONG, lab LONG"
+    foldStream(s, work, e0.schema, in) { (sb, batch, id) =>
+      graft.ops.Graph.ccFold(genBefore(sb, store, id, labels), batch)
+        .write.mode("overwrite").parquet(s"$store/gen=$id")
+    }
+    genBefore(s, store, Long.MaxValue, labels)
       .select(col("n").as("node_id"), col("lab").as("component_id"))
       .orderBy(col("node_id"))
   }
@@ -2110,42 +1809,18 @@ object StreamGate {
     * edges so re-folding is a no-op. A triangle spanning batches is
     * counted exactly once, at the trigger where its LAST edge lands, so
     * the final store answers q388's FROM-SCRATCH full-graph oracle. */
-  val q397StreamTriSupport: Q = Q(
+  val q397StreamTriSupport: Q = gate(
     "q397_stream_tri_support",
-    graft.ops.Round12.q388TriSupport.oracle.get) { (s, dir) =>
-    val work = Files.createTempDirectory("graft-q397-")
-    // Persist before staging (q411's rationale): three batch writes
-    // must not re-run the support join three times.
+    graft.ops.Round12.q388TriSupport.oracle.get) { (s, dir, work) =>
     val e0 = graft.ops.Graph.supportedEdges(s, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val in = stageOrderedBatches(work,
-      Seq(0, 1, 2).map(r => e0.filter((col("u") + col("v")) % 3 === r)))
-    e0.unpersist()
+    val in = stageEdgeThirds(work, e0)
     val store = work.resolve("trisupp").toString
-    val ss = streamSession(s)
-    val query = ss.readStream.schema(e0.schema)
-      .option("maxFilesPerTrigger", "1").parquet(in.toString)
-      .writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-          val sb = batch.sparkSession
-          val prev = latestGenBefore(sb, store, id).getOrElse(
-            sb.range(0).select(col("id").as("u"), col("id").as("v"),
-              col("id").as("tri")))
-          graft.ops.Round13.triSupportFold(prev, batch.toDF())
-            .write.mode("overwrite").parquet(s"$store/gen=$id")
-          ()
-      }
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    graft.PlanProbe.recordStreaming(query)
-    dropStagedInput(work)
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(work.toFile)
-    latestGenBefore(s, store, Long.MaxValue)
-      .getOrElse(s.range(0).select(col("id").as("u"), col("id").as("v"),
-        col("id").as("tri")))
+    val support = "u LONG, v LONG, tri LONG"
+    foldStream(s, work, e0.schema, in) { (sb, batch, id) =>
+      graft.ops.Round13.triSupportFold(genBefore(sb, store, id, support), batch)
+        .write.mode("overwrite").parquet(s"$store/gen=$id")
+    }
+    genBefore(s, store, Long.MaxValue, support)
       .select(col("u"), col("v"), col("tri").as("tri_support"))
       .orderBy(col("u"), col("v"))
   }
@@ -2161,41 +1836,56 @@ object StreamGate {
     * oracle — sketch linearity as the maintenance contract, the
     * constant-size distinct-store dual of the q252 HLL vocabulary
     * fold. */
-  val q402StreamCmsMaintain: Q = Q(
+  val q402StreamCmsMaintain: Q = gate(
     "q402_stream_cms_maintain",
-    graft.ops.Round13.q399CmsRegisters.oracle.get) { (s, dir) =>
-    val work = Files.createTempDirectory("graft-q402-")
+    graft.ops.Round13.q399CmsRegisters.oracle.get) { (s, dir, work) =>
     val docs = Tables(s, dir, "documents")
     val in = stageOrderedBatches(work,
       Seq(0, 1, 2).map(r => docs.filter(col("doc_id") % 3 === r)))
     val store = work.resolve("cms").toString
-    val ss = streamSession(s)
-    val query = ss.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(in.toString)
-      .writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-          val sb = batch.sparkSession
-          val prev = latestGenBefore(sb, store, id).getOrElse(
-            sb.range(0).select(col("id").as("j"), col("id").as("c"),
-              col("id").as("r")))
-          graft.ops.Round13.cmsCounts(batch.toDF())
-            .unionByName(prev)
-            .groupBy(col("j"), col("c")).agg(sum(col("r")).as("r"))
-            .write.mode("overwrite").parquet(s"$store/gen=$id")
-          ()
-      }
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    graft.PlanProbe.recordStreaming(query)
-    dropStagedInput(work)
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(work.toFile)
-    graft.ops.Round13.cmsDense(s,
-      latestGenBefore(s, store, Long.MaxValue).getOrElse(
-        s.range(0).select(col("id").as("j"), col("id").as("c"),
-          col("id").as("r"))))
+    val cms = "j LONG, c LONG, r LONG"
+    foldStream(s, work, docs.schema, in) { (sb, batch, id) =>
+      val prev = genBefore(sb, store, id, cms)
+      graft.ops.Round13.cmsCounts(batch)
+        .unionByName(prev)
+        .groupBy(col("j"), col("c")).agg(sum(col("r")).as("r"))
+        .write.mode("overwrite").parquet(s"$store/gen=$id")
+    }
+    graft.ops.Round13.cmsDense(s, genBefore(s, store, Long.MaxValue, cms))
+  }
+
+  /** The three-chained-store fold of q411/q419/q424, which differ only in
+    * the kernel and the stored table names. `edges` (`u`, `v`[, `w`])
+    * arrives in three micro-batches ([[stageEdgeThirds]]); each trigger
+    * anti-joins its batch against the archived edges (replay guard: a
+    * redelivered batch folds an EMPTY delta, touching nothing), lets
+    * `fold(session, labels, kept, archive, delta)` return the updated
+    * `kept` table (of `keptSchema`) and CC labels, and publishes kept /
+    * labels / edges under `<work>/<store>/{<kept>,labels,edges}/gen=<id>`.
+    * Returns the final `kept` generation. */
+  private def componentStream(s: SparkSession, work: Path, edges: DataFrame,
+      store: String, kept: String, keptSchema: String)(
+      fold: (SparkSession, DataFrame, DataFrame, DataFrame, DataFrame) =>
+        (DataFrame, DataFrame)): DataFrame = {
+    val in = stageEdgeThirds(work, edges)
+    val root = work.resolve(store).toString
+    val edgeCols = edges.columns.toSeq
+    val edgeSchema = edgeCols.map(c => s"$c LONG").mkString(", ")
+    foldStream(s, work, edges.schema, in) { (sb, batch, id) =>
+      val archive = genBefore(sb, s"$root/edges", id, edgeSchema)
+      val labels = genBefore(sb, s"$root/labels", id, "n LONG, lab LONG")
+      val prev = genBefore(sb, s"$root/$kept", id, keptSchema)
+      // Replay guard: only never-archived edges form the delta.
+      val delta = batch.select(edgeCols.map(col): _*)
+        .join(archive, Seq("u", "v"), "left_anti")
+      val (updated, newLabels) = fold(sb, labels, prev, archive, delta)
+      updated.write.mode("overwrite").parquet(s"$root/$kept/gen=$id")
+      newLabels.select(col("n"), col("lab"))
+        .write.mode("overwrite").parquet(s"$root/labels/gen=$id")
+      archive.unionByName(delta)
+        .write.mode("overwrite").parquet(s"$root/edges/gen=$id")
+    }
+    genBefore(s, s"$root/$kept", Long.MaxValue, keptSchema)
   }
 
   /** q411: COMPONENT-GRAIN 3-core maintained BY THE STREAM — q407's
@@ -2212,55 +1902,16 @@ object StreamGate {
     * (an edge arriving in trigger 3 evicting nodes settled in trigger
     * 1) is exactly what the component-grain recompute handles — the
     * final store answers the FROM-SCRATCH full-graph 3-core oracle. */
-  val q411StreamCore3Maintain: Q = Q(
+  val q411StreamCore3Maintain: Q = gate(
     "q411_stream_core3_maintain",
-    graft.ops.Round14.q407Core3Incremental.oracle.get) { (s, dir) =>
-    val work = Files.createTempDirectory("graft-q411-")
-    // Persist before staging: the three filtered batch writes otherwise
-    // re-run the lineitem self-join + support aggregate once EACH.
-    val e0 = graft.ops.Graph.supportedEdges(s, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val in = stageOrderedBatches(work,
-      Seq(0, 1, 2).map(r => e0.filter((col("u") + col("v")) % 3 === r)))
-    e0.unpersist()
-    val store = work.resolve("core3").toString
-    val ss = streamSession(s)
-    val query = ss.readStream.schema(e0.schema)
-      .option("maxFilesPerTrigger", "1").parquet(in.toString)
-      .writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-          val sb = batch.sparkSession
-          val archive = latestGenBefore(sb, s"$store/edges", id).getOrElse(
-            sb.range(0).select(col("id").as("u"), col("id").as("v")))
-          val labels = latestGenBefore(sb, s"$store/labels", id).getOrElse(
-            sb.range(0).select(col("id").as("n"), col("id").as("lab")))
-          val core = latestGenBefore(sb, s"$store/core", id).getOrElse(
-            sb.range(0).select(col("id").as("n"),
-              (col("id") =!= col("id")).as("in_core3")))
-          // Replay guard: only never-archived edges form the delta.
-          val delta = batch.toDF().select(col("u"), col("v"))
-            .join(archive, Seq("u", "v"), "left_anti")
-          val (updated, newLabels, _) =
-            graft.ops.Round14.core3ComponentFold(
-              sb, labels, core, archive, delta)
-          updated.write.mode("overwrite").parquet(s"$store/core/gen=$id")
-          newLabels.select(col("n"), col("lab"))
-            .write.mode("overwrite").parquet(s"$store/labels/gen=$id")
-          archive.unionByName(delta)
-            .write.mode("overwrite").parquet(s"$store/edges/gen=$id")
-          ()
-      }
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    graft.PlanProbe.recordStreaming(query)
-    dropStagedInput(work)
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(work.toFile)
-    latestGenBefore(s, s"$store/core", Long.MaxValue)
-      .getOrElse(s.range(0).select(col("id").as("n"),
-        (col("id") =!= col("id")).as("in_core3")))
+    graft.ops.Round14.q407Core3Incremental.oracle.get) { (s, dir, work) =>
+    componentStream(s, work, graft.ops.Graph.supportedEdges(s, dir),
+        "core3", "core", "n LONG, in_core3 BOOLEAN") {
+      (sb, labels, core, archive, delta) =>
+        val (updated, newLabels, _) =
+          graft.ops.Round14.core3ComponentFold(sb, labels, core, archive, delta)
+        (updated, newLabels)
+    }
       .select(col("n"), col("in_core3"))
       .orderBy(col("n"))
   }
@@ -2282,52 +1933,16 @@ object StreamGate {
     * r13 warm-start finding: resuming rounds from stored labels changes
     * the dynamics; untouched components instead REPLAY identically).
     * The final store answers q412's from-scratch full-graph oracle. */
-  val q419StreamLpaMaintain: Q = Q(
+  val q419StreamLpaMaintain: Q = gate(
     "q419_stream_lpa_maintain",
-    graft.ops.Round14.q412LpaIncremental.oracle.get) { (s, dir) =>
-    val work = Files.createTempDirectory("graft-q419-")
-    // Persist before staging (same rationale as q411): three batch
-    // writes must not re-run the support join three times.
-    val e0 = graft.ops.Graph.supportedEdges(s, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val in = stageOrderedBatches(work,
-      Seq(0, 1, 2).map(r => e0.filter((col("u") + col("v")) % 3 === r)))
-    e0.unpersist()
-    val store = work.resolve("lpa").toString
-    val ss = streamSession(s)
-    val query = ss.readStream.schema(e0.schema)
-      .option("maxFilesPerTrigger", "1").parquet(in.toString)
-      .writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-          val sb = batch.sparkSession
-          val archive = latestGenBefore(sb, s"$store/edges", id).getOrElse(
-            sb.range(0).select(col("id").as("u"), col("id").as("v")))
-          val labels = latestGenBefore(sb, s"$store/labels", id).getOrElse(
-            sb.range(0).select(col("id").as("n"), col("id").as("lab")))
-          val lpa = latestGenBefore(sb, s"$store/lpalbl", id).getOrElse(
-            sb.range(0).select(col("id").as("n"), col("id").as("lbl")))
-          // Replay guard: only never-archived edges form the delta.
-          val delta = batch.toDF().select(col("u"), col("v"))
-            .join(archive, Seq("u", "v"), "left_anti")
-          val (updated, newLabels, _) = graft.ops.Round14.componentFold(
-            labels, lpa, archive, delta)(graft.ops.Round14.lpa4)
-          updated.write.mode("overwrite").parquet(s"$store/lpalbl/gen=$id")
-          newLabels.select(col("n"), col("lab"))
-            .write.mode("overwrite").parquet(s"$store/labels/gen=$id")
-          archive.unionByName(delta)
-            .write.mode("overwrite").parquet(s"$store/edges/gen=$id")
-          ()
-      }
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    graft.PlanProbe.recordStreaming(query)
-    dropStagedInput(work)
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(work.toFile)
-    latestGenBefore(s, s"$store/lpalbl", Long.MaxValue)
-      .getOrElse(s.range(0).select(col("id").as("n"), col("id").as("lbl")))
+    graft.ops.Round14.q412LpaIncremental.oracle.get) { (s, dir, work) =>
+    componentStream(s, work, graft.ops.Graph.supportedEdges(s, dir),
+        "lpa", "lpalbl", "n LONG, lbl LONG") {
+      (_, labels, lpa, archive, delta) =>
+        val (updated, newLabels, _) = graft.ops.Round14.componentFold(
+          labels, lpa, archive, delta)(graft.ops.Round14.lpa4)
+        (updated, newLabels)
+    }
       .select(col("n"), col("lbl"))
       .orderBy(col("n"))
   }
@@ -2345,10 +1960,9 @@ object StreamGate {
     * trigger grain), passes untouched components' forest rows through,
     * and publishes edges / CC labels / forest under `gen=<id>`. The
     * final store answers q420's from-scratch full-graph oracle. */
-  val q424StreamMsfMaintain: Q = Q(
+  val q424StreamMsfMaintain: Q = gate(
     "q424_stream_msf_maintain",
-    graft.ops.Round15.q420BoruvkaMsf.oracle.get) { (s, dir) =>
-    val work = Files.createTempDirectory("graft-q424-")
+    graft.ops.Round15.q420BoruvkaMsf.oracle.get) { (s, dir, work) =>
     val lp = Tables(s, dir, "lineitem")
       .select(col("l_orderkey"), col("l_partkey")).distinct()
     val e0 = lp.as("l1").join(lp.as("l2"),
@@ -2357,52 +1971,13 @@ object StreamGate {
       .groupBy(col("l1.l_partkey").as("u"), col("l2.l_partkey").as("v"))
       .agg(count(lit(1)).as("w"))
       .filter(col("w") >= 2)
-      // Persist before staging (q411's rationale): three batch writes
-      // must not re-run the weighted co-purchase join three times.
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val in = stageOrderedBatches(work,
-      Seq(0, 1, 2).map(r => e0.filter((col("u") + col("v")) % 3 === r)))
-    e0.unpersist()
-    val store = work.resolve("msf").toString
-    val ss = streamSession(s)
-    val query = ss.readStream.schema(e0.schema)
-      .option("maxFilesPerTrigger", "1").parquet(in.toString)
-      .writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-          val sb = batch.sparkSession
-          val archive = latestGenBefore(sb, s"$store/edges", id).getOrElse(
-            sb.range(0).select(col("id").as("u"), col("id").as("v"),
-              col("id").as("w")))
-          val labels = latestGenBefore(sb, s"$store/labels", id).getOrElse(
-            sb.range(0).select(col("id").as("n"), col("id").as("lab")))
-          val forest = latestGenBefore(sb, s"$store/forest", id).getOrElse(
-            sb.range(0).select(col("id").as("u"), col("id").as("v"),
-              col("id").as("w")))
-          // Replay guard: only never-archived edges form the delta.
-          val delta = batch.toDF().select(col("u"), col("v"), col("w"))
-            .join(archive, Seq("u", "v"), "left_anti")
-          val (updated, newLabels, _) =
-            graft.ops.Round14.componentFoldEdges(
-              labels, forest, archive, delta)(
-              te => graft.ops.Round15.boruvkaTiered(sb, te))
-          updated.write.mode("overwrite").parquet(s"$store/forest/gen=$id")
-          newLabels.select(col("n"), col("lab"))
-            .write.mode("overwrite").parquet(s"$store/labels/gen=$id")
-          archive.unionByName(delta)
-            .write.mode("overwrite").parquet(s"$store/edges/gen=$id")
-          ()
-      }
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    graft.PlanProbe.recordStreaming(query)
-    dropStagedInput(work)
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(work.toFile)
-    latestGenBefore(s, s"$store/forest", Long.MaxValue)
-      .getOrElse(s.range(0).select(col("id").as("u"), col("id").as("v"),
-        col("id").as("w")))
+    componentStream(s, work, e0, "msf", "forest", "u LONG, v LONG, w LONG") {
+      (sb, labels, forest, archive, delta) =>
+        val (updated, newLabels, _) =
+          graft.ops.Round14.componentFoldEdges(labels, forest, archive, delta)(
+            te => graft.ops.Round15.boruvkaTiered(sb, te))
+        (updated, newLabels)
+    }
       .select(col("u"), col("v"), col("w"))
       .orderBy(col("u"), col("v"))
   }
@@ -2421,40 +1996,22 @@ object StreamGate {
     * batches, exercising exactly that idempotence); each trigger ORs
     * its batch's key bits into the store; the final packed-word
     * surface answers q425's global one-pass oracle. */
-  val q427StreamBloomMaintain: Q = Q(
+  val q427StreamBloomMaintain: Q = gate(
     "q427_stream_bloom_maintain",
-    graft.ops.Round15.q425BloomRegisters.oracle.get) { (s, dir) =>
-    val work = Files.createTempDirectory("graft-q427-")
+    graft.ops.Round15.q425BloomRegisters.oracle.get) { (s, dir, work) =>
     val orders = Tables(s, dir, "orders")
       .filter(year(col("o_orderdate")) === 1995)
     val in = stageOrderedBatches(work,
       Seq(0, 1, 2).map(r => orders.filter(col("o_orderkey") % 3 === r)))
     val store = work.resolve("bloom").toString
-    val ss = streamSession(s)
-    val query = ss.readStream.schema(orders.schema)
-      .option("maxFilesPerTrigger", "1").parquet(in.toString)
-      .writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-          val sb = batch.sparkSession
-          val prev = latestGenBefore(sb, store, id).getOrElse(
-            sb.range(0).select(col("id").as("bit")))
-          graft.ops.Round15.bloomBits(batch.toDF()
-            .select(col("o_custkey").cast("string").as("k")).distinct())
-            .unionByName(prev).distinct()
-            .write.mode("overwrite").parquet(s"$store/gen=$id")
-          ()
-      }
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    graft.PlanProbe.recordStreaming(query)
-    dropStagedInput(work)
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(work.toFile)
-    graft.ops.Round15.bloomWords(s,
-      latestGenBefore(s, store, Long.MaxValue).getOrElse(
-        s.range(0).select(col("id").as("bit"))))
+    foldStream(s, work, orders.schema, in) { (sb, batch, id) =>
+      val prev = genBefore(sb, store, id, "bit LONG")
+      graft.ops.Round15.bloomBits(batch
+        .select(col("o_custkey").cast("string").as("k")).distinct())
+        .unionByName(prev).distinct()
+        .write.mode("overwrite").parquet(s"$store/gen=$id")
+    }
+    graft.ops.Round15.bloomWords(s, genBefore(s, store, Long.MaxValue, "bit LONG"))
   }
 
   /** q435: STREAMING CDC chunk-index maintenance — q430's chunk store
@@ -2470,42 +2027,23 @@ object StreamGate {
     * batch re-reads gen=<id−1> and overwrites its own generation). The
     * final store answers q430's from-scratch oracle: top-10 shared
     * chunks + corpus totals. */
-  val q435StreamCdcMaintain: Q = Q(
+  val q435StreamCdcMaintain: Q = gate(
     "q435_stream_cdc_maintain",
-    graft.ops.Round15.q430CdcChunks.oracle.get) { (s, dir) =>
-    val work = Files.createTempDirectory("graft-q435-")
+    graft.ops.Round15.q430CdcChunks.oracle.get) { (s, dir, work) =>
     val docs = Tables(s, dir, "documents")
     val in = stageOrderedBatches(work,
       Seq(0, 1, 2).map(r => docs.filter(col("doc_id") % 3 === r)))
     val store = work.resolve("cdc").toString
-    val ss = streamSession(s)
-    val query = ss.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(in.toString)
-      .writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-          val sb = batch.sparkSession
-          val prev = latestGenBefore(sb, store, id).getOrElse(
-            sb.range(0).select(lit("").as("h"), col("id").as("n_docs"),
-              col("id").as("n_occ"), col("id").as("clen")))
-          graft.ops.Round15.cdcCounts(batch.toDF())
-            .unionByName(prev)
-            .groupBy(col("h")).agg(sum(col("n_docs")).as("n_docs"),
-              sum(col("n_occ")).as("n_occ"), max(col("clen")).as("clen"))
-            .write.mode("overwrite").parquet(s"$store/gen=$id")
-          ()
-      }
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    graft.PlanProbe.recordStreaming(query)
-    dropStagedInput(work)
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(work.toFile)
-    val ch = latestGenBefore(s, store, Long.MaxValue).getOrElse(
-      s.range(0).select(lit("").as("h"), col("id").as("n_docs"),
-        col("id").as("n_occ"), col("id").as("clen")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val chunks = "h STRING, n_docs LONG, n_occ LONG, clen LONG"
+    foldStream(s, work, docs.schema, in) { (sb, batch, id) =>
+      val prev = genBefore(sb, store, id, chunks)
+      graft.ops.Round15.cdcCounts(batch)
+        .unionByName(prev)
+        .groupBy(col("h")).agg(sum(col("n_docs")).as("n_docs"),
+          sum(col("n_occ")).as("n_occ"), max(col("clen")).as("clen"))
+        .write.mode("overwrite").parquet(s"$store/gen=$id")
+    }
+    val ch = genBefore(s, store, Long.MaxValue, chunks).persist(MEMORY_AND_DISK)
     val tot = ch.agg(sum(col("n_occ")).as("total_chunks"),
       count(lit(1)).as("distinct_chunks"))
       .select(coalesce(col("total_chunks"), lit(0L)).as("total_chunks"),
@@ -2539,66 +2077,46 @@ object StreamGate {
     * Scale shape: per trigger two label-table hash joins at batch-edge
     * grain and one community-grain fold; the store never exceeds
     * #communities rows. */
-  val q444StreamCommunityMaintain: Q = Q(
+  val q444StreamCommunityMaintain: Q = gate(
     "q444_stream_community_maintain",
-    graft.ops.Round15b.q436Modularity.oracle.get) { (s, dir) =>
-    val work = Files.createTempDirectory("graft-q444-")
+    graft.ops.Round15b.q436Modularity.oracle.get) { (s, dir, work) =>
     val e = graft.ops.Round15.weightedEdges(s, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(MEMORY_AND_DISK)
     val labelsPath = work.resolve("labels").toString
     graft.ops.Round15.wlpa4(e).write.mode("overwrite").parquet(labelsPath)
     val in = stageOrderedBatches(work,
       Seq(0, 1, 2).map(r => e.filter((col("u") + col("v")) % 3 === r)))
     val store = work.resolve("comm").toString
-    val ss = streamSession(s)
-    val query = ss.readStream.schema(e.schema)
-      .option("maxFilesPerTrigger", "1").parquet(in.toString)
-      .writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-          val sb = batch.sparkSession
-          val lab = sb.read.parquet(labelsPath)
-          val b = batch.toDF()
-            .join(lab.select(col("n").as("un"), col("lbl").as("lu")),
-              col("u") === col("un"))
-            .join(lab.select(col("n").as("vn"), col("lbl").as("lv")),
-              col("v") === col("vn"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          val degP = b.select(col("lu").as("lbl"), col("w"))
-            .unionAll(b.select(col("lv").as("lbl"), col("w")))
-            .groupBy(col("lbl"))
-            .agg(sum(col("w")).cast("long").as("deg_w"))
-            .select(col("lbl"), lit(0L).as("in_w"), col("deg_w"))
-          val inP = b.filter(col("lu") === col("lv"))
-            .groupBy(col("lu").as("lbl"))
-            .agg(sum(col("w")).cast("long").as("in_w"))
-            .select(col("lbl"), col("in_w"), lit(0L).as("deg_w"))
-          val prev = latestGenBefore(sb, store, id).getOrElse(
-            sb.range(0).select(col("id").as("lbl"), col("id").as("in_w"),
-              col("id").as("deg_w")))
-          degP.unionByName(inP).unionByName(prev)
-            .groupBy(col("lbl"))
-            .agg(sum(col("in_w")).cast("long").as("in_w"),
-              sum(col("deg_w")).cast("long").as("deg_w"))
-            .write.mode("overwrite").parquet(s"$store/gen=$id")
-          ()
-      }
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    graft.PlanProbe.recordStreaming(query)
-    dropStagedInput(work)
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(work.toFile)
-    val st = latestGenBefore(s, store, Long.MaxValue).getOrElse(
-      s.range(0).select(col("id").as("lbl"), col("id").as("in_w"),
-        col("id").as("deg_w")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val stats = "lbl LONG, in_w LONG, deg_w LONG"
+    foldStream(s, work, e.schema, in) { (sb, batch, id) =>
+      val lab = sb.read.parquet(labelsPath)
+      val b = batch
+        .join(lab.select(col("n").as("un"), col("lbl").as("lu")),
+          col("u") === col("un"))
+        .join(lab.select(col("n").as("vn"), col("lbl").as("lv")),
+          col("v") === col("vn"))
+        .persist(MEMORY_AND_DISK)
+      val degP = b.select(col("lu").as("lbl"), col("w"))
+        .unionAll(b.select(col("lv").as("lbl"), col("w")))
+        .groupBy(col("lbl"))
+        .agg(sum(col("w")).cast("long").as("deg_w"))
+        .select(col("lbl"), lit(0L).as("in_w"), col("deg_w"))
+      val inP = b.filter(col("lu") === col("lv"))
+        .groupBy(col("lu").as("lbl"))
+        .agg(sum(col("w")).cast("long").as("in_w"))
+        .select(col("lbl"), col("in_w"), lit(0L).as("deg_w"))
+      val prev = genBefore(sb, store, id, stats)
+      degP.unionByName(inP).unionByName(prev)
+        .groupBy(col("lbl"))
+        .agg(sum(col("in_w")).cast("long").as("in_w"),
+          sum(col("deg_w")).cast("long").as("deg_w"))
+        .write.mode("overwrite").parquet(s"$store/gen=$id")
+    }
+    val st = genBefore(s, store, Long.MaxValue, stats).persist(MEMORY_AND_DISK)
     val ww = st.agg(coalesce(sum(col("deg_w")), lit(0L)).cast("long"))
       .head.getLong(0) / 2L
     if (ww == 0L)
-      s.range(0).select(col("id").as("community"), col("id").as("n_nodes"),
-        col("id").as("in_w"), col("id").as("deg_w"), col("id").as("q_ppm"))
+      emptyFrame(s, "community LONG, n_nodes LONG, in_w LONG, deg_w LONG, q_ppm LONG")
     else {
       val nn = s.read.parquet(labelsPath).groupBy(col("lbl"))
         .agg(count(lit(1)).as("n_nodes"))
@@ -2628,10 +2146,9 @@ object StreamGate {
     * pair expansion for THAT batch's customers only, one additive
     * (u, v) fold; the heavy kernel runs once at read, not per trigger.
     */
-  val q453StreamSeqGraphMaintain: Q = Q(
+  val q453StreamSeqGraphMaintain: Q = gate(
     "q453_stream_seq_graph",
-    graft.ops.Round15b.q448Scc.oracle.get) { (s, dir) =>
-    val work = Files.createTempDirectory("graft-q453-")
+    graft.ops.Round15b.q448Scc.oracle.get) { (s, dir, work) =>
     val orders = Tables(s, dir, "orders")
       .select(col("o_custkey"), col("o_orderkey"), col("o_orderdate"))
     val lpPath = work.resolve("lp").toString
@@ -2641,50 +2158,29 @@ object StreamGate {
     val in = stageOrderedBatches(work,
       Seq(0, 1, 2).map(r => orders.filter(col("o_custkey") % 3 === r)))
     val store = work.resolve("seq").toString
-    val ss = streamSession(s)
-    val query = ss.readStream.schema(orders.schema)
-      .option("maxFilesPerTrigger", "1").parquet(in.toString)
-      .writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-          val sb = batch.sparkSession
-          val lp = sb.read.parquet(lpPath)
-          val o = batch.toDF().withColumn("rk",
-            org.apache.spark.sql.functions.row_number().over(
-              org.apache.spark.sql.expressions.Window
-                .partitionBy(col("o_custkey"))
-                .orderBy(col("o_orderdate"), col("o_orderkey"))))
-          val cp = o.as("a").join(o.as("b"),
-              col("b.o_custkey") === col("a.o_custkey") &&
-                col("b.rk") === col("a.rk") + 1)
-            .select(col("a.o_orderkey").as("k1"),
-              col("b.o_orderkey").as("k2"))
-          val part = cp
-            .join(lp.as("p1"), col("p1.l_orderkey") === col("k1"))
-            .join(lp.as("p2"), col("p2.l_orderkey") === col("k2"))
-            .filter(col("p1.l_partkey") =!= col("p2.l_partkey"))
-            .groupBy(col("p1.l_partkey").as("u"),
-              col("p2.l_partkey").as("v"))
-            .agg(count(lit(1)).as("w"))
-          val prev = latestGenBefore(sb, store, id).getOrElse(
-            sb.range(0).select(col("id").as("u"), col("id").as("v"),
-              col("id").as("w")))
-          part.unionByName(prev)
-            .groupBy(col("u"), col("v"))
-            .agg(sum(col("w")).cast("long").as("w"))
-            .write.mode("overwrite").parquet(s"$store/gen=$id")
-          ()
-      }
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    graft.PlanProbe.recordStreaming(query)
-    dropStagedInput(work)
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(work.toFile)
-    val folded = latestGenBefore(s, store, Long.MaxValue).getOrElse(
-      s.range(0).select(col("id").as("u"), col("id").as("v"),
-        col("id").as("w")))
+    foldStream(s, work, orders.schema, in) { (sb, batch, id) =>
+      val lp = sb.read.parquet(lpPath)
+      val o = batch.withColumn("rk", row_number().over(
+        Window.partitionBy(col("o_custkey"))
+          .orderBy(col("o_orderdate"), col("o_orderkey"))))
+      val cp = o.as("a").join(o.as("b"),
+          col("b.o_custkey") === col("a.o_custkey") &&
+            col("b.rk") === col("a.rk") + 1)
+        .select(col("a.o_orderkey").as("k1"),
+          col("b.o_orderkey").as("k2"))
+      val part = cp
+        .join(lp.as("p1"), col("p1.l_orderkey") === col("k1"))
+        .join(lp.as("p2"), col("p2.l_orderkey") === col("k2"))
+        .filter(col("p1.l_partkey") =!= col("p2.l_partkey"))
+        .groupBy(col("p1.l_partkey").as("u"),
+          col("p2.l_partkey").as("v"))
+        .agg(count(lit(1)).as("w"))
+      part.unionByName(genBefore(sb, store, id, "u LONG, v LONG, w LONG"))
+        .groupBy(col("u"), col("v"))
+        .agg(sum(col("w")).cast("long").as("w"))
+        .write.mode("overwrite").parquet(s"$store/gen=$id")
+    }
+    val folded = genBefore(s, store, Long.MaxValue, "u LONG, v LONG, w LONG")
     graft.ops.Round15b.sccLabels(s,
         folded.filter(col("w") >= 2).select(col("u"), col("v")))
       .select(col("n"), col("scc_id")).orderBy(col("n"))
@@ -2699,35 +2195,20 @@ object StreamGate {
     * byte-equal to q389's one-pass batch top-32 over the whole corpus.
     * This is exactly how a 1000-executor weighted sampler folds: bounded
     * per-shard state, one tiny final merge. */
-  val q393StreamWeightedSample: Q = Q(
+  val q393StreamWeightedSample: Q = gate(
     "q393_stream_weighted_sample",
-    graft.ops.Round12.q389WeightedSample.oracle.get) { (s, dir) =>
-    val work = Files.createTempDirectory("graft-q393-")
+    graft.ops.Round12.q389WeightedSample.oracle.get) { (s, dir, work) =>
     val docs = Tables(s, dir, "documents")
     val in = stageParityBatches(work, docs, "doc_id")
     val store = work.resolve("aes").toString
-    val ss = streamSession(s)
-    val query = ss.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(in.toString)
-      .writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-          graft.ops.Round12.aesTop32(
-            graft.ops.Round12.aesPriorities(batch.toDF()))
-            .write.mode("overwrite").parquet(s"$store/batch=$id")
-          ()
-      }
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    graft.PlanProbe.recordStreaming(query)
-    dropStagedInput(work)
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(work.toFile)
+    foldStream(s, work, docs.schema, in) { (_, batch, id) =>
+      graft.ops.Round12.aesTop32(
+        graft.ops.Round12.aesPriorities(batch))
+        .write.mode("overwrite").parquet(s"$store/batch=$id")
+    }
     graft.ops.Round12.aesTop32(
       committedBatchesBefore(s, store, Long.MaxValue,
-        s.range(0).select(col("id").as("pos"), col("id").as("doc_id"),
-          col("id").as("n_chars"), col("id").as("prio_nano")))
+        emptyFrame(s, "pos LONG, doc_id LONG, n_chars LONG, prio_nano LONG"))
         .select(col("doc_id"), col("n_chars"), col("prio_nano")))
   }
 

@@ -135,9 +135,8 @@ class SideEffectPlanAuditSpec extends SparkSpec {
     frames.map { case (name, frame) => name -> ResultDigest.of(frame) }.toMap
   }
 
-  /** Golden results at sf0.001, one digest per gate, recorded before the
-    * stream-run helpers were factored out of the gates. Every gate gave the
-    * same digest in two separate runs, so none is left out. */
+  /** Golden results at sf0.001, one digest per gate. Every gate gave the
+    * same digest in two separate runs, so none is exempt. */
   private val golden: Map[String, String] = Map(
     "q100_ann_incremental" -> "30:-18859429106593029172",
     "q103_stream_ann_ingest" -> "30:-18859429106593029172",
