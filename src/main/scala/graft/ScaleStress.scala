@@ -376,7 +376,7 @@ object ScaleStress {
     val workDir = args(1)
     val outJson = if (args.length > 2) args(2) else "BENCH_scale.json"
     val mults = Seq(1, 3, 10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -61,10 +61,18 @@ object Pipeline {
 
   /** E1/E2 with the S8 sink: write each table as parquet under outDir.
     * (The reference's one-transaction-per-repo atomicity is subsumed by
-    * Spark's output-commit protocol per table — SURVEY §2.6 U6.) */
+    * Spark's output-commit protocol per table — SURVEY §2.6 U6.) A root
+    * manifest left by an earlier [[etlAppend]] into outDir is deleted
+    * first: it lives outside the table dirs, so it would outlive their
+    * overwrite and name files that no longer exist. */
   def etl(spark: SparkSession, repoPaths: Seq[String], outDir: String,
       authorGate: Option[String] = None): Result = {
     val r = build(spark, repoPaths, authorGate)
+    val base = new Path(outDir)
+    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(base))
+      fs.listStatus(base).map(_.getPath)
+        .filter(_.getName.startsWith(ManifestPrefix)).foreach(fs.delete(_, false))
     r.commits.write.mode("overwrite").parquet(s"$outDir/commits")
     r.authors.write.mode("overwrite").parquet(s"$outDir/authors")
     r.fileChanges.write.mode("overwrite").parquet(s"$outDir/file_changes")
@@ -78,26 +86,19 @@ object Pipeline {
   /** Cross-run incremental mode (U1–U5 across successive runs): the
     * reference appends every run into the same SQLite file, so each load is
     * a keyed upsert against the cumulative table (src/database.ts:21-36,
-    * 85-95, 109-117, 148-151, 228-236).
+    * 85-95, 109-117, 148-151, 228-236), and ONE transaction covers all five
+    * loads of a run (transactions.ts:43-56).
     *
     * The four repo-scoped tables (commits, file_changes, tags, repos) are
     * stored PARTITIONED by repo: a run merges only the partitions of the
-    * repos it touched — the previous store is read partition-pruned to the
-    * touched set, merged with that table's reference conflict semantics,
-    * staged, and published with a MANIFEST COMMIT: data files are immutable
-    * and uniquely named, the staged files are moved into the live partition
-    * dirs, and a `_manifest-<seq>` file (one atomic rename) becomes the new
-    * snapshot definition. Readers resolve the manifest ([[readSnapshot]]),
-    * so staging, file moves, and crashes mid-publish are all invisible —
-    * there is no retire→promote instant in which a listing reader can see a
-    * partial table, and nothing relies on atomic DIRECTORY renames (which
-    * object stores don't have; a one-file rename-or-put is the only
-    * atomicity this needs). A publish that dies before its manifest commit
-    * leaves only unreferenced files; the next run deletes everything the
-    * committed manifest doesn't reference and proceeds. Untouched repos'
-    * files are never read, rewritten, or even listed: merge cost is
+    * repos it touched — the committed snapshot is read partition-pruned to
+    * the touched set, merged with that table's reference conflict
+    * semantics, staged, and moved into the live partition dirs. Untouched
+    * repos' files are never read, rewritten, or even listed: merge cost is
     * proportional to the run's output, not the archive — at 100 TB this is
     * the difference between an incremental publish and a full rewrite.
+    * All five tables then commit together as ONE store manifest (see the
+    * protocol block below), the analogue of the reference's transaction.
     *
     * `authors` is the one table that CANNOT be repo-partitioned: its key
     * is email and its counts accumulate ACROSS repos (database.ts:109-117),
@@ -117,333 +118,82 @@ object Pipeline {
   private[git] def etlAppendStaged(spark: SparkSession, repoPaths: Seq[String],
       outDir: String, authorGate: Option[String],
       step: String => Unit): Unit = {
-    val base = new Path(outDir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // Writer lease on the store ROOT (the same `_maintenance.lease`
-    // protocol the index-maintenance tiers use): a second concurrent
-    // writer is rejected AT ACQUIRE, before it can touch any state — in
-    // particular before its entry rollback could delete this run's
-    // still-uncommitted per-table manifests, which would leave this run's
-    // store-manifest flip naming manifests that no longer exist. A killed
-    // writer's lease is taken over after the TTL; the flip below re-checks
-    // ownership (and CASes on the captured store seq) so a stalled
-    // original can never commit over the takeover's generation.
-    graft.ops.GenStore.withLease(fs, base) { lease =>
-    val r = build(spark, repoPaths, authorGate)
-    // U6 crash rollback: the window between a per-table manifest commit
-    // and the store-manifest flip is NOT idempotent for every table —
-    // authors' counts ADD on merge, so a rerun that merged on top of a
-    // crashed run's committed-but-never-store-visible authors manifest
-    // would double-count the aborted run (the reference's single SQLite
-    // transaction rolls that increment back, transactions.ts:43-56).
-    // Re-anchor every table to the generation the latest store manifest
-    // names before merging anything.
-    val baseSeq = rollbackToStoreGeneration(fs, base, outDir)
-    step("after:rollback")
-    val pubs = scala.collection.mutable.ListBuffer[(String, Publish)]()
-    def mergeWrite(table: String, incoming: DataFrame)(
-        merge: (DataFrame, DataFrame) => DataFrame): Unit = {
-      pubs += table -> publishWhole(spark, outDir, table, incoming,
-        deferGc = true)(merge)
-      step(s"after:$table")
+    // Built on first use, under the lease: a writer refused at acquire
+    // does no work.
+    lazy val r = build(spark, repoPaths, authorGate)
+    transact(spark, outDir, StoreTables) { committed =>
+      var snap = committed
+      def publish(table: String)(merge: Seq[String] => Seq[String]): Unit = {
+        snap = merge(snap)
+        step(s"after:$table")
+      }
+      // ON CONFLICT(repo_name, sha) DO UPDATE (database.ts:21-36)
+      publish("commits")(mergePartitioned(spark, outDir, _, "commits",
+        "repo_name", r.commits)(GitAgg.upsertLatest(_, _, Seq("repo_name", "sha"))))
+      // ON CONFLICT(email): counts add, dates min/max, new name wins (:109-117)
+      publish("authors")(mergeWhole(spark, outDir, _, "authors", r.authors)(
+        GitAgg.mergeAuthors))
+      // INSERT OR IGNORE (:148-151): stored row wins
+      publish("file_changes")(mergePartitioned(spark, outDir, _, "file_changes",
+        "repo_name", r.fileChanges)(
+        GitAgg.upsertKeepFirst(_, _, Seq("repo_name", "sha", "file_path"))))
+      // ON CONFLICT(repo_name, tag_name) DO UPDATE (:228-236)
+      publish("tags")(mergePartitioned(spark, outDir, _, "tags", "repo_name",
+        r.tags)(GitAgg.upsertLatest(_, _, Seq("repo_name", "tag_name"))))
+      // ON CONFLICT(name) DO UPDATE (:85-95)
+      publish("repos")(mergePartitioned(spark, outDir, _, "repos", "name",
+        r.repos)(GitAgg.upsertLatest(_, _, Seq("name"))))
+      step("before:flip")
+      snap
     }
-    def mergeWritePartitioned(table: String, partCol: String, incoming: DataFrame)(
-        merge: (DataFrame, DataFrame) => DataFrame): Unit = {
-      pubs += table -> publishPartitioned(spark, outDir, table, partCol,
-        incoming, deferGc = true)(merge)
-      step(s"after:$table")
-    }
-
-    // ON CONFLICT(repo_name, sha) DO UPDATE (database.ts:21-36)
-    mergeWritePartitioned("commits", "repo_name", r.commits)(
-      GitAgg.upsertLatest(_, _, Seq("repo_name", "sha")))
-    // ON CONFLICT(email): counts add, dates min/max, new name wins (:109-117)
-    mergeWrite("authors", r.authors)(GitAgg.mergeAuthors)
-    // INSERT OR IGNORE (:148-151): stored row wins
-    mergeWritePartitioned("file_changes", "repo_name", r.fileChanges)(
-      GitAgg.upsertKeepFirst(_, _, Seq("repo_name", "sha", "file_path")))
-    // ON CONFLICT(repo_name, tag_name) DO UPDATE (:228-236)
-    mergeWritePartitioned("tags", "repo_name", r.tags)(
-      GitAgg.upsertLatest(_, _, Seq("repo_name", "tag_name")))
-    // ON CONFLICT(name) DO UPDATE (:85-95)
-    mergeWritePartitioned("repos", "name", r.repos)(
-      GitAgg.upsertLatest(_, _, Seq("name")))
-
-    // U6 store-level atomicity (transactions.ts:43-56: ONE transaction per
-    // repo covers all five loads): the five per-table publishes above
-    // DEFERRED their generation GC, so every previous-generation data file
-    // and per-table manifest still exists. One atomic rename of the root
-    // store manifest — naming each table's newly committed per-table
-    // manifest — is the cross-table commit point: a [[readStoreSnapshot]]
-    // reader before the flip resolves ALL five tables at the previous
-    // generation (never commits without their file_changes), after it at
-    // the new one. Only then does the deferred GC drop what the previous
-    // store generation referenced; a crash anywhere before the flip leaves
-    // the previous store snapshot fully intact, and the next run's entry
-    // rollback discards the aborted per-table publishes before merging —
-    // so even the NON-idempotent authors merge (counts ADD) converges to
-    // exactly the committed runs' totals, matching the reference's
-    // transaction rollback.
-    step("before:flip")
-    // Flip guards, in order: (1) ownership re-check — a run that stalled
-    // past the lease TTL and was taken over must refuse to flip over the
-    // takeover's generation; (2) optimistic CAS — the flip commits at
-    // exactly entry-seq+1, so even with a broken lease a generation
-    // committed underneath makes this rename fail loudly instead of
-    // silently superseding it.
-    lease.checkOwned("store-manifest flip")
-    commitStoreManifest(fs, base, baseSeq + 1,
-      pubs.map { case (t, p) => t -> p.manifest }.toSeq)
     step("after:flip")
-    pubs.foreach(_._2.gc())
-
     // rejects are per-run diagnostics (no reference counterpart): overwrite
     r.rejects.write.mode("overwrite").parquet(s"$outDir/rejects")
     r.release()
-    }
   }
 
   /** The five store-committed tables, in publish order. */
   private[git] val StoreTables =
     Seq("commits", "authors", "file_changes", "tags", "repos")
 
-  /** Re-anchor every table to the committed store generation at run entry
-    * (crash recovery for the per-table-commit → store-flip window): per-
-    * table manifests NEWER than the one the latest store manifest names
-    * are a crashed (or concurrently-raced) run's uncommitted publishes —
-    * delete them and the data files only they reference, so the coming
-    * merges baseline on store-COMMITTED state (additive merges like
-    * authors' counts would otherwise double-count the aborted run). A
-    * store with no root manifest yet gets generation 0 committed first,
-    * pinning each table at its current baseline (an empty per-table
-    * manifest for fresh tables) — so even a crash mid-FIRST-run has a
-    * defined rollback point. A named manifest that no longer exists
-    * (pre-pinning compact, legacy store) rolls back nothing for that
-    * table — matching [[readStoreSnapshot]]'s documented fallback.
-    * Returns the committed store generation's seq; the flip commits at
-    * exactly seq+1. */
-  private def rollbackToStoreGeneration(fs: FileSystem, base: Path,
-      outDir: String): Long =
-    latestStoreManifest(fs, base) match {
-      case Some(sm) =>
-        readStoreManifest(fs, sm).foreach { case (t, mname) =>
-          val store = new Path(s"$outDir/$t")
-          val named = new Path(store, mname)
-          if (fs.exists(store) && fs.exists(named)) {
-            val keep = readManifest(fs, named).toSet
-            fs.listStatus(store).map(_.getPath)
-              .filter(p => p.getName.startsWith(ManifestPrefix) &&
-                manifestSeq(p.getName) > manifestSeq(mname))
-              .foreach { m =>
-                readManifest(fs, m).filterNot(keep).foreach { f =>
-                  val df = new Path(store, f)
-                  if (fs.exists(df)) fs.delete(df, false)
-                }
-                fs.delete(m, false)
-              }
-          }
-        }
-        storeManifestSeq(sm.getName)
-      case None =>
-        val entries = StoreTables.map { t =>
-          val store = new Path(s"$outDir/$t")
-          val (seq, _) = baselinedSnapshot(fs, store)
-          if (seq >= 0) t -> manifestName(seq)
-          else {
-            fs.mkdirs(store)
-            t -> commitManifest(fs, store, 0L, Nil)
-          }
-        }
-        commitStoreManifest(fs, base, 0L, entries)
-        0L
-    }
-
-  /** One per-table publish's outcome: the committed manifest's file name
-    * (what the store-level manifest records) and the deferred
-    * generation-GC thunk — pruning superseded per-table manifests and
-    * dropping the replaced generation's data files. Run immediately by
-    * standalone publishes; deferred until after the store-manifest flip by
-    * [[etlAppendStaged]], so the previous cross-table snapshot stays fully
-    * resolvable up to the flip. */
-  private[git] final case class Publish(manifest: String, gc: () => Unit)
-
-  /** Whole-table keyed merge publish (dimension tables): merge → stage →
-    * move files in → manifest commit → drop the replaced generation
-    * (immediately, or deferred to the returned thunk when `deferGc`). */
-  private[git] def publishWhole(spark: SparkSession, outDir: String,
-      table: String, incoming: DataFrame, deferGc: Boolean = false)(
-      merge: (DataFrame, DataFrame) => DataFrame): Publish = {
-    val path = new Path(s"$outDir/$table")
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverTable(fs, outDir, table)
-    val (seq, snap) = baselinedSnapshot(fs, path)
-    cleanJunk(fs, path, snap.toSet, Seq(""))
-    val merged =
-      if (snap.nonEmpty)
-        merge(spark.read.option("basePath", path.toString)
-          .parquet(snap.map(f => new Path(path, f).toString): _*), incoming)
-      else incoming
-    val staged = new Path(s"$outDir/.$table.__staged")
-    fs.delete(staged, true)
-    merged.write.mode("overwrite").parquet(staged.toString)
-    fs.mkdirs(path)
-    val moved = moveDataFiles(fs, staged, path)
-    fs.delete(staged, true)
-    val name = commitManifest(fs, path, seq + 1, moved)
-    val gc = () => {
-      pruneManifests(fs, path, seq + 1)
-      snap.foreach(f => fs.delete(new Path(path, f), false))
-    }
-    if (deferGc) Publish(name, gc) else { gc(); Publish(name, () => ()) }
-  }
-
-  /** Partitioned keyed merge publish (fact tables): prune the store read to
-    * the incoming batch's partitions via the manifest, merge, stage
-    * partitioned, move the staged files in, commit the manifest, then drop
-    * the replaced partitions' previous generation. */
-  private[git] def publishPartitioned(spark: SparkSession, outDir: String,
-      table: String, partCol: String, incoming: DataFrame,
-      deferGc: Boolean = false)(
-      merge: (DataFrame, DataFrame) => DataFrame): Publish = {
-    val store = new Path(s"$outDir/$table")
-    val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverTable(fs, outDir, table)
-    recoverPartitions(fs, store)
-    val (seq, snap) = baselinedSnapshot(fs, store)
-    // A store written by the old FLAT layout (or the empty-table marker)
-    // has data files at the root: those rows span ALL repos, so a pruned
-    // merge would lose the untouched ones when the root files are
-    // replaced. Migrate with one unpruned full merge; every later run is
-    // partition-pruned.
-    val flatData = snap.exists(!_.contains("/"))
-    // The touched-partition set is the run's repo list — a handful of
-    // names, driver-side by construction (not a data-volume collect).
-    // Lazy: the flat-migration branch merges unpruned and must not pay
-    // (or depend on) this job. Null partition values would silently miss
-    // the manifest prune and corrupt the merge — refuse them loudly.
-    // Dir names use Spark's own partition-path escaping, so the prune
-    // matches exactly what partitionBy wrote.
-    lazy val touched = {
-      val t = incoming.select(col(partCol)).distinct()
-        .collect().map(_.getString(0)).toSeq
-      require(!t.contains(null),
-        s"$table: null $partCol cannot be partition-merged")
-      t
-    }
-    lazy val touchedDirs = touched.map(v => s"$partCol=" +
-      org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(v))
-    // Junk scan scoped to the dirs this run writes: junk elsewhere is
-    // invisible to manifest readers and reaped by compact's full pass.
-    cleanJunk(fs, store, snap.toSet,
-      if (flatData || snap.isEmpty) Seq("") else touchedDirs)
-    val merged =
-      if (snap.nonEmpty) {
-        // The MANIFEST is the file listing: the store read enumerates
-        // exactly the committed snapshot's files for the touched
-        // partitions — no recursive directory listing of the archive,
-        // ever (the 100 TB cost a dir-based read would pay at plan
-        // time even with partition pruning). Explicit schema pins the
-        // partition column's type; values come from the dir names via
-        // basePath.
-        val files =
-          if (flatData) snap
-          else snap.filter(f => touchedDirs.contains(f.split('/').head))
-        if (files.isEmpty) incoming
-        else {
-          val existing = spark.read.schema(incoming.schema)
-            .option("basePath", store.toString)
-            .parquet(files.map(f => new Path(store, f).toString): _*)
-          merge(existing, incoming).select(incoming.columns.map(col): _*)
-        }
-      } else incoming
-    val staged = new Path(s"$outDir/.$table.__staged")
-    fs.delete(staged, true)
-    merged.write.mode("overwrite").partitionBy(partCol).parquet(staged.toString)
-    fs.mkdirs(store)
-    val partDirs = fs.listStatus(staged).filter(_.isDirectory)
-    if (partDirs.isEmpty) {
-      // Empty merged result (e.g. a run with no tags): a partitioned
-      // write emits no files, which would leave an unreadable empty dir.
-      // Keep the table readable with a flat empty-schema'd parquet —
-      // replaced by real partition dirs the first time any appear.
-      if (snap.isEmpty) {
-        fs.delete(staged, true)
-        merged.write.mode("overwrite").parquet(staged.toString)
-        val moved = moveDataFiles(fs, staged, store)
-        val name = commitManifest(fs, store, seq + 1, moved)
-        fs.delete(staged, true)
-        val gc = () => pruneManifests(fs, store, seq + 1)
-        if (deferGc) Publish(name, gc)
-        else { gc(); Publish(name, () => ()) }
-      } else {
-        // Nothing new and nothing merged: the committed snapshot stands.
-        // Guard the fresh-store degenerate (seq would be -1): every
-        // Publish must name a REAL manifest — a store-manifest entry that
-        // dangles would silently drop this table out of the cross-table
-        // generation pinning.
-        fs.delete(staged, true)
-        if (seq < 0) Publish(commitManifest(fs, store, 0L, Nil), () => ())
-        else Publish(manifestName(seq), () => ())
-      }
-    } else {
-      // Move each staged partition's files into the live partition dir
-      // (names are unique per write job — nothing is overwritten), then
-      // commit: untouched partitions keep their manifest entries; the
-      // replaced generation (all root files on the migration path) is
-      // dropped only after the new manifest is live.
-      val newEntries = partDirs.flatMap { p =>
-        val name = p.getPath.getName
-        val dest = new Path(store, name)
-        fs.mkdirs(dest)
-        moveDataFiles(fs, p.getPath, dest).map(f => s"$name/$f")
-      }.toSeq
-      val replacedTop = partDirs.map(_.getPath.getName).toSet
-      val dropped =
-        if (flatData) snap
-        else snap.filter(f => replacedTop.contains(f.split('/').head))
-      fs.delete(staged, true)
-      val name = commitManifest(fs, store, seq + 1, snap.diff(dropped) ++ newEntries)
-      val gc = () => {
-        pruneManifests(fs, store, seq + 1)
-        dropped.foreach(f => fs.delete(new Path(store, f), false))
-      }
-      if (deferGc) Publish(name, gc) else { gc(); Publish(name, () => ()) }
-    }
-  }
-
   // -----------------------------------------------------------------------
-  // Snapshot manifests — the commit protocol for the incremental store.
+  // The store manifest — the commit protocol of the incremental store.
   //
-  // A store's state is defined by its highest `_manifest-<seq>` file: a
-  // sorted list of store-relative data-file paths. Data files are immutable
-  // and uniquely named (Spark's per-job UUID part names), so a publish only
-  // ever ADDS files and then commits a new manifest with ONE atomic
-  // file rename — the only atomic primitive required, available on object
-  // stores where directory renames are not. Readers ([[readSnapshot]])
-  // resolve the manifest and read exactly its files: a concurrent publish's
-  // staging and file moves are invisible, and a crash before the commit
-  // leaves the previous snapshot untouched. Files the committed manifest
-  // does not reference are junk by definition and are deleted by the next
-  // writer. Underscore-prefixed names are ignored by Spark's file index, so
-  // the manifests are invisible to raw directory reads — and because the
-  // replaced generation is dropped as soon as the new manifest is live, an
-  // at-rest directory listing equals the manifest exactly (pre-manifest
-  // readers keep working). Single writer assumed (matching the reference's
-  // one-process model); a reader overlapping two publishes of the same
-  // partition should re-resolve the manifest or run with
-  // spark.sql.files.ignoreMissingFiles.
+  // Layout: `<outDir>/<table>/[<partdir>/]part-….parquet` data files, and
+  // at the root ONE `_store-manifest-<seq>` file listing every committed
+  // data file of every table as a root-relative path
+  // (`commits/repo_name=a/part-….parquet`), sorted. Data files are
+  // immutable and uniquely named (Spark's per-job UUID part names), so a
+  // writer only ever ADDS files before its commit.
+  //
+  // Commit point: [[transact]] commits the next manifest ONCE per write —
+  // all five tables of an [[etlAppend]] run, or one table of a [[compact]]
+  // or standalone publish, carrying every other table's entries forward —
+  // through `GenStore.commit` under the store-root writer lease: ownership
+  // re-check, then an atomic rename at exactly seq+1 (a seq committed
+  // underneath fails loudly). A one-file rename is the only atomicity
+  // needed, available on object stores where directory renames are not.
+  // [[readSnapshot]] resolves the manifest and reads exactly its files, so
+  // every table reads at the SAME committed write: staging, file moves and
+  // a run that is mid-publish are invisible (the reference's single SQLite
+  // transaction, transactions.ts:43-56).
+  //
+  // Crash residue: a writer that dies before the commit leaves only files
+  // the manifest does not name (plus dot-prefixed staging and tmp files)
+  // and the previous snapshot fully intact, so even the NON-idempotent
+  // authors merge (counts ADD) reruns from exactly the committed totals.
+  // The next writer deletes the unnamed files in the dirs it writes;
+  // [[compact]] scans every partition dir of its table.
+  //
+  // GC: right after the commit, the writer deletes the files the new
+  // manifest no longer names, so at rest a raw directory read of a table
+  // equals its manifest snapshot (underscore-prefixed manifests are
+  // invisible to Spark's file index). Single writer per store (the
+  // lease); a reader overlapping a later write's GC should re-resolve the
+  // manifest or run with spark.sql.files.ignoreMissingFiles.
   // -----------------------------------------------------------------------
 
-  private val ManifestPrefix = "_manifest-"
-
-  private def manifestSeq(name: String): Long =
-    name.stripPrefix(ManifestPrefix).toLong
-
-  private def latestManifest(fs: FileSystem, store: Path): Option[Path] =
-    if (!fs.exists(store)) None
-    else fs.listStatus(store).map(_.getPath)
-      .filter(_.getName.startsWith(ManifestPrefix))
-      .sortBy(p => manifestSeq(p.getName)).lastOption
+  private val ManifestPrefix = "_store-manifest-"
 
   private def readManifest(fs: FileSystem, m: Path): Seq[String] = {
     val in = fs.open(m)
@@ -452,45 +202,162 @@ object Pipeline {
     finally in.close()
   }
 
-  private def manifestName(seq: Long): String = f"$ManifestPrefix$seq%09d"
-
-  /** Write the next manifest: staged under a dot-tmp name (invisible,
-    * junk if orphaned), promoted by one atomic rename. Returns the
-    * committed manifest's file name. Superseded manifests are NOT pruned
-    * here — that is generation GC ([[pruneManifests]]), which
-    * [[etlAppendStaged]] defers until after the store-manifest flip so a
-    * cross-table reader can keep resolving the previous generation. */
-  private def commitManifest(fs: FileSystem, store: Path, seq: Long,
-      files: Seq[String]): String = {
-    val tmp = new Path(store, s".manifest-tmp-${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, true)
-    try out.write(files.sorted.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    val dest = new Path(store, manifestName(seq))
-    // Single-writer check: a dest that already exists means another writer
-    // committed this seq — fail rather than clobber (local-FS rename
-    // overwrites silently; on HDFS/object stores the rename itself fails).
-    require(!fs.exists(dest), s"concurrent publish detected: $dest exists")
-    require(fs.rename(tmp, dest), s"manifest commit failed at $dest")
-    dest.getName
+  /** `table`'s entries of a store snapshot (table-relative) and the rest. */
+  private def entriesOf(snap: Seq[String], table: String): (Seq[String], Seq[String]) = {
+    val (mine, others) = snap.partition(_.startsWith(s"$table/"))
+    (mine.map(_.stripPrefix(s"$table/")), others)
   }
 
-  /** Drop per-table manifests superseded by `seq` — the manifest half of
-    * generation GC. Idempotent; a crash that skips it leaves only stale
-    * manifests the next successful publish's GC prunes. */
-  private def pruneManifests(fs: FileSystem, store: Path, seq: Long): Unit =
-    fs.listStatus(store).map(_.getPath)
-      .filter(p => p.getName.startsWith(ManifestPrefix) &&
-        manifestSeq(p.getName) < seq)
-      .foreach(fs.delete(_, false))
+  /** The store's one write path. Under the store-root writer lease (the
+    * `_maintenance.lease` protocol of the index stores: a second writer
+    * is refused at acquire, a killed one is taken over after the TTL):
+    * recover `tables` from pre-manifest crash states, resolve the
+    * committed snapshot, hand it to `body`, commit what `body` returns as
+    * the next manifest, then delete the files it no longer names. A store
+    * without a manifest (plain [[etl]] output, or a fresh dir) is its own
+    * listing, committed as seq 0 before any file moves in — so from then
+    * on junk is always distinguishable from data, even after a crash
+    * mid-first-run. */
+  private def transact(spark: SparkSession, outDir: String, tables: Seq[String])(
+      body: Seq[String] => Seq[String]): Unit = {
+    val base = new Path(outDir)
+    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    graft.ops.GenStore.withLease(fs, base) { lease =>
+      def commit(seq: Long, files: Seq[String]): Unit =
+        graft.ops.GenStore.commit(fs, base, ManifestPrefix,
+          f"$ManifestPrefix$seq%09d", files.sorted.mkString("\n"), Some(lease))
+      tables.foreach(recoverRetired(fs, base, _))
+      val (seq, snap) = graft.ops.GenStore.latest(fs, base, ManifestPrefix) match {
+        case Some((seq, m)) => (seq, readManifest(fs, m))
+        case None =>
+          val files = (StoreTables ++ tables).distinct.flatMap(t =>
+            listDataFiles(fs, new Path(base, t)).map(f => s"$t/$f"))
+          commit(0L, files)
+          (0L, files)
+      }
+      // Orphaned manifest tmps and lease-takeover claims (no gen= dirs here).
+      graft.ops.GenStore.preClean(fs, base, ManifestPrefix, seq, Nil)
+      val next = body(snap)
+      if (next.toSet != snap.toSet) {
+        commit(seq + 1, next)
+        snap.diff(next).foreach(f => fs.delete(new Path(base, f), false))
+      }
+    }
+  }
 
-  /** Every data file under `store` (recursive), store-relative, skipping
-    * dot-prefixed staging/tmp subtrees. */
-  private def listDataFiles(fs: FileSystem, store: Path): Seq[String] = {
-    if (!fs.exists(store)) return Seq.empty
-    val base = fs.makeQualified(store).toString.stripSuffix("/") + "/"
+  /** Stage `write`'s output under `staged`, then move its data files into
+    * `dest` (names carry the writing job's UUID — collision-free by
+    * construction). Returns the moved files, `dest`-relative. */
+  private def stageInto(fs: FileSystem, staged: Path, dest: Path)(
+      write: String => Unit): Seq[String] = {
+    fs.delete(staged, true)
+    write(staged.toString)
+    val moved = listDataFiles(fs, staged).map { rel =>
+      val to = new Path(dest, rel)
+      fs.mkdirs(to.getParent)
+      require(fs.rename(new Path(staged, rel), to), s"publish move failed for $rel into $dest")
+      rel
+    }
+    fs.delete(staged, true)
+    moved
+  }
+
+  /** Whole-table keyed merge (dimension tables): merge the committed files
+    * with `incoming` and move the result in; returns `snap` with the
+    * table's entries replaced. */
+  private def mergeWhole(spark: SparkSession, outDir: String, snap: Seq[String],
+      table: String, incoming: DataFrame)(
+      merge: (DataFrame, DataFrame) => DataFrame): Seq[String] = {
+    val path = new Path(outDir, table)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (mine, others) = entriesOf(snap, table)
+    cleanJunk(fs, path, mine.toSet, Seq(""))
+    val merged =
+      if (mine.nonEmpty)
+        merge(spark.read.option("basePath", path.toString)
+          .parquet(mine.map(f => new Path(path, f).toString): _*), incoming)
+      else incoming
+    others ++ stageInto(fs, new Path(outDir, s".$table.__staged"), path)(
+      merged.write.mode("overwrite").parquet(_)).map(f => s"$table/$f")
+  }
+
+  /** Partitioned keyed merge (fact tables): prune the store read to the
+    * incoming batch's partitions via the snapshot, merge, stage
+    * partitioned and move the files in; returns `snap` with the replaced
+    * partitions' entries swapped for the new ones. */
+  private def mergePartitioned(spark: SparkSession, outDir: String,
+      snap: Seq[String], table: String, partCol: String, incoming: DataFrame)(
+      merge: (DataFrame, DataFrame) => DataFrame): Seq[String] = {
+    val store = new Path(outDir, table)
+    val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (mine, others) = entriesOf(snap, table)
+    // A store written by the old FLAT layout (or the empty-table marker)
+    // has data files at the root: those rows span ALL repos, so a pruned
+    // merge would lose the untouched ones when the root files are
+    // replaced. Migrate with one unpruned full merge; every later run is
+    // partition-pruned.
+    val flatData = mine.exists(!_.contains("/"))
+    // The touched-partition set is the run's repo list — a handful of
+    // names, driver-side by construction (not a data-volume collect).
+    // Lazy: the flat-migration branch merges unpruned and must not pay
+    // (or depend on) this job. Null partition values would silently miss
+    // the snapshot prune and corrupt the merge — refuse them loudly.
+    // Dir names use Spark's own partition-path escaping, so the prune
+    // matches exactly what partitionBy wrote.
+    lazy val touchedDirs = {
+      val t = incoming.select(col(partCol)).distinct()
+        .collect().map(_.getString(0)).toSeq
+      require(!t.contains(null),
+        s"$table: null $partCol cannot be partition-merged")
+      t.map(v => s"$partCol=" +
+        org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(v))
+    }
+    // Junk scan scoped to the dirs this run writes: junk elsewhere is
+    // invisible to snapshot readers and reaped by compact's full pass.
+    cleanJunk(fs, store, mine.toSet,
+      if (flatData || mine.isEmpty) Seq("") else touchedDirs)
+    // The SNAPSHOT is the file listing: the store read enumerates exactly
+    // the committed files of the touched partitions — no recursive
+    // directory listing of the archive, ever (the 100 TB cost a dir-based
+    // read would pay at plan time even with partition pruning). Explicit
+    // schema pins the partition column's type; values come from the dir
+    // names via basePath.
+    val files =
+      if (flatData) mine else mine.filter(f => touchedDirs.contains(f.split('/').head))
+    val merged =
+      if (files.isEmpty) incoming
+      else merge(spark.read.schema(incoming.schema)
+        .option("basePath", store.toString)
+        .parquet(files.map(f => new Path(store, f).toString): _*), incoming)
+        .select(incoming.columns.map(col): _*)
+    val staged = new Path(outDir, s".$table.__staged")
+    val written = stageInto(fs, staged, store)(
+      merged.write.mode("overwrite").partitionBy(partCol).parquet(_))
+    val kept =
+      if (written.nonEmpty) {
+        // Untouched partitions keep their entries; the replaced partitions
+        // (all root files on the migration path) are dropped.
+        val replaced = written.map(_.split('/').head).toSet
+        if (flatData) Nil else mine.filterNot(f => replaced.contains(f.split('/').head))
+      } else mine
+    // An empty merged result (e.g. a run with no tags) writes no
+    // partition files; a table with no files yet gets a flat empty-
+    // schema'd parquet instead, so it stays readable — replaced by real
+    // partition dirs the first time any appear.
+    val marker =
+      if (written.isEmpty && mine.isEmpty)
+        stageInto(fs, staged, store)(merged.write.mode("overwrite").parquet(_))
+      else Nil
+    others ++ (kept ++ written ++ marker).map(f => s"$table/$f")
+  }
+
+  /** Every data file under `dir` (recursive), `dir`-relative, skipping
+    * dot- and underscore-prefixed staging/tmp/metadata entries. */
+  private def listDataFiles(fs: FileSystem, dir: Path): Seq[String] = {
+    if (!fs.exists(dir)) return Seq.empty
+    val base = fs.makeQualified(dir).toString.stripSuffix("/") + "/"
     val buf = scala.collection.mutable.ArrayBuffer[String]()
-    val it = fs.listFiles(store, true)
+    val it = fs.listFiles(dir, true)
     while (it.hasNext) {
       val rel = it.next().getPath.toString.stripPrefix(base)
       if (rel.endsWith(".parquet") &&
@@ -500,92 +367,81 @@ object Pipeline {
     buf.toSeq
   }
 
-  /** The store's committed snapshot (manifest seq, relative file paths).
-    * A store written before the manifest layout (plain [[etl]] output, or
-    * an old-layout [[etlAppend]] store) has none: its directory listing IS
-    * its snapshot, and the baseline is committed as seq 0 before any file
-    * moves in — from then on junk is always distinguishable from data. */
-  private def baselinedSnapshot(fs: FileSystem, store: Path): (Long, Seq[String]) =
-    latestManifest(fs, store) match {
-      case Some(m) => (manifestSeq(m.getName), readManifest(fs, m))
-      case None =>
-        val files = listDataFiles(fs, store)
-        if (fs.exists(store)) { commitManifest(fs, store, 0L, files); (0L, files) }
-        else (-1L, files)
-    }
-
-  /** Delete what a crashed publish can leave: staging and tmp-manifest
-    * dirs (always — one top-level listing), and, within `scanDirs` (the
-    * dirs the caller is about to write; "" = the store root), data files
-    * the committed manifest doesn't reference — moved in by a publish that
-    * died before its commit, or orphaned by one that died between commit
-    * and generation GC. Junk OUTSIDE the scanned dirs is invisible to
-    * manifest readers and is reaped by [[compact]]'s full pass — scoping
-    * the scan keeps per-publish IO proportional to the run, not the
-    * archive's file count. */
-  private def cleanJunk(fs: FileSystem, store: Path, referenced: Set[String],
-      scanDirs: Seq[String]): Unit = {
-    if (!fs.exists(store)) return
-    fs.listStatus(store).map(_.getPath)
-      .filter(p => p.getName.startsWith(".manifest-tmp-") ||
-        p.getName.startsWith(".compact-staged-"))
-      .foreach(fs.delete(_, true))
-    scanDirs.distinct.foreach { d =>
+  /** Delete the data files in `dirs` (table-relative; "" = the table
+    * root) that the committed snapshot does not name: moved in by a
+    * writer that died before its commit. Scoping the scan to the dirs the
+    * caller is about to write keeps per-publish IO proportional to the
+    * run, not the archive's file count. */
+  private def cleanJunk(fs: FileSystem, store: Path, named: Set[String],
+      dirs: Seq[String]): Unit =
+    dirs.distinct.foreach { d =>
       val dir = if (d.isEmpty) store else new Path(store, d)
       if (fs.exists(dir))
         fs.listStatus(dir)
           .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
           .map(f => if (d.isEmpty) f.getPath.getName else s"$d/${f.getPath.getName}")
-          .filterNot(referenced)
+          .filterNot(named)
           .foreach(rel => fs.delete(new Path(store, rel), false))
     }
-  }
 
-  /** Move the staged data files into the live dir (returns their names).
-    * Names carry the writing job's UUID — collision-free by construction. */
-  private def moveDataFiles(fs: FileSystem, from: Path, to: Path): Seq[String] =
-    fs.listStatus(from)
-      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-      .map { f =>
-        val name = f.getPath.getName
-        require(fs.rename(f.getPath, new Path(to, name)),
-          s"publish move failed for $name into $to")
-        name
-      }.toSeq
-
-  /** Roll back a whole-table crash state left by the PRE-manifest layout
-    * (`.{table}.__retired-*` from the old retire→promote swap). Kept for
-    * stores that last published under that layout. */
-  private def recoverTable(fs: FileSystem, outDir: String, table: String): Unit = {
-    val base = new Path(outDir)
+  /** Undo a crash of the PRE-manifest layout's retire→promote swaps, kept
+    * for stores that last published under that layout: a retired table
+    * dir (`.{table}.__retired-*` at the root) or partition dir
+    * (`.retired-<uuid>--<partdir>` in the table) is restored when its live
+    * dir is missing — the promote never happened — and is post-promote
+    * junk otherwise. Stale compaction staging is always junk. Dot-
+    * prefixed names are invisible to Spark's file index either way. */
+  private def recoverRetired(fs: FileSystem, base: Path, table: String): Unit = {
     if (!fs.exists(base)) return
-    val path = new Path(s"$outDir/$table")
+    val store = new Path(base, table)
     val retired = fs.listStatus(base).map(_.getPath)
       .filter(_.getName.startsWith(s".$table.__retired-"))
-    if (!fs.exists(path)) {
+    if (!fs.exists(store)) {
       require(retired.length <= 1,
         s"unrecoverable state for $table: ${retired.length} retired dirs")
-      retired.foreach(r => require(fs.rename(r, path),
+      retired.foreach(r => require(fs.rename(r, store),
         s"crash rollback failed for $table"))
-    } else retired.foreach(r => fs.delete(r, true))
+    } else retired.foreach(fs.delete(_, true))
+    if (fs.exists(store))
+      fs.listStatus(store).map(_.getPath).foreach { p =>
+        if (p.getName.startsWith(".retired-")) {
+          // name = .retired-<36-char-uuid>--<partdir>
+          val part = p.getName.drop(".retired-".length + 36 + 2)
+          val dest = new Path(store, part)
+          if (part.nonEmpty && !fs.exists(dest))
+            require(fs.rename(p, dest), s"crash rollback failed for $dest")
+          else fs.delete(p, true)
+        } else if (p.getName.startsWith(".compact-staged-")) fs.delete(p, true)
+      }
   }
 
-  /** Read a table at its current committed snapshot: resolve the latest
-    * manifest and read exactly the files it lists. A publish that is
-    * staging, moving files in, or has crashed mid-way is invisible — the
-    * resolved snapshot is complete and immutable until the NEXT publish of
-    * the same partitions drops the replaced generation. Pre-manifest
-    * stores (plain [[etl]] output) fall back to a directory read. */
+  /** Standalone partitioned publish of one table: [[mergePartitioned]]
+    * committed as the next store manifest, every other table's entries
+    * carried forward. */
+  private[git] def publishPartitioned(spark: SparkSession, outDir: String,
+      table: String, partCol: String, incoming: DataFrame)(
+      merge: (DataFrame, DataFrame) => DataFrame): Unit =
+    transact(spark, outDir, Seq(table))(
+      mergePartitioned(spark, outDir, _, table, partCol, incoming)(merge))
+
+  /** Read a table at the store's committed snapshot: resolve the root
+    * manifest and read exactly the files it names for `table` — all
+    * tables resolve at the same committed write, and a write that is
+    * staging, moving files in, or has crashed mid-way is invisible. A
+    * store table with no files reads as empty. A store without a manifest
+    * (plain [[etl]] output), or a table outside it (rejects), is a
+    * directory read. */
   def readSnapshot(spark: SparkSession, outDir: String, table: String): DataFrame = {
-    val store = new Path(s"$outDir/$table")
-    val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    latestManifest(fs, store) match {
-      case Some(m) =>
-        val files = readManifest(fs, m)
-        if (files.isEmpty) spark.emptyDataFrame
-        else spark.read.option("basePath", store.toString)
+    val base = new Path(outDir)
+    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val store = new Path(base, table)
+    graft.ops.GenStore.latest(fs, base, ManifestPrefix)
+      .map(m => entriesOf(readManifest(fs, m._2), table)._1) match {
+      case Some(files) if files.nonEmpty =>
+        spark.read.option("basePath", store.toString)
           .parquet(files.map(f => new Path(store, f).toString): _*)
-      case None => spark.read.parquet(store.toString)
+      case Some(_) if StoreTables.contains(table) => spark.emptyDataFrame
+      case _ => spark.read.parquet(store.toString)
     }
   }
 
@@ -596,190 +452,38 @@ object Pipeline {
     * and task scheduling). Partitions already at or below
     * `filesPerPartition` data files are skipped (idempotent: a second
     * compact run touches nothing); the rest are coalesced, moved in, and
-    * committed as ONE new manifest — readers mid-compaction keep the old
-    * snapshot, whose files are dropped only after the commit. Content is
-    * untouched; only the physical file layout changes. */
+    * committed as ONE new store manifest — readers mid-compaction keep the
+    * old snapshot, whose files are dropped only after the commit. Content
+    * is untouched; only the physical file layout changes. Compaction is
+    * also the full junk pass: it scans EVERY partition dir of the table,
+    * so files a crashed publish moved into a dir no later run writes are
+    * reaped here. */
   def compact(spark: SparkSession, outDir: String, table: String,
       filesPerPartition: Int = 1): Unit = {
-    val store = new Path(s"$outDir/$table")
+    val store = new Path(outDir, table)
     val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(store)) return
-    // Store-root writer lease (the same `_maintenance.lease` protocol
-    // etlAppendStaged holds): compaction re-commits the ROOT store
-    // manifest below, and without the lease a compact racing a live ETL
-    // writer makes one side fail loudly at the store-manifest CAS — no
-    // corruption, but an avoidable aborted run whose half-published
-    // generation the next run must reap. Serializing here turns that
-    // race into a loud refuse-at-acquire, like every other store writer.
-    graft.ops.GenStore.withLease(fs, new Path(outDir)) { _ =>
-      compactLeased(spark, outDir, table, filesPerPartition)
-    }
-  }
-
-  /** [[compact]]'s body, already under the store-root writer lease. */
-  private def compactLeased(spark: SparkSession, outDir: String, table: String,
-      filesPerPartition: Int): Unit = {
-    val store = new Path(s"$outDir/$table")
-    val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverPartitions(fs, store)
-    val (seq, snap) = baselinedSnapshot(fs, store)
-    // Compaction is the full-GC pass: it scans every partition (it lists
-    // them anyway), so junk a scoped publish skipped is reaped here.
-    cleanJunk(fs, store, snap.toSet,
-      "" +: snap.map(_.split('/').init.mkString("/")).distinct)
-    val byDir = snap.groupBy(f => f.split('/').init.mkString("/"))
-    val entries = scala.collection.mutable.ArrayBuffer[String]()
-    val dropped = scala.collection.mutable.ArrayBuffer[String]()
-    byDir.toSeq.sortBy(_._1).foreach { case (dir, files) =>
-      if (dir.isEmpty || files.length <= filesPerPartition) entries ++= files
-      else {
-        val partDir = new Path(store, dir)
-        val staged = new Path(store, s".compact-staged-$dir")
-        fs.delete(staged, true)
-        // No basePath: the partition column stays in the path, not the
-        // rewritten files — same layout the publish writes.
-        spark.read.parquet(partDir.toString)
-          .coalesce(filesPerPartition)
-          .write.mode("overwrite").parquet(staged.toString)
-        entries ++= moveDataFiles(fs, staged, partDir).map(n => s"$dir/$n")
-        fs.delete(staged, true)
-        dropped ++= files
+    transact(spark, outDir, Seq(table)) { snap =>
+      val (mine, others) = entriesOf(snap, table)
+      val dirOf = (f: String) => f.split('/').init.mkString("/")
+      cleanJunk(fs, store, mine.toSet, "" +: fs.listStatus(store)
+        .filter(_.isDirectory).map(_.getPath.getName)
+        .filterNot(n => n.startsWith(".") || n.startsWith("_")).toSeq)
+      val compacted = mine.groupBy(dirOf).toSeq.sortBy(_._1).flatMap {
+        case (dir, files) =>
+          if (dir.isEmpty || files.length <= filesPerPartition) files
+          else {
+            val partDir = new Path(store, dir)
+            // No basePath: the partition column stays in the path, not the
+            // rewritten files — same layout the publish writes.
+            stageInto(fs, new Path(store, s".compact-staged-$dir"), partDir)(
+              spark.read.parquet(partDir.toString)
+                .coalesce(filesPerPartition).write.mode("overwrite").parquet(_))
+              .map(n => s"$dir/$n")
+          }
       }
+      others ++ compacted.map(f => s"$table/$f")
     }
-    if (dropped.nonEmpty) {
-      val name = commitManifest(fs, store, seq + 1, entries.toSeq)
-      // Keep the cross-table generation pinned through compaction: if the
-      // root store manifest names this table, re-commit it pointing at the
-      // compacted manifest BEFORE the superseded one is pruned — a
-      // readStoreSnapshot reader re-resolves to the compacted (content-
-      // identical) snapshot instead of dangling onto the fallback path,
-      // and the next run's entry rollback keeps its anchor.
-      val baseDir = new Path(outDir)
-      latestStoreManifest(fs, baseDir).foreach { sm =>
-        val es = readStoreManifest(fs, sm)
-        if (es.contains(table))
-          commitStoreManifest(fs, baseDir, storeManifestSeq(sm.getName) + 1,
-            (es + (table -> name)).toSeq)
-      }
-      pruneManifests(fs, store, seq + 1)
-      dropped.foreach(f => fs.delete(new Path(store, f), false))
-    }
-  }
-
-  // -----------------------------------------------------------------------
-  // Store-level generation manifest — cross-table atomicity (U6 parity).
-  //
-  // The reference wraps all five table loads of a repo in ONE SQLite
-  // transaction (src/transactions.ts:43-56, main.ts:103-130), so a
-  // concurrent reader (Metabase over WAL, db/index.ts:23) never observes
-  // commits without their file_changes. The per-table manifest protocol
-  // above is atomic per table but publishes the five tables sequentially —
-  // a reader between two per-table commits would see a cross-table-
-  // inconsistent store. The root `_store-manifest-<seq>` closes that: one
-  // file naming each table's committed per-table manifest, flipped by one
-  // atomic rename after all five publishes, with each table's generation
-  // GC deferred past the flip. [[readStoreSnapshot]] resolves through it:
-  // before the flip every table reads at the previous generation, after it
-  // at the new one — the store-level analogue of the reference's
-  // transaction boundary. Single writer assumed (the per-table protocol's
-  // standing assumption); a reader overlapping the post-flip GC of a
-  // concurrent publish should re-resolve, exactly as for per-table reads.
-  // -----------------------------------------------------------------------
-
-  private val StoreManifestPrefix = "_store-manifest-"
-
-  private def storeManifestSeq(name: String): Long =
-    name.stripPrefix(StoreManifestPrefix).toLong
-
-  private def latestStoreManifest(fs: FileSystem, base: Path): Option[Path] =
-    if (!fs.exists(base)) None
-    else fs.listStatus(base).map(_.getPath)
-      .filter(_.getName.startsWith(StoreManifestPrefix))
-      .sortBy(p => storeManifestSeq(p.getName)).lastOption
-
-  /** `table<TAB>per-table-manifest-name` lines, committed by one atomic
-    * rename; superseded store manifests pruned after the flip. */
-  private def commitStoreManifest(fs: FileSystem, base: Path, seq: Long,
-      entries: Seq[(String, String)]): Unit = {
-    val tmp = new Path(base, s".store-manifest-tmp-${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, true)
-    try out.write(entries.sortBy(_._1).map { case (t, m) => s"$t\t$m" }
-      .mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    val dest = new Path(base, f"$StoreManifestPrefix$seq%09d")
-    require(!fs.exists(dest), s"concurrent store publish detected: $dest exists")
-    require(fs.rename(tmp, dest), s"store manifest commit failed at $dest")
-    fs.listStatus(base).map(_.getPath)
-      .filter(p => p.getName.startsWith(StoreManifestPrefix) &&
-        storeManifestSeq(p.getName) < seq)
-      .foreach(fs.delete(_, false))
-    fs.listStatus(base).map(_.getPath)
-      .filter(_.getName.startsWith(".store-manifest-tmp-"))
-      .foreach(fs.delete(_, false))
-  }
-
-  private def readStoreManifest(fs: FileSystem, m: Path): Map[String, String] = {
-    val in = fs.open(m)
-    try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-      .filter(_.nonEmpty).map { line =>
-        val Array(t, name) = line.split('\t')
-        t -> name
-      }.toMap
-    finally in.close()
-  }
-
-  /** Read a table at the store's cross-table-consistent committed
-    * generation: resolve the root store manifest, then the table's NAMED
-    * per-table manifest — never "latest", so all five tables resolve at
-    * the SAME [[etlAppend]] run's output even while a later run is
-    * mid-publish (its per-table commits and file moves are invisible
-    * until its store-manifest flip). Falls back to [[readSnapshot]] when
-    * the store predates the store-manifest layout, the table is outside
-    * it (rejects), or the named manifest was GC'd by a completed later
-    * flip (re-resolving forward is then correct — the newer generation is
-    * the committed one). */
-  def readStoreSnapshot(spark: SparkSession, outDir: String, table: String): DataFrame = {
-    val base = new Path(outDir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val store = new Path(s"$outDir/$table")
-    latestStoreManifest(fs, base).map(readStoreManifest(fs, _)) match {
-      case Some(entries) if entries.contains(table) =>
-        val m = new Path(store, entries(table))
-        if (!fs.exists(m)) readSnapshot(spark, outDir, table)
-        else {
-          val files = readManifest(fs, m)
-          if (files.isEmpty) spark.emptyDataFrame
-          else spark.read.option("basePath", store.toString)
-            .parquet(files.map(f => new Path(store, f).toString): _*)
-        }
-      case _ => readSnapshot(spark, outDir, table)
-    }
-  }
-
-  /** Roll back partitions stranded by the PRE-manifest layout's swap (a
-    * crash between its retire and promote renames): a
-    * `.retired-<uuid>--<partdir>` whose `<partdir>` is missing means the
-    * promote never happened — restore the retired copy; one whose partdir
-    * exists is post-promote junk — delete it. Dot-prefixed names are
-    * invisible to Spark's partition discovery either way. Kept for stores
-    * that last published under that layout; the manifest layout has no
-    * retire→promote state to recover. */
-  private def recoverPartitions(fs: FileSystem, store: Path): Unit = {
-    if (!fs.exists(store)) return
-    fs.listStatus(store).map(_.getPath)
-      .filter(_.getName.startsWith(".retired-")).foreach { p =>
-        // name = .retired-<36-char-uuid>--<partdir>
-        val part = p.getName.drop(".retired-".length + 36 + 2)
-        val dest = new Path(store, part)
-        if (part.nonEmpty && !fs.exists(dest)) {
-          require(fs.rename(p, dest), s"crash rollback failed for $dest")
-        } else fs.delete(p, true)
-      }
-    // Stale compaction staging (crash before its retire) is always junk:
-    // the live partition dir was never touched.
-    fs.listStatus(store).map(_.getPath)
-      .filter(_.getName.startsWith(".compact-staged-"))
-      .foreach(fs.delete(_, true))
   }
 
   /** S8 bucketed-layout sink (opt-in): the two fact tables are saved as

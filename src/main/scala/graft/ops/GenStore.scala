@@ -9,7 +9,9 @@ import org.apache.spark.sql.SparkSession
   * the live one; a store with no pointer is its own generation 0 at the
   * root. Promotion is ONE atomic pointer rename; readers resolve the
   * pointer first, so staging, crashes mid-publish, and the promote
-  * itself are invisible to them.
+  * itself are invisible to them. The git store's root manifest
+  * (`graft.git.Pipeline`) commits through the same [[commit]] sequence
+  * under the same [[withLease]] lease.
   *
   * Writer contract: maintenance (retrain/compaction) and appends are
   * SINGLE-WRITER — the daily loop runs them in sequence (q99/q234's
@@ -31,14 +33,19 @@ private[graft] object GenStore {
   def fsOf(spark: SparkSession, dir: String): FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
+  /** The highest committed `<prefix><seq>` file under `base`, with its seq. */
+  def latest(fs: FileSystem, base: Path, prefix: String): Option[(Long, Path)] =
+    if (!fs.exists(base)) None
+    else fs.listStatus(base).map(_.getPath).filter(_.getName.startsWith(prefix))
+      .map(p => p.getName.stripPrefix(prefix).toLong -> p).maxByOption(_._1)
+
   /** Highest committed pointer seq, 0 when the root layout is live. */
-  def currentSeq(fs: FileSystem, base: Path, prefix: String): Long = {
-    if (!fs.exists(base)) return 0L
-    fs.listStatus(base).map(_.getPath.getName)
-      .filter(_.startsWith(prefix))
-      .map(_.stripPrefix(prefix).toLong)
-      .maxOption.getOrElse(0L)
-  }
+  def currentSeq(fs: FileSystem, base: Path, prefix: String): Long =
+    latest(fs, base, prefix).fold(0L)(_._1)
+
+  /** Dot-tmp staging prefix of a pointer prefix (`_ivfgen-` → `.ivfgen-tmp-`). */
+  private def tmpPrefix(prefix: String): String =
+    "." + prefix.stripPrefix("_").stripSuffix("-") + "-tmp-"
 
   /** The live generation's root dir (the index root for generation 0). */
   def currentRoot(spark: SparkSession, indexDir: String, prefix: String): String = {
@@ -54,10 +61,9 @@ private[graft] object GenStore {
   def preClean(fs: FileSystem, base: Path, prefix: String, curSeq: Long,
       rootArtifacts: Seq[String]): Unit = {
     if (!fs.exists(base)) return
-    val tmpPrefix = "." + prefix.stripPrefix("_").stripSuffix("-") + "-tmp-"
     fs.listStatus(base).map(_.getPath).foreach { p =>
       val n = p.getName
-      if (n.startsWith(tmpPrefix) || n.startsWith(".lease-takeover-") ||
+      if (n.startsWith(tmpPrefix(prefix)) || n.startsWith(".lease-takeover-") ||
         n.startsWith(".lease-release-"))
         fs.delete(p, false)
       else if (n.startsWith("gen=") &&
@@ -218,7 +224,7 @@ private[graft] object GenStore {
   }
 
   /** Live handle to a held lease: the heartbeat renews through it and
-    * [[promote]] re-checks ownership through it immediately before the
+    * [[commit]] re-checks ownership through it immediately before the
     * pointer rename. Constructed by [[withLease]] (or directly by tests
     * that step-serialize the interleave). */
   final class Lease private[ops] (fs: FileSystem, base: Path,
@@ -269,7 +275,7 @@ private[graft] object GenStore {
       }
     }
 
-    /** Assert this owner still holds the lease — [[promote]] calls this
+    /** Assert this owner still holds the lease — [[commit]] calls this
       * immediately before the pointer rename, so a takeover-then-
       * interleave is rejected BEFORE the destructive step rather than
       * detected after at release. A transiently unreadable lease is
@@ -304,7 +310,7 @@ private[graft] object GenStore {
     * mistaken for a crashed holder — takeover now requires the heartbeat
     * itself to be dead (killed JVM) for a full TTL, which is exactly the
     * abandoned-property case it exists for. The body receives the
-    * [[Lease]] handle to thread into [[promote]] for the pre-rename
+    * [[Lease]] handle to thread into [[commit]] for the pre-rename
     * ownership re-check. A release failure (lease taken over mid-run)
     * propagates when the body succeeded, but must not MASK the body's
     * own exception when it didn't. */
@@ -355,31 +361,39 @@ private[graft] object GenStore {
     }
   }
 
-  /** Commit `gen=<genSeq>` as the live generation: stage the pointer
-    * under a dot-tmp name, promote with one atomic rename (single-writer
-    * checked), then GC superseded pointers and the replaced generation's
-    * data. The caller has fully written `gen=<genSeq>/` beforehand.
-    * When a [[Lease]] handle is passed (every maintenance path does),
-    * ownership is re-checked immediately before the pointer rename: a
-    * run that stalled past the TTL and was taken over is rejected HERE,
-    * before the destructive step, making takeover-then-interleave
-    * impossible rather than detected-after at release. */
+  /** The commit point every maintained store shares: stage `content`
+    * under a dot-tmp name (junk if orphaned), re-check lease ownership
+    * (a run that stalled past the TTL and was taken over is refused
+    * BEFORE the destructive step), refuse a destination that already
+    * exists (another writer committed this seq; a local-FS rename would
+    * overwrite it silently), promote by one atomic rename, then prune the
+    * superseded lower-seq files. `name` is `prefix` followed by the seq
+    * in the store's own format. */
+  def commit(fs: FileSystem, base: Path, prefix: String, name: String,
+      content: String, lease: Option[Lease]): Unit = {
+    val tmp = new Path(base, s"${tmpPrefix(prefix)}${java.util.UUID.randomUUID()}")
+    val out = fs.create(tmp, true)
+    try out.write(content.getBytes("UTF-8"))
+    finally out.close()
+    val dest = new Path(base, name)
+    lease.foreach(_.checkOwned(s"commit of $name"))
+    require(!fs.exists(dest), s"concurrent publish detected: $dest exists")
+    require(fs.rename(tmp, dest), s"commit failed at $dest")
+    val seq = name.stripPrefix(prefix).toLong
+    fs.listStatus(base).map(_.getPath)
+      .filter(p => p.getName.startsWith(prefix) &&
+        p.getName.stripPrefix(prefix).toLong < seq)
+      .foreach(fs.delete(_, false))
+  }
+
+  /** Commit `gen=<genSeq>` as the live generation through [[commit]],
+    * then drop the replaced generation's data. The caller has fully
+    * written `gen=<genSeq>/` beforehand and passes its [[Lease]] (every
+    * maintenance path does) for the pre-rename ownership re-check. */
   def promote(fs: FileSystem, base: Path, prefix: String, genSeq: Long,
       curSeq: Long, rootArtifacts: Seq[String],
       lease: Option[Lease] = None): Unit = {
-    val tmpPrefix = "." + prefix.stripPrefix("_").stripSuffix("-") + "-tmp-"
-    val tmp = new Path(base, s"$tmpPrefix${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, true)
-    try out.write(s"gen=$genSeq".getBytes("UTF-8"))
-    finally out.close()
-    val dest = new Path(base, s"$prefix$genSeq")
-    lease.foreach(_.checkOwned(s"promote of $prefix$genSeq"))
-    require(!fs.exists(dest), s"concurrent generation publish detected: $dest exists")
-    require(fs.rename(tmp, dest), s"generation pointer commit failed at $dest")
-    fs.listStatus(base).map(_.getPath)
-      .filter(p => p.getName.startsWith(prefix) &&
-        p.getName.stripPrefix(prefix).toLong < genSeq)
-      .foreach(fs.delete(_, false))
+    commit(fs, base, prefix, s"$prefix$genSeq", s"gen=$genSeq", lease)
     if (curSeq == 0L) rootArtifacts.foreach(a => fs.delete(new Path(base, a), true))
     else fs.delete(new Path(base, s"gen=$curSeq"), true)
   }

@@ -208,8 +208,8 @@ class MainSpec extends SparkSpec with BeforeAndAfterAll {
     // The out-of-band rewrite bypassed the manifest — drop the manifests so
     // the store presents as a pre-manifest layout and compact() must
     // synthesize its baseline from the directory listing.
-    ls(Paths.get(inc, "commits")).filter(_.startsWith("_manifest-"))
-      .foreach(n => Files.delete(Paths.get(inc, "commits", n)))
+    ls(Paths.get(inc)).filter(_.startsWith("_store-manifest-"))
+      .foreach(n => Files.delete(Paths.get(inc, n)))
     val before = spark.read.parquet(s"$inc/commits")
       .collect().map(_.toString).sorted
 
@@ -258,9 +258,9 @@ class MainSpec extends SparkSpec with BeforeAndAfterAll {
     assert(snap() === before)
     // Exactly one manifest is retained after the commit.
     val manifests = {
-      val s = Files.list(commitsDir)
+      val s = Files.list(Paths.get(inc))
       try s.toArray.map(_.asInstanceOf[java.nio.file.Path].getFileName.toString)
-        .count(_.startsWith("_manifest-"))
+        .count(_.startsWith("_store-manifest-"))
       finally s.close()
     }
     assert(manifests == 1, s"expected 1 manifest, found $manifests")
@@ -278,11 +278,11 @@ class MainSpec extends SparkSpec with BeforeAndAfterAll {
   test("manifest protocol: orphan tmp and stale manifests are recovered") {
     val inc = root.resolve("out_manifest2").toString
     val P = _root_.graft.git.Pipeline
-    P.etlAppend(spark, Seq(repoA.toString, repoB.toString), inc) // seq 0
-    P.etlAppend(spark, Seq(repoA.toString), inc) // seq 1
-    val commitsDir = Paths.get(inc, "commits")
+    P.etlAppend(spark, Seq(repoA.toString, repoB.toString), inc) // seq 1 (0: baseline)
+    P.etlAppend(spark, Seq(repoA.toString), inc) // seq 2
+    val storeDir = Paths.get(inc)
     def ls() = {
-      val s = Files.list(commitsDir)
+      val s = Files.list(storeDir)
       try s.toArray.map(_.asInstanceOf[java.nio.file.Path].getFileName.toString).toSeq
       finally s.close()
     }
@@ -290,18 +290,18 @@ class MainSpec extends SparkSpec with BeforeAndAfterAll {
       .collect().map(_.toString).sorted.toSeq
     val before = snap()
     // Crash mid-manifest-write: an orphan dot-tmp (never committed).
-    Files.write(commitsDir.resolve(".manifest-tmp-deadbeef"),
-      "garbage/not-a-file.parquet\n".getBytes("UTF-8"))
+    Files.write(storeDir.resolve(".store-manifest-tmp-deadbeef"),
+      "commits/garbage/not-a-file.parquet\n".getBytes("UTF-8"))
     // Crash between commit and prune: a STALE lower-seq manifest lingers
     // (content even references a missing file — readers must never open it).
-    Files.write(commitsDir.resolve("_manifest-000000000"),
-      "repo_name=repoA/long-gone.parquet\n".getBytes("UTF-8"))
+    Files.write(storeDir.resolve("_store-manifest-000000000"),
+      "commits/repo_name=repoA/long-gone.parquet\n".getBytes("UTF-8"))
     assert(snap() === before, "reader did not resolve the highest manifest")
-    P.etlAppend(spark, Seq(repoA.toString), inc) // recovers + commits seq 2
+    P.etlAppend(spark, Seq(repoA.toString), inc) // recovers + commits seq 3
     val names = ls()
-    assert(!names.exists(_.startsWith(".manifest-tmp-")), "orphan tmp survived")
-    assert(names.count(_.startsWith("_manifest-")) == 1,
-      s"stale manifests survived: ${names.filter(_.startsWith("_manifest-"))}")
+    assert(!names.exists(_.startsWith(".store-manifest-tmp-")), "orphan tmp survived")
+    assert(names.count(_.startsWith("_store-manifest-")) == 1,
+      s"stale manifests survived: ${names.filter(_.startsWith("_store-manifest-"))}")
     assert(snap() === before)
   }
 
@@ -390,5 +390,40 @@ class MainSpec extends SparkSpec with BeforeAndAfterAll {
     // gate that matches nothing → Pipeline sees zero repos post-filter
     val r = _root_.graft.git.Pipeline.build(spark, Seq(repoA.toString), Some("NobodySuchAuthor"))
     assert(r.commits.count() == 0)
+  }
+
+  test("full etl over an appended store replaces it; a following --append " +
+    "merges into the result") {
+    val P = _root_.graft.git.Pipeline
+    val out = root.resolve("out_etl_over_append").toString
+    val full = root.resolve("out_etl_over_append_full").toString
+    val both = Seq(repoA.toString, repoB.toString)
+    Main.runAppend(spark, Seq(repoA.toString), out, None)
+    Main.run(spark, both, out, None)
+    Main.run(spark, both, full, None)
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.select(df.columns.sorted.map(col): _*).collect().map(_.toString).sorted.toSeq
+    val tables = Seq("commits", "authors", "file_changes", "tags", "repos")
+    tables.foreach { t =>
+      assert(rows(P.readSnapshot(spark, out, t)) ==
+        rows(spark.read.parquet(s"$full/$t")), s"$t after the full run")
+    }
+
+    // The next --append baselines the full run's output and merges into it:
+    // keyed tables are unchanged (same history), authors add repo A's run.
+    Main.runAppend(spark, Seq(repoA.toString), out, None)
+    tables.filter(_ != "authors").foreach { t =>
+      assert(rows(P.readSnapshot(spark, out, t)) ==
+        rows(spark.read.parquet(s"$full/$t")), s"$t after the append")
+    }
+    def totals(df: org.apache.spark.sql.DataFrame): Map[String, Long] =
+      df.collect().map(r => r.getAs[String]("email") -> r.getAs[Long]("total_commits")).toMap
+    val before = totals(spark.read.parquet(s"$full/authors"))
+    val runA = spark.read.parquet(s"$full/commits").filter(col("repo_name") === "repoA")
+      .groupBy("author_email").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(runA.nonEmpty)
+    assert(totals(P.readSnapshot(spark, out, "authors")) ==
+      before.map { case (e, n) => e -> (n + runA.getOrElse(e, 0L)) })
   }
 }

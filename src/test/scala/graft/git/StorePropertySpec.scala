@@ -32,45 +32,54 @@ class StorePropertySpec extends SparkSpec {
   test("randomized publish/crash/compact sequences preserve the snapshot") {
     val partCol = "part"
     val parts = Vector("a", "b", "c", "d")
+    // Two tables share the one store manifest: every commit of either must
+    // carry the other's entries forward.
+    val tables = Vector("t1", "t2")
     for (seed <- Seq(11, 23, 47)) {
       val rnd = new scala.util.Random(seed)
       val dir = Files.createTempDirectory(s"graft-storeprop-$seed-")
         .toAbsolutePath.toString
-      val table = "t"
-      val store = Paths.get(dir, table)
-      var model = Map.empty[(String, Long), Long]
+      val root = Paths.get(dir)
+      var model = tables.map(_ -> Map.empty[(String, Long), Long]).toMap
 
-      def verify(step: String): Unit =
-        if (!Files.isDirectory(store)) {
-          assert(model.isEmpty, s"seed=$seed $step: store missing but model nonempty")
+      def rows(df: org.apache.spark.sql.DataFrame): Map[(String, Long), Long] =
+        df.collect().map(r => ((r.getAs[String](partCol), r.getAs[Long]("k")),
+          r.getAs[Long]("v"))).toMap
+
+      def verify(step: String): Unit = tables.foreach { table =>
+        if (!Files.isDirectory(root.resolve(table))) {
+          assert(model(table).isEmpty,
+            s"seed=$seed $step $table: store missing but model nonempty")
         } else {
-          val got = Pipeline.readSnapshot(spark, dir, table)
-            .collect()
-            .map(r => ((r.getAs[String](partCol), r.getAs[Long]("k")),
-              r.getAs[Long]("v"))).toMap
-          assert(got == model, s"seed=$seed $step: snapshot diverged from model")
+          val got = rows(Pipeline.readSnapshot(spark, dir, table))
+          assert(got == model(table),
+            s"seed=$seed $step $table: snapshot diverged from model")
         }
+      }
 
-      (1 to 12).foreach { step =>
+      (1 to 16).foreach { step =>
+        val table = tables(rnd.nextInt(tables.size))
+        val store = root.resolve(table)
         rnd.nextInt(4) match {
           case 0 | 1 =>
             // Publish: 1-2 random partitions, unique keys within the batch,
             // last-writer-wins against the store (upsertLatest semantics).
             val touched = rnd.shuffle(parts).take(1 + rnd.nextInt(2))
-            val rows = touched.flatMap { p =>
+            val batch = touched.flatMap { p =>
               rnd.shuffle((0L to 4L).toVector).take(1 + rnd.nextInt(3))
                 .map(k => (p, k, rnd.nextLong()))
             }
             Pipeline.publishPartitioned(spark, dir, table, partCol,
-              rows.toDF(partCol, "k", "v"))(
+              batch.toDF(partCol, "k", "v"))(
               GitAgg.upsertLatest(_, _, Seq(partCol, "k")))
-            rows.foreach { case (p, k, v) => model += ((p, k) -> v) }
+            batch.foreach { case (p, k, v) =>
+              model += table -> (model(table) + ((p, k) -> v)) }
           case 2 if Files.isDirectory(store) =>
             // Crash injection: the junk a publish dying mid-flight leaves.
             rnd.nextInt(3) match {
               case 0 => // orphan manifest tmp
-                Files.write(store.resolve(s".manifest-tmp-$step"),
-                  "ghost/not-a-file.parquet\n".getBytes("UTF-8"))
+                Files.write(root.resolve(s".store-manifest-tmp-$step"),
+                  s"$table/ghost/not-a-file.parquet\n".getBytes("UTF-8"))
               case 1 => // moved-in but never-committed data file
                 val pd = store.resolve(s"$partCol=${parts(rnd.nextInt(parts.size))}")
                 Files.createDirectories(pd)
@@ -78,25 +87,30 @@ class StorePropertySpec extends SparkSpec {
                   Array[Byte](9, 9, 9))
               case 2 => // stale manifest from a crash between commit and prune
                 val seqs = {
-                  val s = Files.list(store)
+                  val s = Files.list(root)
                   try s.toArray.map(_.asInstanceOf[java.nio.file.Path]
                     .getFileName.toString)
-                    .filter(_.startsWith("_manifest-"))
-                    .map(_.stripPrefix("_manifest-").toLong)
+                    .filter(_.startsWith("_store-manifest-"))
+                    .map(_.stripPrefix("_store-manifest-").toLong)
                   finally s.close()
                 }
                 if (seqs.nonEmpty && seqs.max >= 1)
-                  Files.write(store.resolve("_manifest-000000000"),
-                    s"$partCol=zzz/ghost-$step.parquet\n".getBytes("UTF-8"))
+                  Files.write(root.resolve("_store-manifest-000000000"),
+                    s"$table/$partCol=zzz/ghost-$step.parquet\n".getBytes("UTF-8"))
             }
           case _ =>
             Pipeline.compact(spark, dir, table)
         }
-        verify(s"step $step")
+        verify(s"step $step ($table)")
       }
-      // Final full compact: all junk reaped, snapshot intact, one manifest.
-      Pipeline.compact(spark, dir, table)
+      // Final full compact: all junk reaped, so a raw directory read of
+      // each table equals the model too.
+      tables.foreach(Pipeline.compact(spark, dir, _))
       verify("final compact")
+      tables.filter(t => Files.isDirectory(root.resolve(t))).foreach { t =>
+        assert(rows(spark.read.parquet(s"$dir/$t")) == model(t),
+          s"seed=$seed $t: raw directory read differs after the final compact")
+      }
     }
   }
 }
