@@ -3,10 +3,11 @@ package graft.git
 import java.nio.file.{Files, Path, Paths}
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
+import scala.reflect.ClassTag
 import scala.sys.process._
 import scala.util.Try
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Source operators S1–S7 (SURVEY §2.1): the git-subprocess boundary.
@@ -47,20 +48,23 @@ object GitCli {
       RepoInfo(Paths.get(repoPath).getFileName.toString, repoPath, b)
     }
 
-  /** Extraction task list as a Dataset, one partition per repo.
+  /** `scan` run once per repo, one slice per repo: parallelize splits the
+    * list itself, so no round-robin exchange (and no extra Spark job under
+    * AQE) is needed to spread the repos over the tasks. The result is
+    * coalesced to that same slice count, which moves no data but declares
+    * a one-repo extraction a single partition, so the keyed dedups and
+    * aggregations after it plan no exchange either.
     *
-    * The nonce column defeats Catalyst plan-cache matching: these scans read
-    * EXTERNAL state (the repos on disk), which the logical plan cannot see,
-    * so two extractions over the same repo list canonicalize to the same
-    * plan — without the nonce, a cached first run would be silently served
-    * for a re-run even after the repos changed (observed: a second
-    * `Pipeline.build` returning stale commits). Same reason Spark marks
-    * `rand()` non-deterministic: identical plan text ≠ identical data. */
-  private def tasks(spark: SparkSession, repos: Seq[RepoInfo]) = {
-    import spark.implicits._
-    val nonce = java.util.UUID.randomUUID().toString
-    spark.createDataset(repos.map(r => (r.name, r.path, r.branch, nonce)))
-      .repartition(math.max(repos.size, 1))
+    * These scans read EXTERNAL state (the repos on disk), which a logical
+    * plan cannot see. Each call builds a fresh RDD, and a plan over an RDD
+    * only matches a plan over the same RDD instance, so a cached earlier
+    * extraction is never served for a re-run after the repos changed
+    * (GitCliSpec: two builds in one session see the new commit). */
+  private def perRepo[T: Encoder: ClassTag](spark: SparkSession,
+      repos: Seq[RepoInfo])(scan: RepoInfo => Seq[T]): Dataset[T] = {
+    val n = math.max(repos.size, 1)
+    spark.createDataset(spark.sparkContext.parallelize(repos, n).flatMap(scan))
+      .coalesce(n)
   }
 
   // ---- S1: git-log scan → raw text DataFrame ------------------------------
@@ -68,34 +72,28 @@ object GitCli {
     * subprocess on the executor that owns the repo's partition. */
   def rawLogs(spark: SparkSession, repos: Seq[RepoInfo]): DataFrame = {
     import spark.implicits._
-    tasks(spark, repos).mapPartitions { it =>
-      it.flatMap { case (name, path, branch, _) =>
-        run(path, "git", "log", branch, s"--pretty=format:$logFormat",
-          "--numstat").map(raw => (name, branch, raw))
-      }
+    perRepo(spark, repos) { r =>
+      run(r.path, "git", "log", r.branch, s"--pretty=format:$logFormat",
+        "--numstat").map(raw => (r.name, r.branch, raw)).toSeq
     }.toDF("repo_name", "branch", "raw")
   }
 
   // ---- S2: git-tags scan (src/git-parser.ts:277-300) ----------------------
   def rawTags(spark: SparkSession, repos: Seq[RepoInfo]): DataFrame = {
     import spark.implicits._
-    tasks(spark, repos).mapPartitions { it =>
-      it.flatMap { case (name, path, _, _) =>
-        run(path, "git", "for-each-ref", "refs/tags",
-          s"--format=$tagFormat").map(raw => (name, raw))
-      }
+    perRepo(spark, repos) { r =>
+      run(r.path, "git", "for-each-ref", "refs/tags",
+        s"--format=$tagFormat").map(raw => (r.name, raw)).toSeq
     }.toDF("repo_name", "raw")
   }
 
   // ---- S4: file-list scan (src/git-parser.ts:214-222) ---------------------
   def lsFiles(spark: SparkSession, repos: Seq[RepoInfo]): DataFrame = {
     import spark.implicits._
-    tasks(spark, repos).mapPartitions { it =>
-      it.flatMap { case (name, path, _, _) =>
-        run(path, "git", "ls-files").toSeq
-          .flatMap(_.split("\n")).filter(_.nonEmpty)
-          .map(f => (name, f))
-      }
+    perRepo(spark, repos) { r =>
+      run(r.path, "git", "ls-files").toSeq
+        .flatMap(_.split("\n")).filter(_.nonEmpty)
+        .map(f => (r.name, f))
     }.toDF("repo_name", "file_path")
   }
 

@@ -1,7 +1,11 @@
 package graft.git
 
+import java.util.concurrent.{Callable, ConcurrentLinkedQueue, ExecutionException, Executors}
+import java.util.concurrent.atomic.AtomicInteger
+import scala.util.{Failure, Try}
+
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** E1/E2: the end-to-end ETL pipeline (SURVEY §3) — extract all repos in
@@ -24,8 +28,8 @@ object Pipeline {
       repos: DataFrame,
       rejects: DataFrame,
       /** Frees the pipeline's internal cache once outputs are materialized
-        * (each run caches a nonce-distinct plan, so without this, repeated
-        * runs in one session accumulate dead cache entries). */
+        * (each run caches a plan over its own extraction, so without this,
+        * repeated runs in one session accumulate dead cache entries). */
       release: () => Unit = () => ())
 
   /** Extract + transform (no write): the five reference tables plus the
@@ -33,7 +37,14 @@ object Pipeline {
     * as a filter/quality-flag stage — invalid commits are diverted, with
     * their error list, instead of silently loaded). */
   def build(spark: SparkSession, repoPaths: Seq[String],
-      authorGate: Option[String] = None): Result = {
+      authorGate: Option[String] = None): Result =
+    extract(spark, repoPaths, authorGate)._2
+
+  /** [[build]] and the names of the repos that passed the gate: every
+    * repo-scoped row of the result carries one of them, so they are the
+    * partitions a run touches, known without a Spark job. */
+  private def extract(spark: SparkSession, repoPaths: Seq[String],
+      authorGate: Option[String]): (Seq[String], Result) = {
     // S5 gate: cheap LIMIT-1 probe before full extraction (main.ts:338-343).
     val infos = repoPaths.flatMap(GitCli.repoInfo)
       .filter(r => authorGate.forall(p => GitCli.hasCommitsByAuthor(r.path, p)))
@@ -49,14 +60,14 @@ object Pipeline {
     val language = GitAgg.repoLanguage(GitCli.lsFiles(spark, infos))
     val repos = GitAgg.repoMeta(commits)
       .join(language.withColumnRenamed("repo_name", "name"), Seq("name"), "left")
-    Result(
+    (infos.map(_.name).distinct, Result(
       commits = commits.drop("file_changes"),
       authors = GitAgg.authors(commits),
       fileChanges = fileChanges,
       tags = tags,
       repos = repos,
       rejects = rejects,
-      release = () => { flagged.unpersist(); () })
+      release = () => { flagged.unpersist(); () }))
   }
 
   /** E1/E2 with the S8 sink: write each table as parquet under outDir.
@@ -91,14 +102,19 @@ object Pipeline {
     *
     * The four repo-scoped tables (commits, file_changes, tags, repos) are
     * stored PARTITIONED by repo: a run merges only the partitions of the
-    * repos it touched — the committed snapshot is read partition-pruned to
-    * the touched set, merged with that table's reference conflict
-    * semantics, staged, and moved into the live partition dirs. Untouched
-    * repos' files are never read, rewritten, or even listed: merge cost is
+    * repos it touched — the run's gated repo list, known on the driver
+    * before any Spark job. The committed snapshot is read partition-pruned
+    * to that set, merged with the table's reference conflict semantics,
+    * staged, and moved into the live partition dirs. Untouched repos'
+    * files are never read, rewritten, or even listed: merge cost is
     * proportional to the run's output, not the archive — at 100 TB this is
     * the difference between an incremental publish and a full rewrite.
-    * All five tables then commit together as ONE store manifest (see the
-    * protocol block below), the analogue of the reference's transaction.
+    *
+    * Each merge reads only the committed snapshot and its own table, so
+    * the five merges (and the rejects write) run concurrently, under the
+    * writer lease, on a pool created for the run. All five tables then
+    * commit together as ONE store manifest (see the protocol block below),
+    * the analogue of the reference's transaction.
     *
     * `authors` is the one table that CANNOT be repo-partitioned: its key
     * is email and its counts accumulate ACROSS repos (database.ts:109-117),
@@ -113,43 +129,79 @@ object Pipeline {
     * publish sequence (`after:<table>` ×5, `before:flip`, `after:flip`) —
     * the crash-injection / interleave seam the store-level atomicity tests
     * drive (a hook that throws models a process kill at that instant; a
-    * hook that reads models a concurrent snapshot reader). Production
+    * hook that reads models a concurrent snapshot reader). The `after:`
+    * hooks fire in publish order once every merge has finished. Production
     * callers go through [[etlAppend]]'s no-op hook. */
   private[git] def etlAppendStaged(spark: SparkSession, repoPaths: Seq[String],
       outDir: String, authorGate: Option[String],
       step: String => Unit): Unit = {
-    // Built on first use, under the lease: a writer refused at acquire
-    // does no work.
-    lazy val r = build(spark, repoPaths, authorGate)
     transact(spark, outDir, StoreTables) { committed =>
-      var snap = committed
-      def publish(table: String)(merge: Seq[String] => Seq[String]): Unit = {
-        snap = merge(snap)
-        step(s"after:$table")
-      }
-      // ON CONFLICT(repo_name, sha) DO UPDATE (database.ts:21-36)
-      publish("commits")(mergePartitioned(spark, outDir, _, "commits",
-        "repo_name", r.commits)(GitAgg.upsertLatest(_, _, Seq("repo_name", "sha"))))
-      // ON CONFLICT(email): counts add, dates min/max, new name wins (:109-117)
-      publish("authors")(mergeWhole(spark, outDir, _, "authors", r.authors)(
-        GitAgg.mergeAuthors))
-      // INSERT OR IGNORE (:148-151): stored row wins
-      publish("file_changes")(mergePartitioned(spark, outDir, _, "file_changes",
-        "repo_name", r.fileChanges)(
-        GitAgg.upsertKeepFirst(_, _, Seq("repo_name", "sha", "file_path"))))
-      // ON CONFLICT(repo_name, tag_name) DO UPDATE (:228-236)
-      publish("tags")(mergePartitioned(spark, outDir, _, "tags", "repo_name",
-        r.tags)(GitAgg.upsertLatest(_, _, Seq("repo_name", "tag_name"))))
-      // ON CONFLICT(name) DO UPDATE (:85-95)
-      publish("repos")(mergePartitioned(spark, outDir, _, "repos", "name",
-        r.repos)(GitAgg.upsertLatest(_, _, Seq("name"))))
-      step("before:flip")
-      snap
+      // Built under the lease: a writer refused at acquire does no work.
+      val (touched, r) = extract(spark, repoPaths, authorGate)
+      // One merge per table in publish order, each from the table's
+      // committed entries to its next ones.
+      val merges = Seq[(String, Seq[String] => Seq[String])](
+        // ON CONFLICT(repo_name, sha) DO UPDATE (database.ts:21-36)
+        "commits" -> (mergePartitioned(spark, outDir, _, "commits", "repo_name",
+          r.commits, touched)(GitAgg.upsertLatest(_, _, Seq("repo_name", "sha")))),
+        // ON CONFLICT(email): counts add, dates min/max, new name wins (:109-117)
+        "authors" -> (mergeWhole(spark, outDir, _, "authors", r.authors)(
+          GitAgg.mergeAuthors)),
+        // INSERT OR IGNORE (:148-151): stored row wins
+        "file_changes" -> (mergePartitioned(spark, outDir, _, "file_changes",
+          "repo_name", r.fileChanges, touched)(
+          GitAgg.upsertKeepFirst(_, _, Seq("repo_name", "sha", "file_path")))),
+        // ON CONFLICT(repo_name, tag_name) DO UPDATE (:228-236)
+        "tags" -> (mergePartitioned(spark, outDir, _, "tags", "repo_name",
+          r.tags, touched)(GitAgg.upsertLatest(_, _, Seq("repo_name", "tag_name")))),
+        // ON CONFLICT(name) DO UPDATE (:85-95)
+        "repos" -> (mergePartitioned(spark, outDir, _, "repos", "name",
+          r.repos, touched)(GitAgg.upsertLatest(_, _, Seq("name")))))
+      // rejects are per-run diagnostics (no reference counterpart, outside
+      // the manifest): overwritten by every run, under the lease
+      val rejects = () => {
+        r.rejects.write.mode("overwrite").parquet(s"$outDir/rejects"); Nil }
+      try {
+        val entries = concurrently(merges.map { case (table, merge) =>
+          () => merge(entriesOf(committed, table)) } :+ rejects)
+        merges.foreach { case (table, _) => step(s"after:$table") }
+        step("before:flip")
+        merges.map(_._1).zip(entries).foldLeft(committed) {
+          case (snap, (table, mine)) => replacing(snap, table)(_ => mine)
+        }
+      } finally r.release()
     }
     step("after:flip")
-    // rejects are per-run diagnostics (no reference counterpart): overwrite
-    r.rejects.write.mode("overwrite").parquet(s"$outDir/rejects")
-    r.release()
+  }
+
+  /** Name prefix of the threads [[etlAppend]] runs its merges on. */
+  private[git] val MergeThreadPrefix = "graft-store-merge-"
+
+  /** Run `tasks` on a fixed pool of one thread per store table and return
+    * their results in order. The pool is created for this call, so its
+    * threads inherit the caller's SparkContext local properties, and every
+    * thread is joined before return: no task outlives the call (nor the
+    * writer lease it runs under). Every task runs to completion; the
+    * first failure in `tasks` order is rethrown only then. */
+  private def concurrently[T](tasks: Seq[() => T]): Seq[T] = {
+    val threads = new ConcurrentLinkedQueue[Thread]()
+    val n = new AtomicInteger()
+    val pool = Executors.newFixedThreadPool(StoreTables.size, (task: Runnable) => {
+      val t = new Thread(task, s"$MergeThreadPrefix${n.incrementAndGet()}")
+      t.setDaemon(true)
+      threads.add(t)
+      t
+    })
+    try {
+      val futures = tasks.map(t => pool.submit(new Callable[T] { def call(): T = t() }))
+      val done = futures.map(f => Try(f.get()).recoverWith {
+        case e: ExecutionException => Failure(e.getCause)
+      })
+      done.map(_.get)
+    } finally {
+      pool.shutdown()
+      threads.forEach(_.join())
+    }
   }
 
   /** The five store-committed tables, in publish order. */
@@ -183,7 +235,10 @@ object Pipeline {
   // and the previous snapshot fully intact, so even the NON-idempotent
   // authors merge (counts ADD) reruns from exactly the committed totals.
   // The next writer deletes the unnamed files in the dirs it writes;
-  // [[compact]] scans every partition dir of its table.
+  // [[compact]] scans every partition dir of its table. `rejects` lives
+  // outside the manifest and is overwritten under the lease alongside the
+  // merges, so a run that dies before the flip may leave its own rejects
+  // behind until the next run overwrites them.
   //
   // GC: right after the commit, the writer deletes the files the new
   // manifest no longer names, so at rest a raw directory read of a table
@@ -202,11 +257,16 @@ object Pipeline {
     finally in.close()
   }
 
-  /** `table`'s entries of a store snapshot (table-relative) and the rest. */
-  private def entriesOf(snap: Seq[String], table: String): (Seq[String], Seq[String]) = {
-    val (mine, others) = snap.partition(_.startsWith(s"$table/"))
-    (mine.map(_.stripPrefix(s"$table/")), others)
-  }
+  /** `table`'s entries of a store snapshot, table-relative. */
+  private def entriesOf(snap: Seq[String], table: String): Seq[String] =
+    snap.filter(_.startsWith(s"$table/")).map(_.stripPrefix(s"$table/"))
+
+  /** `snap` with `table`'s entries replaced by what `f` makes of them
+    * (table-relative both ways). */
+  private def replacing(snap: Seq[String], table: String)(
+      f: Seq[String] => Seq[String]): Seq[String] =
+    snap.filterNot(_.startsWith(s"$table/")) ++
+      f(entriesOf(snap, table)).map(e => s"$table/$e")
 
   /** The store's one write path. Under the store-root writer lease (the
     * `_maintenance.lease` protocol of the index stores: a second writer
@@ -263,55 +323,44 @@ object Pipeline {
   }
 
   /** Whole-table keyed merge (dimension tables): merge the committed files
-    * with `incoming` and move the result in; returns `snap` with the
-    * table's entries replaced. */
-  private def mergeWhole(spark: SparkSession, outDir: String, snap: Seq[String],
+    * `mine` with `incoming` and move the result in; returns the table's
+    * next entries. */
+  private def mergeWhole(spark: SparkSession, outDir: String, mine: Seq[String],
       table: String, incoming: DataFrame)(
       merge: (DataFrame, DataFrame) => DataFrame): Seq[String] = {
     val path = new Path(outDir, table)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (mine, others) = entriesOf(snap, table)
     cleanJunk(fs, path, mine.toSet, Seq(""))
     val merged =
       if (mine.nonEmpty)
         merge(spark.read.option("basePath", path.toString)
           .parquet(mine.map(f => new Path(path, f).toString): _*), incoming)
       else incoming
-    others ++ stageInto(fs, new Path(outDir, s".$table.__staged"), path)(
-      merged.write.mode("overwrite").parquet(_)).map(f => s"$table/$f")
+    stageInto(fs, new Path(outDir, s".$table.__staged"), path)(
+      merged.write.mode("overwrite").parquet(_))
   }
 
-  /** Partitioned keyed merge (fact tables): prune the store read to the
-    * incoming batch's partitions via the snapshot, merge, stage
-    * partitioned and move the files in; returns `snap` with the replaced
+  /** Partitioned keyed merge (fact tables): prune the store read of the
+    * committed files `mine` to the `touched` partition values, merge with
+    * `incoming` (whose values must all be in `touched`), stage partitioned
+    * and move the files in; returns the table's next entries, the replaced
     * partitions' entries swapped for the new ones. */
   private def mergePartitioned(spark: SparkSession, outDir: String,
-      snap: Seq[String], table: String, partCol: String, incoming: DataFrame)(
+      mine: Seq[String], table: String, partCol: String, incoming: DataFrame,
+      touched: Seq[String])(
       merge: (DataFrame, DataFrame) => DataFrame): Seq[String] = {
     val store = new Path(outDir, table)
     val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (mine, others) = entriesOf(snap, table)
     // A store written by the old FLAT layout (or the empty-table marker)
     // has data files at the root: those rows span ALL repos, so a pruned
     // merge would lose the untouched ones when the root files are
     // replaced. Migrate with one unpruned full merge; every later run is
     // partition-pruned.
     val flatData = mine.exists(!_.contains("/"))
-    // The touched-partition set is the run's repo list — a handful of
-    // names, driver-side by construction (not a data-volume collect).
-    // Lazy: the flat-migration branch merges unpruned and must not pay
-    // (or depend on) this job. Null partition values would silently miss
-    // the snapshot prune and corrupt the merge — refuse them loudly.
     // Dir names use Spark's own partition-path escaping, so the prune
     // matches exactly what partitionBy wrote.
-    lazy val touchedDirs = {
-      val t = incoming.select(col(partCol)).distinct()
-        .collect().map(_.getString(0)).toSeq
-      require(!t.contains(null),
-        s"$table: null $partCol cannot be partition-merged")
-      t.map(v => s"$partCol=" +
-        org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(v))
-    }
+    val touchedDirs = touched.map(v => s"$partCol=" +
+      org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(v))
     // Junk scan scoped to the dirs this run writes: junk elsewhere is
     // invisible to snapshot readers and reaped by compact's full pass.
     cleanJunk(fs, store, mine.toSet,
@@ -348,7 +397,7 @@ object Pipeline {
       if (written.isEmpty && mine.isEmpty)
         stageInto(fs, staged, store)(merged.write.mode("overwrite").parquet(_))
       else Nil
-    others ++ (kept ++ written ++ marker).map(f => s"$table/$f")
+    kept ++ written ++ marker
   }
 
   /** Every data file under `dir` (recursive), `dir`-relative, skipping
@@ -417,12 +466,19 @@ object Pipeline {
 
   /** Standalone partitioned publish of one table: [[mergePartitioned]]
     * committed as the next store manifest, every other table's entries
-    * carried forward. */
+    * carried forward. Without a repo list, the touched partition values
+    * are read from `incoming` (one Spark job). Null values would silently
+    * miss the snapshot prune and corrupt the merge — refused loudly. */
   private[git] def publishPartitioned(spark: SparkSession, outDir: String,
       table: String, partCol: String, incoming: DataFrame)(
       merge: (DataFrame, DataFrame) => DataFrame): Unit =
-    transact(spark, outDir, Seq(table))(
-      mergePartitioned(spark, outDir, _, table, partCol, incoming)(merge))
+    transact(spark, outDir, Seq(table)) { snap =>
+      val touched = incoming.select(col(partCol)).distinct()
+        .as(Encoders.STRING).collect().toSeq
+      require(!touched.contains(null), s"$table: null $partCol cannot be partition-merged")
+      replacing(snap, table)(mergePartitioned(spark, outDir, _, table, partCol,
+        incoming, touched)(merge))
+    }
 
   /** Read a table at the store's committed snapshot: resolve the root
     * manifest and read exactly the files it names for `table` — all
@@ -436,7 +492,7 @@ object Pipeline {
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val store = new Path(base, table)
     graft.ops.GenStore.latest(fs, base, ManifestPrefix)
-      .map(m => entriesOf(readManifest(fs, m._2), table)._1) match {
+      .map(m => entriesOf(readManifest(fs, m._2), table)) match {
       case Some(files) if files.nonEmpty =>
         spark.read.option("basePath", store.toString)
           .parquet(files.map(f => new Path(store, f).toString): _*)
@@ -463,13 +519,12 @@ object Pipeline {
     val store = new Path(outDir, table)
     val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(store)) return
-    transact(spark, outDir, Seq(table)) { snap =>
-      val (mine, others) = entriesOf(snap, table)
+    transact(spark, outDir, Seq(table))(replacing(_, table) { mine =>
       val dirOf = (f: String) => f.split('/').init.mkString("/")
       cleanJunk(fs, store, mine.toSet, "" +: fs.listStatus(store)
         .filter(_.isDirectory).map(_.getPath.getName)
         .filterNot(n => n.startsWith(".") || n.startsWith("_")).toSeq)
-      val compacted = mine.groupBy(dirOf).toSeq.sortBy(_._1).flatMap {
+      mine.groupBy(dirOf).toSeq.sortBy(_._1).flatMap {
         case (dir, files) =>
           if (dir.isEmpty || files.length <= filesPerPartition) files
           else {
@@ -482,8 +537,7 @@ object Pipeline {
               .map(n => s"$dir/$n")
           }
       }
-      others ++ compacted.map(f => s"$table/$f")
-    }
+    })
   }
 
   /** S8 bucketed-layout sink (opt-in): the two fact tables are saved as

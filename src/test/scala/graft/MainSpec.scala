@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 import scala.sys.process._
 
 import org.apache.spark.sql.functions.col
@@ -390,6 +391,71 @@ class MainSpec extends SparkSpec with BeforeAndAfterAll {
     // gate that matches nothing → Pipeline sees zero repos post-filter
     val r = _root_.graft.git.Pipeline.build(spark, Seq(repoA.toString), Some("NobodySuchAuthor"))
     assert(r.commits.count() == 0)
+  }
+
+  /** The root manifest's entries of the store at `out`. */
+  private def manifestEntries(out: String): Seq[String] = {
+    val s = Files.list(Paths.get(out))
+    val m = try s.toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.getFileName.toString.startsWith("_store-manifest-")).toSeq
+    finally s.close()
+    assert(m.size == 1, s"expected one root manifest, found $m")
+    Files.readAllLines(m.head).asScala.filter(_.nonEmpty).toSeq
+  }
+
+  test("rejects hold exactly the run's invalid commits; a clean run empties them") {
+    val bad = root.resolve("rejects/repoBad")
+    mkRepo(bad, "ok.py")
+    // A commit whose author e-mail Validate rejects.
+    Files.writeString(bad.resolve("bad.py"), "content\n")
+    val env = Seq("GIT_AUTHOR_DATE" -> "1700000100 +0000",
+      "GIT_COMMITTER_DATE" -> "1700000100 +0000",
+      "GIT_AUTHOR_NAME" -> "Mallory", "GIT_AUTHOR_EMAIL" -> "not-an-email",
+      "GIT_COMMITTER_NAME" -> "Mallory", "GIT_COMMITTER_EMAIL" -> "not-an-email")
+    assert(Process(Seq("git", "add", "."), bad.toFile, env: _*).! == 0)
+    assert(Process(Seq("git", "commit", "-q", "-m", "bad"), bad.toFile, env: _*).! == 0)
+    val badSha = Process(Seq("git", "rev-parse", "HEAD"), bad.toFile).!!.trim
+    val clean = root.resolve("rejects/repoClean")
+    mkRepo(clean, "c.py")
+
+    val out = root.resolve("out_rejects").toString
+    _root_.graft.git.Pipeline.etlAppend(spark, Seq(bad.toString), out)
+    assert(spark.read.parquet(s"$out/rejects").collect()
+      .map(_.getAs[String]("sha")).toSeq == Seq(badSha))
+    _root_.graft.git.Pipeline.etlAppend(spark, Seq(clean.toString), out)
+    assert(spark.read.parquet(s"$out/rejects").count() == 0)
+  }
+
+  test("an append of repo A keeps every file of repo B's partitions and " +
+    "repo A's unchanged tags") {
+    val P = _root_.graft.git.Pipeline
+    val a = root.resolve("touched/repoTA")
+    val b = root.resolve("touched/repoTB")
+    Seq(a -> "a.py", b -> "b.py").foreach { case (p, f) =>
+      mkRepo(p, f)
+      git(p, "tag", "-a", "v1", "-m", "first")
+    }
+    val out = root.resolve("out_touched").toString
+    P.etlAppend(spark, Seq(a.toString, b.toString), out)
+    val partsOfB = Seq("commits/repo_name=repoTB/", "file_changes/repo_name=repoTB/",
+      "tags/repo_name=repoTB/", "repos/name=repoTB/")
+    def entriesOfB() = manifestEntries(out).filter(e => partsOfB.exists(e.startsWith))
+    val before = entriesOfB()
+    assert(partsOfB.forall(p => before.exists(_.startsWith(p))), before)
+    def tagsOfA() = P.readSnapshot(spark, out, "tags")
+      .filter(col("repo_name") === "repoTA").collect().map(_.toString).sorted.toSeq
+    val tagsBefore = tagsOfA()
+    assert(tagsBefore.size == 1)
+
+    // A new commit on A, no new tag.
+    Files.writeString(a.resolve("a2.py"), "more\n")
+    git(a, "add", ".")
+    git(a, "commit", "-q", "-m", "add a2.py")
+    P.etlAppend(spark, Seq(a.toString), out)
+    assert(entriesOfB() == before, "repo B's manifest entries changed")
+    assert(tagsOfA() == tagsBefore)
+    assert(P.readSnapshot(spark, out, "commits")
+      .filter(col("repo_name") === "repoTA").count() == 2)
   }
 
   test("full etl over an appended store replaces it; a following --append " +

@@ -93,4 +93,32 @@ class GitCliSpec extends SparkSpec with BeforeAndAfterAll {
     assert(repos(0).getAs[String]("language") == "Scala") // 2 .scala vs 1 .py
     assert(repos(0).getAs[Long]("total_commits") == 3L)
   }
+
+  test("a second build in one session re-extracts: a commit added in " +
+    "between is seen") {
+    val fresh = root.resolve("freshrepo")
+    def gitIn(args: String*): Unit = {
+      val env = Seq("GIT_AUTHOR_DATE" -> "1700000000 +0000",
+        "GIT_COMMITTER_DATE" -> "1700000000 +0000",
+        "GIT_AUTHOR_NAME" -> "Alice", "GIT_AUTHOR_EMAIL" -> "alice@example.com",
+        "GIT_COMMITTER_NAME" -> "Alice", "GIT_COMMITTER_EMAIL" -> "alice@example.com")
+      assert(Process(Seq("git") ++ args, fresh.toFile, env: _*).! == 0)
+    }
+    def commit(file: String): Unit = {
+      Files.writeString(fresh.resolve(file), s"$file\n")
+      gitIn("add", ".")
+      gitIn("commit", "-q", "-m", s"add $file")
+    }
+    Files.createDirectories(fresh)
+    gitIn("init", "-q", "-b", "main")
+    commit("one.py")
+    // The first result stays cached while the second build runs: a plan
+    // match against it would serve the stale extraction.
+    val first = Pipeline.build(spark, Seq(fresh.toString))
+    assert(first.commits.count() == 1)
+    commit("two.py")
+    val second = Pipeline.build(spark, Seq(fresh.toString))
+    assert(second.commits.count() == 2)
+    Seq(first, second).foreach(_.release())
+  }
 }

@@ -342,6 +342,53 @@ class StoreManifestSpec extends SparkSpec with BeforeAndAfterAll {
     }
   }
 
+  test("a failing merge fails the run only after every merge finished: no " +
+    "merge thread survives, nothing commits; the rerun converges") {
+    val repo = root.resolve("repoC")
+    def commitC(file: String, epoch: Long): Unit = {
+      Files.writeString(repo.resolve(file), s"content of $file\n")
+      git(repo, epoch, "add", ".")
+      git(repo, epoch, "commit", "-q", "-m", s"add $file")
+    }
+    Files.createDirectories(repo)
+    git(repo, 1700002000L, "init", "-q", "-b", "main")
+    commitC("c1.py", 1700002000L)
+    git(repo, 1700002000L, "tag", "-a", "c-v1", "-m", "first")
+    val out = root.resolve("out_contain").toString
+    val ref = root.resolve("out_contain_ref").toString
+    Seq(out, ref).foreach(Pipeline.etlAppend(spark, Seq(repo.toString), _))
+    val old = observe(out)
+    val manifest = names(Paths.get(out)).filter(_.startsWith("_store-manifest-"))
+    val manifestText = Files.readAllLines(Paths.get(out, manifest.head))
+
+    commitC("c2.py", 1700002100L)
+    // One committed authors file turns to garbage: the authors merge fails,
+    // the other four merges run to completion and move their files in.
+    val victim = Paths.get(out, named(out).find(_.startsWith("authors/")).get)
+    val kept = Files.readAllBytes(victim)
+    Files.write(victim, "not parquet".getBytes("UTF-8"))
+    intercept[Exception] {
+      Pipeline.etlAppend(spark, Seq(repo.toString), out)
+    }
+    val alive = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.getName.startsWith(Pipeline.MergeThreadPrefix) && t.isAlive)
+    assert(alive.isEmpty, s"merge threads outlived the run: $alive")
+    tables.filter(_ != "authors").foreach(assertUnnamed(out, _))
+    assert(names(Paths.get(out)).filter(_.startsWith("_store-manifest-")) == manifest)
+    assert(Files.readAllLines(Paths.get(out, manifest.head)) == manifestText)
+    tables.filter(_ != "authors").foreach { t =>
+      assert(Pipeline.readSnapshot(spark, out, t).collect().map(_.toString)
+        .sorted.toSeq == old(t), s"$t changed by the failed run")
+    }
+
+    Files.write(victim, kept)
+    Pipeline.etlAppend(spark, Seq(repo.toString), out)
+    Pipeline.etlAppend(spark, Seq(repo.toString), ref)
+    assert(observe(out) == observe(ref), "the rerun differs from an " +
+      "uninterrupted run")
+    assertAtRest(out)
+  }
+
   test("compaction reaps junk in every partition dir, including dirs the " +
     "manifest does not name") {
     val out = root.resolve("out_ghost").toString
