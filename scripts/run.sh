@@ -3,6 +3,10 @@
 # (same JVM flags build.sbt passes to forked runs).
 # usage: scripts/run.sh <mainClass> [args...]
 set -e
+if [ $# -lt 1 ]; then
+  echo "usage: scripts/run.sh <mainClass> [args...]" >&2
+  exit 2
+fi
 CLS="$1"; shift
 CP="/root/repo/target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
 exec java \

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark entry: times every registered query at SPARK_GRAFT_SF_DIR and
   * prints one JSON line (the driver's record).
@@ -113,21 +112,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = GraftSession.cpus
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // topk_by_score / two-stage argmax are TypedImperativeAggregates:
-      // ObjectHashAggregate abandons its hash map for sort-based agg at
-      // 128 distinct keys per task by default. The aggregation state here
-      // is k-bounded heaps (tiny), so a larger map is strictly safe and
-      // avoids a per-task sort on every argmax query.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "16384")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus)
     // JVM/scheduler/codegen warmup so the first measured query isn't
     // charged for cluster bring-up (standard bench hygiene).
     spark.range(1000000L).selectExpr("sum(id)").collect()

@@ -53,19 +53,7 @@ object Main {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      // topk_by_score / two-stage argmax are TypedImperativeAggregates:
-      // ObjectHashAggregate abandons its hash map for sort-based agg at
-      // 128 distinct keys per task by default. The aggregation state here
-      // is k-bounded heaps (tiny), so a larger map is strictly safe and
-      // avoids a per-task sort on every argmax query.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "16384")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus)
     try args.toList match {
       case "--config" :: cfgPath :: outDir :: Nil =>
         run(spark, resolveRepos(loadConfig(cfgPath)), outDir, None)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. Optional args
@@ -16,20 +15,7 @@ object Verify {
       s"unknown query name(s): ${unknown.mkString(", ")} — a typo here would " +
         "otherwise produce an empty-but-successful verify run")
     def selected(name: String): Boolean = only.isEmpty || only(name)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // topk_by_score / two-stage argmax are TypedImperativeAggregates:
-      // ObjectHashAggregate abandons its hash map for sort-based agg at
-      // 128 distinct keys per task by default. The aggregation state here
-      // is k-bounded heaps (tiny), so a larger map is strictly safe and
-      // avoids a per-task sort on every argmax query.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "16384")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

@@ -75,23 +75,27 @@ object Pipeline {
     * Spark's output-commit protocol per table — SURVEY §2.6 U6.) A root
     * manifest left by an earlier [[etlAppend]] into outDir is deleted
     * first: it lives outside the table dirs, so it would outlive their
-    * overwrite and name files that no longer exist. */
+    * overwrite and name files that no longer exist. The run holds the
+    * store-root writer lease, as [[etlAppend]] does, so it cannot
+    * overwrite files an in-flight append is about to commit; a writer
+    * refused at acquire does no work. */
   def etl(spark: SparkSession, repoPaths: Seq[String], outDir: String,
       authorGate: Option[String] = None): Result = {
-    val r = build(spark, repoPaths, authorGate)
     val base = new Path(outDir)
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(base))
+    graft.ops.GenStore.withLease(fs, base) { _ =>
+      val r = build(spark, repoPaths, authorGate)
       fs.listStatus(base).map(_.getPath)
         .filter(_.getName.startsWith(ManifestPrefix)).foreach(fs.delete(_, false))
-    r.commits.write.mode("overwrite").parquet(s"$outDir/commits")
-    r.authors.write.mode("overwrite").parquet(s"$outDir/authors")
-    r.fileChanges.write.mode("overwrite").parquet(s"$outDir/file_changes")
-    r.tags.write.mode("overwrite").parquet(s"$outDir/tags")
-    r.repos.write.mode("overwrite").parquet(s"$outDir/repos")
-    r.rejects.write.mode("overwrite").parquet(s"$outDir/rejects")
-    r.release()
-    r
+      r.commits.write.mode("overwrite").parquet(s"$outDir/commits")
+      r.authors.write.mode("overwrite").parquet(s"$outDir/authors")
+      r.fileChanges.write.mode("overwrite").parquet(s"$outDir/file_changes")
+      r.tags.write.mode("overwrite").parquet(s"$outDir/tags")
+      r.repos.write.mode("overwrite").parquet(s"$outDir/repos")
+      r.rejects.write.mode("overwrite").parquet(s"$outDir/rejects")
+      r.release()
+      r
+    }
   }
 
   /** Cross-run incremental mode (U1–U5 across successive runs): the
@@ -501,11 +505,11 @@ object Pipeline {
     }
   }
 
-  /** Compact a repo-partitioned table written by [[etlAppend]]: every
-    * incremental run adds a fresh file set to each touched partition, and
-    * long-running stores accumulate small files (the classic 100 TB
-    * operational problem — file-count pressure on listing, footer reads,
-    * and task scheduling). Partitions already at or below
+  /** Compact a repo-partitioned table written by [[etlAppend]]. Files do
+    * not pile up across runs: each merge replaces every file of the
+    * partitions it touches (`kept` drops them). What compaction folds is
+    * one write's fan-out, the several files a single merge may leave in a
+    * partition. Partitions already at or below
     * `filesPerPartition` data files are skipped (idempotent: a second
     * compact run touches nothing); the rest are coalesced, moved in, and
     * committed as ONE new store manifest — readers mid-compaction keep the

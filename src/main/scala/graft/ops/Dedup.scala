@@ -897,9 +897,8 @@ object Dedup {
     * fallback the min-label loop documents: converges in O(log²n) rounds
     * on ANY graph shape, where min-label propagation needs one round per
     * unit of diameter (a 1000-node path: ~7 rounds here vs 999 there).
-    * Near-dup graphs are usually shallow, so q47 defaults to the simpler
-    * loop; set GRAFT_CC_ALGO=star (or call this directly) when component
-    * diameters grow.
+    * Near-dup graphs are usually shallow, so q47 runs the simpler loop,
+    * which falls back to this transform when 20 rounds do not converge.
     *
     * large-star: every node strictly larger than u re-points to the min of
     * u's closed neighborhood; small-star: every smaller neighbor (and u)
@@ -977,10 +976,7 @@ object Dedup {
        |          UNION SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u)
        |SELECT u AS doc_id, least(u, min(v)) AS cluster_id
        |FROM reach GROUP BY u ORDER BY doc_id""".stripMargin) { (s, dir) =>
-    val cc =
-      if (sys.env.get("GRAFT_CC_ALGO").contains("star")) connectedComponentsStar _
-      else connectedComponents _
-    cc(lshCandidatePairs(s, dir)).orderBy(col("doc_id"))
+    connectedComponents(lshCandidatePairs(s, dir)).orderBy(col("doc_id"))
   }
 
   /** q233: INCREMENTAL dedup clustering — the label-maintenance stage the

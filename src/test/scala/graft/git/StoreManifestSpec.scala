@@ -228,7 +228,13 @@ class StoreManifestSpec extends SparkSpec with BeforeAndAfterAll {
       Pipeline.etlAppend(spark, Seq(repoA.toString), out)
     }
     assert(ex.getMessage.contains("held by"))
-    // B's rejection changed nothing: the store still resolves all-old
+    // A full etl is a writer too: it would delete the root manifest and
+    // overwrite the table dirs A is about to commit.
+    val exFull = intercept[IllegalStateException] {
+      Pipeline.etl(spark, Seq(repoA.toString), out)
+    }
+    assert(exFull.getMessage.contains("held by"))
+    // B's rejections changed nothing: the store still resolves all-old
     // (A hasn't flipped) and A's in-flight files are untouched.
     assert(observe(out) == old)
 

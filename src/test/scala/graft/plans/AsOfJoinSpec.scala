@@ -1,19 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
-class AsOfJoinSpec extends AnyFunSuite with Matchers {
+import graft.SparkSpec
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("asof-join-spec")
-    .getOrCreate()
+class AsOfJoinSpec extends SparkSpec with Matchers {
 
   import spark.implicits._
 
