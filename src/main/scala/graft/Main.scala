@@ -38,18 +38,23 @@ object Main {
       Pipeline.readSnapshot(r.commits.sparkSession, outDir, "commits")))
   }
 
+  /** Files a store partition may hold before compaction folds it into
+    * one: a day-2 append adds one file per partition, so a partition is
+    * folded about once every this many appends instead of on every one. */
+  private val FoldBound = 8
+
   /** Incremental mode — the reference's actual cross-run behavior (every
     * invocation upserts into the same store, main.ts:328-355): merge this
-    * run into the partitioned store, compact any small-file debt, report
-    * over the cumulative snapshot. */
+    * run into the partitioned store, fold partitions past [[FoldBound]]
+    * files, report over the cumulative snapshot (from the store header
+    * when it covers every partition). */
   def runAppend(spark: SparkSession, repos: Seq[String], outDir: String,
       authorGate: Option[String]): Unit = {
     require(repos.nonEmpty, "no repositories to process")
     Pipeline.etlAppend(spark, repos, outDir, authorGate)
     Seq("commits", "file_changes", "tags", "repos")
-      .foreach(Pipeline.compact(spark, outDir, _))
-    println(Pipeline.summaryReport(
-      Pipeline.readSnapshot(spark, outDir, "commits")))
+      .foreach(Pipeline.compact(spark, outDir, _, FoldBound))
+    println(Pipeline.storeReport(spark, outDir))
   }
 
   def main(args: Array[String]): Unit = {

@@ -140,6 +140,30 @@ object GitAgg {
         sum(col("total_commits")).as("total_commits"),
         min(col("first_commit_at")).as("first_commit_at"),
         max(col("last_commit_at")).as("last_commit_at"))
+
+  /** `mergeAuthors(existing, authors(commits))` as ONE aggregation (one
+    * shuffle where the composition takes two): the stored author rows and
+    * the commit rows group by email together. Only a commit row carries a
+    * (committed_at, sha) ordering, and min_by skips null orderings, so an
+    * email with commits takes its oldest commit's name, as [[authors]]
+    * does, and any other keeps its stored name. */
+  def addAuthors(existing: DataFrame, commits: DataFrame): DataFrame = {
+    val ord = struct(col("committed_at"), col("sha"))
+    existing
+      .select(col("email"), col("name"), col("total_commits"), col("first_commit_at"),
+        col("last_commit_at"), lit(null).cast(commits.select(ord).schema.head.dataType).as("__ord"))
+      .unionByName(commits.select(col("author_email").as("email"),
+        col("author_name").as("name"), lit(1L).as("total_commits"),
+        col("committed_at").as("first_commit_at"), col("committed_at").as("last_commit_at"),
+        ord.as("__ord")))
+      .groupBy(col("email"))
+      .agg(
+        coalesce(min_by(col("name"), col("__ord")),
+          max(when(col("__ord").isNull, col("name")))).as("name"),
+        sum(col("total_commits")).as("total_commits"),
+        min(col("first_commit_at")).as("first_commit_at"),
+        max(col("last_commit_at")).as("last_commit_at"))
+  }
 }
 
 /** J3: the reference's 18-entry extension → language map

@@ -42,6 +42,15 @@ object GitCli {
         "--format=%H", "-n", "1").exists(_.trim.nonEmpty)
     }
 
+  /** The commit sha `rev` names in the repo, if it names one. */
+  def revParse(repoPath: String, rev: String): Option[String] =
+    run(repoPath, "git", "rev-parse", "--verify", "-q", s"$rev^{commit}")
+      .map(_.trim).filter(_.nonEmpty)
+
+  /** Whether commit `ancestor` is reachable from commit `tip`. */
+  def isAncestor(repoPath: String, ancestor: String, tip: String): Boolean =
+    run(repoPath, "git", "merge-base", "--is-ancestor", ancestor, tip).isDefined
+
   /** RepoInfo for a path: name from the last path segment (P12) + S3. */
   def repoInfo(repoPath: String): Option[RepoInfo] =
     currentBranch(repoPath).map { b =>
@@ -59,21 +68,36 @@ object GitCli {
     * plan cannot see. Each call builds a fresh RDD, and a plan over an RDD
     * only matches a plan over the same RDD instance, so a cached earlier
     * extraction is never served for a re-run after the repos changed
-    * (GitCliSpec: two builds in one session see the new commit). */
-  private def perRepo[T: Encoder: ClassTag](spark: SparkSession,
-      repos: Seq[RepoInfo])(scan: RepoInfo => Seq[T]): Dataset[T] = {
+    * (GitCliSpec: two builds in one session see the new commit).
+    *
+    * With `onDriver` the scans run once, on the driver, as the Dataset is
+    * built, and the tasks read their output: every action over it sees
+    * the same rows without re-running a scan or caching them. For scans
+    * whose output is small (a day-2 log range). */
+  private def perRepo[R: ClassTag, T: Encoder: ClassTag](spark: SparkSession,
+      repos: Seq[R], onDriver: Boolean = false)(scan: R => Seq[T]): Dataset[T] = {
     val n = math.max(repos.size, 1)
-    spark.createDataset(spark.sparkContext.parallelize(repos, n).flatMap(scan))
+    val sc = spark.sparkContext
+    spark.createDataset(
+      if (onDriver) sc.parallelize(repos.map(scan), n).flatMap(identity)
+      else sc.parallelize(repos, n).flatMap(scan))
       .coalesce(n)
   }
 
   // ---- S1: git-log scan → raw text DataFrame ------------------------------
   /** One row per repo: (repo_name, branch, raw log text). Runs the
     * subprocess on the executor that owns the repo's partition. */
-  def rawLogs(spark: SparkSession, repos: Seq[RepoInfo]): DataFrame = {
+  def rawLogs(spark: SparkSession, repos: Seq[RepoInfo]): DataFrame =
+    rawLogsOf(spark, repos.map(r => r -> r.branch))
+
+  /** [[rawLogs]] of one revision range per repo (`<tip>` for the whole
+    * history, `<from>..<tip>` for the commits since `from`), read on the
+    * driver when `onDriver` (see [[perRepo]]). */
+  private[git] def rawLogsOf(spark: SparkSession, revs: Seq[(RepoInfo, String)],
+      onDriver: Boolean = false): DataFrame = {
     import spark.implicits._
-    perRepo(spark, repos) { r =>
-      run(r.path, "git", "log", r.branch, s"--pretty=format:$logFormat",
+    perRepo(spark, revs, onDriver) { case (r, rev) =>
+      run(r.path, "git", "log", rev, s"--pretty=format:$logFormat",
         "--numstat").map(raw => (r.name, r.branch, raw)).toSeq
     }.toDF("repo_name", "branch", "raw")
   }

@@ -2,10 +2,12 @@ package graft.git
 
 import java.util.concurrent.{Callable, ConcurrentLinkedQueue, ExecutionException, Executors}
 import java.util.concurrent.atomic.AtomicInteger
+import scala.concurrent.{Await, Promise}
+import scala.concurrent.duration.Duration
 import scala.util.{Failure, Try}
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** E1/E2: the end-to-end ETL pipeline (SURVEY §3) — extract all repos in
@@ -38,44 +40,58 @@ object Pipeline {
     * their error list, instead of silently loaded). */
   def build(spark: SparkSession, repoPaths: Seq[String],
       authorGate: Option[String] = None): Result =
-    extract(spark, repoPaths, authorGate)._2
+    new Extraction(spark, gate(repoPaths, authorGate).map(i => i -> i.branch)).result
 
-  /** [[build]] and the names of the repos that passed the gate: every
-    * repo-scoped row of the result carries one of them, so they are the
-    * partitions a run touches, known without a Spark job. */
-  private def extract(spark: SparkSession, repoPaths: Seq[String],
-      authorGate: Option[String]): (Seq[String], Result) = {
-    // S5 gate: cheap LIMIT-1 probe before full extraction (main.ts:338-343).
-    val infos = repoPaths.flatMap(GitCli.repoInfo)
+  /** The repos of `repoPaths` that pass the S5 author gate: a cheap
+    * LIMIT-1 probe before full extraction (main.ts:338-343). Every
+    * repo-scoped row of a run carries one of their names, so they are the
+    * partitions the run touches, known without a Spark job. */
+  private def gate(repoPaths: Seq[String], authorGate: Option[String]): Seq[RepoInfo] =
+    repoPaths.flatMap(GitCli.repoInfo)
       .filter(r => authorGate.forall(p => GitCli.hasCommitsByAuthor(r.path, p)))
 
-    val flagged = Validate.flagCommits(GitAgg.dedupCommits(
-      GitParse.parseLog(GitCli.rawLogs(spark, infos)))).cache()
-    val rejects = flagged.filter(!col("is_valid"))
+  /** One run's extraction, over one `git log` revision range per repo.
+    * The tables after the commits are built on call, so a day-2 append's
+    * merges build theirs concurrently, each on its own thread. The rejects
+    * are read through `observe` applied to the flagged commits (valid and
+    * not). A `small` extraction (day-2 ranges only) reads its logs on the
+    * driver, once, so its consumers share them without a cache; any other
+    * is cached until [[release]]. */
+  private final class Extraction(spark: SparkSession, revs: Seq[(RepoInfo, String)],
+      observe: DataFrame => DataFrame = identity, small: Boolean = false) {
+    private val infos = revs.map(_._1)
+    private val flagged = {
+      val parsed = Validate.flagCommits(GitAgg.dedupCommits(
+        GitParse.parseLog(GitCli.rawLogsOf(spark, revs, onDriver = small))))
+      if (small) parsed else parsed.cache()
+    }
+    private val valid = flagged.filter(col("is_valid")).drop("validation_errors", "is_valid")
+    val commits: DataFrame = valid.drop("file_changes")
+    def rejects: DataFrame = observe(flagged).filter(!col("is_valid"))
       .select(col("repo_name"), col("sha"), col("validation_errors"))
-    val commits = flagged.filter(col("is_valid"))
-      .drop("validation_errors", "is_valid")
-    val fileChanges = GitAgg.dedupFileChanges(GitParse.explodeFileChanges(commits))
-    val tags = GitAgg.dedupTags(GitParse.parseTags(GitCli.rawTags(spark, infos)))
-    val language = GitAgg.repoLanguage(GitCli.lsFiles(spark, infos))
-    val repos = GitAgg.repoMeta(commits)
-      .join(language.withColumnRenamed("repo_name", "name"), Seq("name"), "left")
-    (infos.map(_.name).distinct, Result(
-      commits = commits.drop("file_changes"),
-      authors = GitAgg.authors(commits),
+    def fileChanges: DataFrame = GitAgg.dedupFileChanges(GitParse.explodeFileChanges(valid))
+    def tags: DataFrame = GitAgg.dedupTags(GitParse.parseTags(GitCli.rawTags(spark, infos)))
+    /** (name, language) per repo, from `ls-files`. */
+    def language: DataFrame = GitAgg.repoLanguage(GitCli.lsFiles(spark, infos))
+      .withColumnRenamed("repo_name", "name")
+    def release(): Unit = { flagged.unpersist(); () }
+
+    def result: Result = Result(
+      commits = commits,
+      authors = GitAgg.authors(valid),
       fileChanges = fileChanges,
       tags = tags,
-      repos = repos,
+      repos = GitAgg.repoMeta(valid).join(language, Seq("name"), "left"),
       rejects = rejects,
-      release = () => { flagged.unpersist(); () }))
+      release = () => release())
   }
 
   /** E1/E2 with the S8 sink: write each table as parquet under outDir.
     * (The reference's one-transaction-per-repo atomicity is subsumed by
     * Spark's output-commit protocol per table — SURVEY §2.6 U6.) A root
-    * manifest left by an earlier [[etlAppend]] into outDir is deleted
-    * first: it lives outside the table dirs, so it would outlive their
-    * overwrite and name files that no longer exist. The run holds the
+    * manifest (and its header) left by an earlier [[etlAppend]] into
+    * outDir is deleted first: it lives outside the table dirs, so it would
+    * outlive their overwrite and name files that no longer exist. The run holds the
     * store-root writer lease, as [[etlAppend]] does, so it cannot
     * overwrite files an in-flight append is about to commit; a writer
     * refused at acquire does no work. */
@@ -86,7 +102,8 @@ object Pipeline {
     graft.ops.GenStore.withLease(fs, base) { _ =>
       val r = build(spark, repoPaths, authorGate)
       fs.listStatus(base).map(_.getPath)
-        .filter(_.getName.startsWith(ManifestPrefix)).foreach(fs.delete(_, false))
+        .filter(p => Seq(ManifestPrefix, HeaderPrefix).exists(p.getName.startsWith))
+        .foreach(fs.delete(_, false))
       r.commits.write.mode("overwrite").parquet(s"$outDir/commits")
       r.authors.write.mode("overwrite").parquet(s"$outDir/authors")
       r.fileChanges.write.mode("overwrite").parquet(s"$outDir/file_changes")
@@ -124,10 +141,39 @@ object Pipeline {
     * is email and its counts accumulate ACROSS repos (database.ts:109-117),
     * so it keeps the whole-table merge — it is a dimension table, orders
     * of magnitude smaller than the fact tables.
+    *
+    * Day 2 costs O(new commits). The store's header records, per repo,
+    * the branch and tip sha a run extracted and whether the repo's
+    * `commits` partition holds exactly the valid commits reachable from
+    * that tip (`exact`). A repo whose branch is unchanged, whose head is
+    * exact and an ancestor of the new tip takes the BOUNDED path: only
+    * `git log <stored>..<tip>` is read, and those commits carry keys the
+    * store does not hold, so its commits and file_changes rows are added
+    * as new files to the partition, with no stored read and no shuffle.
+    * Its `repos` row (one per partition, replaced wholesale) is built
+    * from the header's partition stats plus the new rows. Any other repo
+    * (new, branch switched, history rewritten, not exact) reads its whole
+    * log and takes the keyed merge; it is exact again once the merged
+    * partition holds no more rows than the run extracted. `for-each-ref`
+    * and `ls-files` are always read in full, and tags always merge.
+    * Authors keep the re-add semantics: a bounded repo's increment is
+    * aggregated over its stored commits plus the new ones, which is
+    * exactly what a full extraction would have read.
     */
   def etlAppend(spark: SparkSession, repoPaths: Seq[String], outDir: String,
       authorGate: Option[String] = None): Unit =
     etlAppendStaged(spark, repoPaths, outDir, authorGate, _ => ())
+
+  /** One repo of an append run: the tip it reads (None when the branch
+    * names no commit) and, on the bounded path, the stored head it
+    * extends. */
+  private final case class RepoRun(info: RepoInfo, tip: Option[String], from: Option[String]) {
+    def rev: String = (from, tip) match {
+      case (Some(f), Some(t)) => s"$f..$t"
+      case (_, Some(t)) => t
+      case _ => info.branch
+    }
+  }
 
   /** [[etlAppend]] with a step hook called at each named point of the
     * publish sequence (`after:<table>` ×5, `before:flip`, `after:flip`) —
@@ -139,40 +185,120 @@ object Pipeline {
   private[git] def etlAppendStaged(spark: SparkSession, repoPaths: Seq[String],
       outDir: String, authorGate: Option[String],
       step: String => Unit): Unit = {
-    transact(spark, outDir, StoreTables) { committed =>
+    transact(spark, outDir, StoreTables) { (committed, header) =>
       // Built under the lease: a writer refused at acquire does no work.
-      val (touched, r) = extract(spark, repoPaths, authorGate)
-      // One merge per table in publish order, each from the table's
-      // committed entries to its next ones.
-      val merges = Seq[(String, Seq[String] => Seq[String])](
-        // ON CONFLICT(repo_name, sha) DO UPDATE (database.ts:21-36)
-        "commits" -> (mergePartitioned(spark, outDir, _, "commits", "repo_name",
-          r.commits, touched)(GitAgg.upsertLatest(_, _, Seq("repo_name", "sha")))),
-        // ON CONFLICT(email): counts add, dates min/max, new name wins (:109-117)
-        "authors" -> (mergeWhole(spark, outDir, _, "authors", r.authors)(
-          GitAgg.mergeAuthors)),
-        // INSERT OR IGNORE (:148-151): stored row wins
-        "file_changes" -> (mergePartitioned(spark, outDir, _, "file_changes",
-          "repo_name", r.fileChanges, touched)(
-          GitAgg.upsertKeepFirst(_, _, Seq("repo_name", "sha", "file_path")))),
-        // ON CONFLICT(repo_name, tag_name) DO UPDATE (:228-236)
-        "tags" -> (mergePartitioned(spark, outDir, _, "tags", "repo_name",
-          r.tags, touched)(GitAgg.upsertLatest(_, _, Seq("repo_name", "tag_name")))),
-        // ON CONFLICT(name) DO UPDATE (:85-95)
-        "repos" -> (mergePartitioned(spark, outDir, _, "repos", "name",
-          r.repos, touched)(GitAgg.upsertLatest(_, _, Seq("name")))))
-      // rejects are per-run diagnostics (no reference counterpart, outside
-      // the manifest): overwritten by every run, under the lease
-      val rejects = () => {
-        r.rejects.write.mode("overwrite").parquet(s"$outDir/rejects"); Nil }
+      val infos = gate(repoPaths, authorGate)
+      val touched = infos.map(_.name).distinct
+      // Two paths with one name share a partition: no head describes it.
+      val shared = infos.groupBy(_.name).collect { case (n, is) if is.size > 1 => n }.toSet
+      val commitFiles = entriesOf(committed, "commits")
+      val commitDirs = commitFiles.map(_.split('/').head).toSet
+      val runs = infos.map { i =>
+        val tip = GitCli.revParse(i.path, i.branch)
+        val from = for {
+          t <- tip
+          h <- header.heads.get(i.name)
+          if !shared(i.name) && h.branch == i.branch && h.exact &&
+            (header.stats.contains(i.name) || !commitDirs(partDir("repo_name", i.name))) &&
+            GitCli.isAncestor(i.path, h.sha, t)
+        } yield h.sha
+        RepoRun(i, tip, from)
+      }
+      val bounded = runs.filter(_.from.nonEmpty).map(_.info.name)
+      val full = touched.filterNot(bounded.contains)
+      // The run's valid commits by repo, observed on the rejects write;
+      // the written commits partitions, observed on the commits write; the
+      // authors row count.
+      val commitsIn, commitsOut, authorsOut = new Observation()
+      val r = new Extraction(spark, runs.map(x => x.info -> x.rev),
+        _.observe(commitsIn, PartStats.byRepo(when(col("is_valid"), col("repo_name"))).as("s")),
+        small = full.isEmpty)
       try {
+        // rejects are per-run diagnostics (no reference counterpart, outside
+        // the manifest), overwritten by every run under the lease; the
+        // repos merge waits for the stats their write observes.
+        val observed = Promise[Map[String, PartStats]]()
+        val rejects = () => {
+          observed.complete(Try {
+            r.rejects.write.mode("overwrite").parquet(s"$outDir/rejects")
+            PartStats.fromObserved(commitsIn.get("s"))
+          }).future.value.get.get
+          Nil
+        }
+        // Per touched repo: the stats `written` adds to a bounded repo's
+        // stored ones; a full repo's are `written`'s alone.
+        def withStored(written: Map[String, PartStats]): Seq[(String, PartStats)] =
+          touched.flatMap { n =>
+            (if (bounded.contains(n)) (header.stats.get(n) ++ written.get(n)).reduceOption(_ + _)
+            else written.get(n)).map(n -> _)
+          }
+        // Each repo's `repos` row is the stats of the valid commits
+        // reachable from its tip (a bounded repo's stored ones plus its new
+        // commits, a full repo's extraction) and its `ls-files` language.
+        // The row replaces the stored one wholesale, so it is written with
+        // no stored read; a repo without valid commits keeps its stored
+        // row. The language is read while the rejects write runs.
+        def repoRows = {
+          import spark.implicits._
+          val lang = r.language.collect().map(l => l.getString(0) -> l.getString(1)).toMap
+          withStored(Await.result(observed.future, Duration.Inf))
+            .map { case (n, s) => (n, s.maxAt, s.rows, lang.get(n)) }
+            .toDF("name", "at", "total_commits", "language")
+            .select(col("name"), timestamp_micros(col("at")).as("last_commit_at"),
+              col("total_commits"), lit(false).as("is_archived"), col("language"))
+        }
+        val boundedFiles = commitFiles.filter(f =>
+          bounded.exists(n => f.startsWith(partDir("repo_name", n) + "/")))
+
+        // One merge per table in publish order, each from the table's
+        // committed entries to its next ones.
+        val merges = Seq[(String, Seq[String] => Seq[String])](
+          // ON CONFLICT(repo_name, sha) DO UPDATE (database.ts:21-36)
+          "commits" -> (mergePartitioned(spark, outDir, _, "commits", "repo_name",
+            r.commits, full, bounded, append = true,
+            _.observe(commitsOut, PartStats.byRepo(col("repo_name")).as("s")))(
+            GitAgg.upsertLatest(_, _, Seq("repo_name", "sha")))),
+          // ON CONFLICT(email): counts add, dates min/max, new name wins (:109-117)
+          // A bounded repo's increment counts its stored commits too.
+          "authors" -> { mine =>
+            val commits =
+              if (boundedFiles.isEmpty) r.commits
+              else readFiles(spark, new Path(outDir, "commits"), boundedFiles,
+                r.commits.schema).unionByName(r.commits)
+            mergeWhole(spark, outDir, mine, "authors", GitAgg.authors(commits).schema,
+              _.observe(authorsOut, count(lit(1)).as("n")))(
+              _.fold(GitAgg.authors(commits))(GitAgg.addAuthors(_, commits)))
+          },
+          // INSERT OR IGNORE (:148-151): stored row wins
+          "file_changes" -> (mergePartitioned(spark, outDir, _, "file_changes",
+            "repo_name", r.fileChanges, full, bounded, append = true)(
+            GitAgg.upsertKeepFirst(_, _, Seq("repo_name", "sha", "file_path")))),
+          // ON CONFLICT(repo_name, tag_name) DO UPDATE (:228-236)
+          "tags" -> (mergePartitioned(spark, outDir, _, "tags", "repo_name",
+            r.tags, touched)(GitAgg.upsertLatest(_, _, Seq("repo_name", "tag_name")))),
+          // ON CONFLICT(name) DO UPDATE (:85-95)
+          "repos" -> (mergePartitioned(spark, outDir, _, "repos", "name",
+            repoRows, Nil, touched)(
+            GitAgg.upsertLatest(_, _, Seq("name")))))
         val entries = concurrently(merges.map { case (table, merge) =>
           () => merge(entriesOf(committed, table)) } :+ rejects)
         merges.foreach { case (table, _) => step(s"after:$table") }
         step("before:flip")
-        merges.map(_._1).zip(entries).foldLeft(committed) {
+        val in = observed.future.value.get.get
+        // A merged partition was written whole; a bounded one got new rows.
+        val stats = withStored(PartStats.fromObserved(commitsOut.get("s"))).toMap
+        // A merged partition is exact when it holds no more rows than the
+        // run extracted: nothing outside the tip's history survived.
+        val heads = runs.collect { case x @ RepoRun(i, Some(tip), _) if !shared(i.name) =>
+          i.name -> RepoHead(i.branch, tip, x.from.nonEmpty ||
+            stats.get(i.name).map(_.rows).getOrElse(0L) ==
+              in.get(i.name).map(_.rows).getOrElse(0L))
+        }
+        val next = merges.map(_._1).zip(entries).foldLeft(committed) {
           case (snap, (table, mine)) => replacing(snap, table)(_ => mine)
         }
+        (next, StoreHeader(header.heads -- touched ++ heads, header.stats -- touched ++ stats,
+          Some(authorsOut.get("n").asInstanceOf[Long])))
       } finally r.release()
     }
     step("after:flip")
@@ -181,7 +307,7 @@ object Pipeline {
   /** Name prefix of the threads [[etlAppend]] runs its merges on. */
   private[git] val MergeThreadPrefix = "graft-store-merge-"
 
-  /** Run `tasks` on a fixed pool of one thread per store table and return
+  /** Run `tasks` on a fixed pool of one thread per task and return
     * their results in order. The pool is created for this call, so its
     * threads inherit the caller's SparkContext local properties, and every
     * thread is joined before return: no task outlives the call (nor the
@@ -190,7 +316,7 @@ object Pipeline {
   private def concurrently[T](tasks: Seq[() => T]): Seq[T] = {
     val threads = new ConcurrentLinkedQueue[Thread]()
     val n = new AtomicInteger()
-    val pool = Executors.newFixedThreadPool(StoreTables.size, (task: Runnable) => {
+    val pool = Executors.newFixedThreadPool(tasks.size, (task: Runnable) => {
       val t = new Thread(task, s"$MergeThreadPrefix${n.incrementAndGet()}")
       t.setDaemon(true)
       threads.add(t)
@@ -250,9 +376,29 @@ object Pipeline {
   // invisible to Spark's file index). Single writer per store (the
   // lease); a reader overlapping a later write's GC should re-resolve the
   // manifest or run with spark.sql.files.ignoreMissingFiles.
+  //
+  // Header: each manifest has a [[StoreHeader]] next to it under the same
+  // seq, `_store-header-<seq>`: per repo the branch, tip sha and `exact`
+  // flag its last extraction recorded, per `commits` partition its summary
+  // stats, and the `authors` row count (the format is on [[StoreHeader]]).
+  // [[transact]] writes header seq+1 (through the same `GenStore.commit`,
+  // replacing any orphan a crashed writer left at that seq) right before
+  // manifest seq+1, so the manifest rename commits both, and a header
+  // counts only while the manifest of its seq is the live one. Manifest
+  // entries stay data files only. A manifest without a header (plain
+  // [[etl]] output, a store from before headers, a listing commit) reads
+  // as "no heads, no stats": its repos take the full path and its report
+  // scans. The stats are observed (`Dataset.observe`) on the writes that
+  // run anyway; a writer that rewrites partitions without producing new
+  // stats drops those partitions' stats and heads, and [[compact]] carries
+  // them forward, since it does not change content.
+  //
+  // `rejects` holds the invalid commits of the run's extraction: a bounded
+  // run reads only the new commits, so it reports only new rejects.
   // -----------------------------------------------------------------------
 
   private val ManifestPrefix = "_store-manifest-"
+  private val HeaderPrefix = "_store-header-"
 
   private def readManifest(fs: FileSystem, m: Path): Seq[String] = {
     val in = fs.open(m)
@@ -260,6 +406,29 @@ object Pipeline {
       .filter(_.nonEmpty).toList
     finally in.close()
   }
+
+  /** The header committed with manifest `seq`; empty when it has none. */
+  private def readHeader(fs: FileSystem, base: Path, seq: Long): StoreHeader = {
+    val h = new Path(base, f"$HeaderPrefix$seq%09d")
+    if (fs.exists(h)) StoreHeader.parse(readManifest(fs, h)) else StoreHeader.empty
+  }
+
+  /** The live manifest's entries and header, if the store has a manifest. */
+  private def committedState(fs: FileSystem, base: Path): Option[(Seq[String], StoreHeader)] =
+    graft.ops.GenStore.latest(fs, base, ManifestPrefix)
+      .map { case (seq, m) => (readManifest(fs, m), readHeader(fs, base, seq)) }
+
+  /** `value`'s partition dir name under `partCol`, as partitionBy writes it. */
+  private def partDir(partCol: String, value: String): String =
+    s"$partCol=" + org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(value)
+
+  /** The committed files `files` (`store`-relative) of a partitioned
+    * table, read with `schema` pinned: no schema-inference job, and the
+    * partition column's values come from the dir names via basePath. */
+  private def readFiles(spark: SparkSession, store: Path, files: Seq[String],
+      schema: org.apache.spark.sql.types.StructType): DataFrame =
+    spark.read.schema(schema).option("basePath", store.toString)
+      .parquet(files.map(f => new Path(store, f).toString): _*)
 
   /** `table`'s entries of a store snapshot, table-relative. */
   private def entriesOf(snap: Seq[String], table: String): Seq[String] =
@@ -276,34 +445,39 @@ object Pipeline {
     * `_maintenance.lease` protocol of the index stores: a second writer
     * is refused at acquire, a killed one is taken over after the TTL):
     * recover `tables` from pre-manifest crash states, resolve the
-    * committed snapshot, hand it to `body`, commit what `body` returns as
-    * the next manifest, then delete the files it no longer names. A store
-    * without a manifest (plain [[etl]] output, or a fresh dir) is its own
-    * listing, committed as seq 0 before any file moves in — so from then
-    * on junk is always distinguishable from data, even after a crash
-    * mid-first-run. */
+    * committed snapshot and its header, hand them to `body`, commit what
+    * `body` returns as the next manifest and header, then delete the files
+    * it no longer names. A store without a manifest (plain [[etl]] output,
+    * or a fresh dir) is its own listing, committed as seq 0 with an empty
+    * header before any file moves in — so from then on junk is always
+    * distinguishable from data, even after a crash mid-first-run. */
   private def transact(spark: SparkSession, outDir: String, tables: Seq[String])(
-      body: Seq[String] => Seq[String]): Unit = {
+      body: (Seq[String], StoreHeader) => (Seq[String], StoreHeader)): Unit = {
     val base = new Path(outDir)
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
     graft.ops.GenStore.withLease(fs, base) { lease =>
-      def commit(seq: Long, files: Seq[String]): Unit =
+      def commit(seq: Long, files: Seq[String], header: StoreHeader): Unit = {
+        val h = new Path(base, f"$HeaderPrefix$seq%09d")
+        if (fs.exists(h)) fs.delete(h, false)
+        graft.ops.GenStore.commit(fs, base, HeaderPrefix, h.getName, header.render, Some(lease))
         graft.ops.GenStore.commit(fs, base, ManifestPrefix,
           f"$ManifestPrefix$seq%09d", files.sorted.mkString("\n"), Some(lease))
+      }
       tables.foreach(recoverRetired(fs, base, _))
-      val (seq, snap) = graft.ops.GenStore.latest(fs, base, ManifestPrefix) match {
-        case Some((seq, m)) => (seq, readManifest(fs, m))
+      val (seq, snap, header) = graft.ops.GenStore.latest(fs, base, ManifestPrefix) match {
+        case Some((seq, m)) => (seq, readManifest(fs, m), readHeader(fs, base, seq))
         case None =>
           val files = (StoreTables ++ tables).distinct.flatMap(t =>
             listDataFiles(fs, new Path(base, t)).map(f => s"$t/$f"))
-          commit(0L, files)
-          (0L, files)
+          commit(0L, files, StoreHeader.empty)
+          (0L, files, StoreHeader.empty)
       }
-      // Orphaned manifest tmps and lease-takeover claims (no gen= dirs here).
-      graft.ops.GenStore.preClean(fs, base, ManifestPrefix, seq, Nil)
-      val next = body(snap)
-      if (next.toSet != snap.toSet) {
-        commit(seq + 1, next)
+      // Orphaned manifest and header tmps and lease-takeover claims (no
+      // gen= dirs here).
+      Seq(ManifestPrefix, HeaderPrefix).foreach(graft.ops.GenStore.preClean(fs, base, _, seq, Nil))
+      val (next, nextHeader) = body(snap, header)
+      if (next.toSet != snap.toSet || nextHeader != header) {
+        commit(seq + 1, next, nextHeader)
         snap.diff(next).foreach(f => fs.delete(new Path(base, f), false))
       }
     }
@@ -326,32 +500,35 @@ object Pipeline {
     moved
   }
 
-  /** Whole-table keyed merge (dimension tables): merge the committed files
-    * `mine` with `incoming` and move the result in; returns the table's
-    * next entries. */
+  /** Whole-table keyed merge (dimension tables): read the committed files
+    * `mine` with `schema` (None when there are none), move what `merged`
+    * makes of them, through `observe`, in; returns the table's next
+    * entries. */
   private def mergeWhole(spark: SparkSession, outDir: String, mine: Seq[String],
-      table: String, incoming: DataFrame)(
-      merge: (DataFrame, DataFrame) => DataFrame): Seq[String] = {
+      table: String, schema: org.apache.spark.sql.types.StructType,
+      observe: DataFrame => DataFrame)(
+      merged: Option[DataFrame] => DataFrame): Seq[String] = {
     val path = new Path(outDir, table)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     cleanJunk(fs, path, mine.toSet, Seq(""))
-    val merged =
-      if (mine.nonEmpty)
-        merge(spark.read.option("basePath", path.toString)
-          .parquet(mine.map(f => new Path(path, f).toString): _*), incoming)
-      else incoming
+    val stored = if (mine.nonEmpty) Some(readFiles(spark, path, mine, schema)) else None
     stageInto(fs, new Path(outDir, s".$table.__staged"), path)(
-      merged.write.mode("overwrite").parquet(_))
+      observe(merged(stored)).write.mode("overwrite").parquet(_))
   }
 
-  /** Partitioned keyed merge (fact tables): prune the store read of the
-    * committed files `mine` to the `touched` partition values, merge with
-    * `incoming` (whose values must all be in `touched`), stage partitioned
-    * and move the files in; returns the table's next entries, the replaced
-    * partitions' entries swapped for the new ones. */
+  /** Partitioned keyed merge (fact tables). The store read of the
+    * committed files `mine` is pruned to the `merged` partition values;
+    * those rows are merged with `incoming` and the partitions replaced.
+    * The `fresh` values' rows are written with no stored read: their
+    * committed files are kept when `append` (the rows carry keys the store
+    * does not hold), and replaced otherwise (a row that replaces its
+    * partition wholesale). `incoming`'s values must all be in `merged` or
+    * `fresh`. The written frame goes through `observe`. Returns the
+    * table's next entries. */
   private def mergePartitioned(spark: SparkSession, outDir: String,
       mine: Seq[String], table: String, partCol: String, incoming: DataFrame,
-      touched: Seq[String])(
+      merged: Seq[String], fresh: Seq[String] = Nil, append: Boolean = false,
+      observe: DataFrame => DataFrame = identity)(
       merge: (DataFrame, DataFrame) => DataFrame): Seq[String] = {
     val store = new Path(outDir, table)
     val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -363,43 +540,38 @@ object Pipeline {
     val flatData = mine.exists(!_.contains("/"))
     // Dir names use Spark's own partition-path escaping, so the prune
     // matches exactly what partitionBy wrote.
-    val touchedDirs = touched.map(v => s"$partCol=" +
-      org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(v))
+    val mergedDirs = merged.map(partDir(partCol, _)).toSet
+    val appendedDirs = if (append) fresh.map(partDir(partCol, _)).toSet else Set.empty[String]
     // Junk scan scoped to the dirs this run writes: junk elsewhere is
     // invisible to snapshot readers and reaped by compact's full pass.
     cleanJunk(fs, store, mine.toSet,
-      if (flatData || mine.isEmpty) Seq("") else touchedDirs)
+      if (flatData || mine.isEmpty) Seq("") else (merged ++ fresh).map(partDir(partCol, _)))
     // The SNAPSHOT is the file listing: the store read enumerates exactly
-    // the committed files of the touched partitions — no recursive
+    // the committed files of the merged partitions — no recursive
     // directory listing of the archive, ever (the 100 TB cost a dir-based
-    // read would pay at plan time even with partition pruning). Explicit
-    // schema pins the partition column's type; values come from the dir
-    // names via basePath.
+    // read would pay at plan time even with partition pruning).
     val files =
-      if (flatData) mine else mine.filter(f => touchedDirs.contains(f.split('/').head))
-    val merged =
+      if (flatData) mine else mine.filter(f => mergedDirs.contains(f.split('/').head))
+    val result =
       if (files.isEmpty) incoming
-      else merge(spark.read.schema(incoming.schema)
-        .option("basePath", store.toString)
-        .parquet(files.map(f => new Path(store, f).toString): _*), incoming)
+      else merge(readFiles(spark, store, files, incoming.schema), incoming)
         .select(incoming.columns.map(col): _*)
     val staged = new Path(outDir, s".$table.__staged")
     val written = stageInto(fs, staged, store)(
-      merged.write.mode("overwrite").partitionBy(partCol).parquet(_))
+      observe(result).write.mode("overwrite").partitionBy(partCol).parquet(_))
+    // Untouched partitions and appended ones keep their entries; the
+    // written others (all root files on the migration path) are replaced.
+    val replaced = written.map(_.split('/').head).toSet -- appendedDirs
     val kept =
-      if (written.nonEmpty) {
-        // Untouched partitions keep their entries; the replaced partitions
-        // (all root files on the migration path) are dropped.
-        val replaced = written.map(_.split('/').head).toSet
-        if (flatData) Nil else mine.filterNot(f => replaced.contains(f.split('/').head))
-      } else mine
+      if (flatData && written.nonEmpty) Nil
+      else mine.filterNot(f => replaced.contains(f.split('/').head))
     // An empty merged result (e.g. a run with no tags) writes no
     // partition files; a table with no files yet gets a flat empty-
     // schema'd parquet instead, so it stays readable — replaced by real
     // partition dirs the first time any appear.
     val marker =
       if (written.isEmpty && mine.isEmpty)
-        stageInto(fs, staged, store)(merged.write.mode("overwrite").parquet(_))
+        stageInto(fs, staged, store)(result.write.mode("overwrite").parquet(_))
       else Nil
     kept ++ written ++ marker
   }
@@ -472,16 +644,18 @@ object Pipeline {
     * committed as the next store manifest, every other table's entries
     * carried forward. Without a repo list, the touched partition values
     * are read from `incoming` (one Spark job). Null values would silently
-    * miss the snapshot prune and corrupt the merge — refused loudly. */
+    * miss the snapshot prune and corrupt the merge — refused loudly. The
+    * header drops the touched values' heads and stats: this writer
+    * produces none. */
   private[git] def publishPartitioned(spark: SparkSession, outDir: String,
       table: String, partCol: String, incoming: DataFrame)(
       merge: (DataFrame, DataFrame) => DataFrame): Unit =
-    transact(spark, outDir, Seq(table)) { snap =>
+    transact(spark, outDir, Seq(table)) { (snap, header) =>
       val touched = incoming.select(col(partCol)).distinct()
         .as(Encoders.STRING).collect().toSeq
       require(!touched.contains(null), s"$table: null $partCol cannot be partition-merged")
-      replacing(snap, table)(mergePartitioned(spark, outDir, _, table, partCol,
-        incoming, touched)(merge))
+      (replacing(snap, table)(mergePartitioned(spark, outDir, _, table, partCol,
+        incoming, touched)(merge)), header.without(touched))
     }
 
   /** Read a table at the store's committed snapshot: resolve the root
@@ -505,25 +679,25 @@ object Pipeline {
     }
   }
 
-  /** Compact a repo-partitioned table written by [[etlAppend]]. Files do
-    * not pile up across runs: each merge replaces every file of the
-    * partitions it touches (`kept` drops them). What compaction folds is
-    * one write's fan-out, the several files a single merge may leave in a
-    * partition. Partitions already at or below
-    * `filesPerPartition` data files are skipped (idempotent: a second
-    * compact run touches nothing); the rest are coalesced, moved in, and
-    * committed as ONE new store manifest — readers mid-compaction keep the
-    * old snapshot, whose files are dropped only after the commit. Content
-    * is untouched; only the physical file layout changes. Compaction is
-    * also the full junk pass: it scans EVERY partition dir of the table,
-    * so files a crashed publish moved into a dir no later run writes are
-    * reaped here. */
+  /** Compact a repo-partitioned table written by [[etlAppend]]. Files
+    * pile up in a partition two ways: a day-2 append on the bounded path
+    * adds its rows as new files next to the stored ones, and a keyed merge
+    * may leave one write's fan-out of several files. Partitions at or
+    * below `filesPerPartition` data files are skipped (idempotent: a
+    * second compact run touches nothing); each of the rest is folded into
+    * one file, moved in, and committed as ONE new store manifest — readers
+    * mid-compaction keep the old snapshot, whose files are dropped only
+    * after the commit. Content is untouched, so the header (heads and
+    * stats) is carried forward; only the physical file layout changes.
+    * Compaction is also the full junk pass: it scans EVERY partition dir
+    * of the table, so files a crashed publish moved into a dir no later
+    * run writes are reaped here. */
   def compact(spark: SparkSession, outDir: String, table: String,
       filesPerPartition: Int = 1): Unit = {
     val store = new Path(outDir, table)
     val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(store)) return
-    transact(spark, outDir, Seq(table))(replacing(_, table) { mine =>
+    transact(spark, outDir, Seq(table))((snap, header) => (replacing(snap, table) { mine =>
       val dirOf = (f: String) => f.split('/').init.mkString("/")
       cleanJunk(fs, store, mine.toSet, "" +: fs.listStatus(store)
         .filter(_.isDirectory).map(_.getPath.getName)
@@ -537,11 +711,11 @@ object Pipeline {
             // rewritten files — same layout the publish writes.
             stageInto(fs, new Path(store, s".compact-staged-$dir"), partDir)(
               spark.read.parquet(partDir.toString)
-                .coalesce(filesPerPartition).write.mode("overwrite").parquet(_))
+                .coalesce(1).write.mode("overwrite").parquet(_))
               .map(n => s"$dir/$n")
           }
       }
-    })
+    }, header))
   }
 
   /** S8 bucketed-layout sink (opt-in): the two fact tables are saved as
@@ -597,18 +771,58 @@ object Pipeline {
     r
   }
 
-  /** S10: formatted console summary report (src/transforms.ts:64-86). */
+  /** S10: formatted console summary report (src/transforms.ts:64-86). A
+    * table with no commits reports 0 for every count and no date range. */
   def summaryReport(commits: DataFrame): String = {
     val row = GitAgg.summaryStats(commits).collect()(0)
+    formatReport((0 to 5).map(i => if (row.isNullAt(i)) 0L else row.getLong(i)),
+      if (row.isNullAt(6)) None else Some((row.getString(6), row.getString(7))))
+  }
+
+  private def formatReport(n: Seq[Long], dates: Option[(String, String)]): String = {
     val fmt = java.text.NumberFormat.getIntegerInstance(java.util.Locale.US)
-    def n(i: Int) = fmt.format(row.getLong(i))
-    s"""Summary
-       |  Commits:        ${n(0)}
-       |  Additions:      ${n(1)}
-       |  Deletions:      ${n(2)}
-       |  Files changed:  ${n(3)}
-       |  Merge commits:  ${n(4)}
-       |  Unique authors: ${n(5)}
-       |  Date range:     ${row.getString(6)} .. ${row.getString(7)}""".stripMargin
+    val lines = Seq("Commits:        ", "Additions:      ", "Deletions:      ",
+      "Files changed:  ", "Merge commits:  ", "Unique authors: ")
+      .zip(n).map { case (k, v) => s"  $k${fmt.format(v)}" } ++
+      dates.map { case (from, to) => s"  Date range:     $from .. $to" }
+    ("Summary" +: lines).mkString("\n")
+  }
+
+  /** [[summaryReport]] of the store at `outDir`. When its header has the
+    * stats of every committed `commits` partition and the `authors` row
+    * count, the report is built from them, with no Spark job; otherwise
+    * it scans the committed `commits` table. Unique authors is the
+    * `authors` row count: every email in `authors` came from a valid
+    * commit the store keeps, and every stored commit's email was counted
+    * in. Root-level `commits` entries are ignored: under a header an
+    * append wrote, the only one is the empty-table marker (a flat-layout
+    * store is migrated by its first append). */
+  def storeReport(spark: SparkSession, outDir: String): String =
+    headerReport(spark, outDir)
+      .getOrElse(summaryReport(readSnapshot(spark, outDir, "commits")))
+
+  /** [[storeReport]] from the header alone; None when it does not cover
+    * the store. */
+  private[git] def headerReport(spark: SparkSession, outDir: String): Option[String] = {
+    val base = new Path(outDir)
+    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    committedState(fs, base).flatMap { case (entries, header) =>
+      val parts = entriesOf(entries, "commits").filter(_.contains("/"))
+        .map(_.split('/').head).distinct
+      val byDir = header.stats.map { case (r, s) => partDir("repo_name", r) -> s }
+      val stats = parts.map(byDir.get)
+      for {
+        authors <- header.authors
+        all <- if (stats.forall(_.nonEmpty)) Some(stats.flatten) else None
+      } yield {
+        val t = all.foldLeft(PartStats.zero)(_ + _)
+        val day = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd")
+          .withZone(java.time.ZoneId.of(spark.conf.get("spark.sql.session.timeZone")))
+        def date(micros: Long) = day.format(
+          java.time.Instant.EPOCH.plus(micros, java.time.temporal.ChronoUnit.MICROS))
+        formatReport(Seq(t.rows, t.additions, t.deletions, t.filesChanged, t.merges, authors),
+          if (t.rows == 0) None else Some((date(t.minAt), date(t.maxAt))))
+      }
+    }
   }
 }

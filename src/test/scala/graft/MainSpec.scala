@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 import scala.sys.process._
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 import org.scalatest.BeforeAndAfterAll
@@ -69,8 +70,9 @@ class MainSpec extends SparkSpec with BeforeAndAfterAll {
       .filter(col("email") === "alice@example.com").collect()(0)
     assert(alice1.getAs[Long]("total_commits") == 1)
 
-    // second run re-parses the full history (now 2 commits: Alice's plus a
-    // new one by Bob)
+    // second run: the history is now 2 commits, Alice's plus a new one by
+    // Bob (the run reads only Bob's; the increment it adds to authors still
+    // counts both)
     val env = Seq(
       "GIT_AUTHOR_DATE" -> "1700000100 +0000", "GIT_COMMITTER_DATE" -> "1700000100 +0000",
       "GIT_AUTHOR_NAME" -> "Bob", "GIT_AUTHOR_EMAIL" -> "bob@example.com",
@@ -391,6 +393,23 @@ class MainSpec extends SparkSpec with BeforeAndAfterAll {
     // gate that matches nothing → Pipeline sees zero repos post-filter
     val r = _root_.graft.git.Pipeline.build(spark, Seq(repoA.toString), Some("NobodySuchAuthor"))
     assert(r.commits.count() == 0)
+  }
+
+  test("a repo with no commits reports zero counts and no date range, " +
+    "through run and runAppend") {
+    val empty = root.resolve("empty/repoEmpty")
+    Files.createDirectories(empty)
+    git(empty, "init", "-q", "-b", "main")
+    val want = Seq("Summary", "  Commits:        0", "  Additions:      0",
+      "  Deletions:      0", "  Files changed:  0", "  Merge commits:  0",
+      "  Unique authors: 0").mkString("", "\n", "\n")
+    Seq[(String, (SparkSession, Seq[String], String, Option[String]) => Unit)](
+      "out_empty_run" -> Main.run, "out_empty_append" -> Main.runAppend).foreach {
+      case (out, main) =>
+        val printed = new java.io.ByteArrayOutputStream()
+        Console.withOut(printed)(main(spark, Seq(empty.toString), root.resolve(out).toString, None))
+        assert(printed.toString("UTF-8") == want, out)
+    }
   }
 
   /** The root manifest's entries of the store at `out`. */

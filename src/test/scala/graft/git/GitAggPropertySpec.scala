@@ -85,6 +85,15 @@ class GitAggPropertySpec extends SparkSpec {
     }, 6)
   }
 
+  test("U2: addAuthors ≡ mergeAuthors of the stored table and authors(commits)") {
+    def rows(d: DataFrame) = d.collect().map(_.toString).toSet
+    passes(Prop.forAll(genCommits, genCommits) { (stored, run) =>
+      val existing = GitAgg.authors(df(stored))
+      rows(GitAgg.addAuthors(existing, df(run))) ==
+        rows(GitAgg.mergeAuthors(existing, GitAgg.authors(df(run))))
+    }, 6)
+  }
+
   test("A2 totals are invariant under partitioning") {
     passes(Prop.forAll(genCommits) { cs =>
       val d = df(cs)
