@@ -10,8 +10,9 @@ object GraftSession {
   /** Local core count: `SPARK_GRAFT_CPUS`, default 4. */
   def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
 
-  /** `local[cpus]` with one shuffle partition per core, UTC, no UI and
-    * WARN logs (returns the JVM's existing session if there is one). */
+  /** `local[cpus]` with one shuffle partition per core, UTC, no UI, WARN
+    * logs and [[NoForkLocalFileSystem]] for `file:` (returns the JVM's
+    * existing session if there is one). */
   def local(cpus: String): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -23,6 +24,7 @@ object GraftSession {
       // is k-bounded heaps (tiny), so a larger map is strictly safe and
       // avoids a per-task sort on every argmax query.
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "16384")
+      .config("spark.hadoop.fs.file.impl", classOf[NoForkLocalFileSystem].getName)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

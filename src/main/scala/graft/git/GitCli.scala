@@ -92,23 +92,37 @@ object GitCli {
 
   /** [[rawLogs]] of one revision range per repo (`<tip>` for the whole
     * history, `<from>..<tip>` for the commits since `from`), read on the
-    * driver when `onDriver` (see [[perRepo]]). */
+    * driver when `onDriver` (see [[perRepo]]). A `git log` that fails
+    * reads as no rows, as a branch with no commits does, unless `strict`:
+    * then it fails the scan, so a failed read of a range known to name
+    * commits cannot pass for an empty one. */
   private[git] def rawLogsOf(spark: SparkSession, revs: Seq[(RepoInfo, String)],
-      onDriver: Boolean = false): DataFrame = {
+      onDriver: Boolean = false, strict: Boolean = false): DataFrame = {
     import spark.implicits._
     perRepo(spark, revs, onDriver) { case (r, rev) =>
-      run(r.path, "git", "log", rev, s"--pretty=format:$logFormat",
-        "--numstat").map(raw => (r.name, r.branch, raw)).toSeq
+      val raw = run(r.path, "git", "log", rev, s"--pretty=format:$logFormat", "--numstat")
+      if (strict && raw.isEmpty)
+        throw new IllegalStateException(s"git log $rev failed in ${r.path}")
+      raw.map(raw => (r.name, r.branch, raw)).toSeq
     }.toDF("repo_name", "branch", "raw")
   }
 
   // ---- S2: git-tags scan (src/git-parser.ts:277-300) ----------------------
   def rawTags(spark: SparkSession, repos: Seq[RepoInfo]): DataFrame = {
     import spark.implicits._
-    perRepo(spark, repos) { r =>
-      run(r.path, "git", "for-each-ref", "refs/tags",
-        s"--format=$tagFormat").map(raw => (r.name, raw)).toSeq
-    }.toDF("repo_name", "raw")
+    perRepo(spark, repos)(r => tagRefs(r.path).map(raw => (r.name, raw)).toSeq)
+      .toDF("repo_name", "raw")
+  }
+
+  /** One repo's `for-each-ref refs/tags` output, as [[rawTags]] reads
+    * it; None when the read fails. */
+  private[git] def tagRefs(repoPath: String): Option[String] =
+    run(repoPath, "git", "for-each-ref", "refs/tags", s"--format=$tagFormat")
+
+  /** [[rawTags]] of outputs already read: (repo name, raw) pairs. */
+  private[git] def rawTagsOf(spark: SparkSession, read: Seq[(String, String)]): DataFrame = {
+    import spark.implicits._
+    perRepo(spark, read)(Seq(_)).toDF("repo_name", "raw")
   }
 
   // ---- S4: file-list scan (src/git-parser.ts:214-222) ---------------------

@@ -39,8 +39,10 @@ object Pipeline {
     * as a filter/quality-flag stage — invalid commits are diverted, with
     * their error list, instead of silently loaded). */
   def build(spark: SparkSession, repoPaths: Seq[String],
-      authorGate: Option[String] = None): Result =
-    new Extraction(spark, gate(repoPaths, authorGate).map(i => i -> i.branch)).result
+      authorGate: Option[String] = None): Result = {
+    val infos = gate(repoPaths, authorGate)
+    new Extraction(spark, infos, GitCli.rawLogs(spark, infos)).result
+  }
 
   /** The repos of `repoPaths` that pass the S5 author gate: a cheap
     * LIMIT-1 probe before full extraction (main.ts:338-343). Every
@@ -50,19 +52,17 @@ object Pipeline {
     repoPaths.flatMap(GitCli.repoInfo)
       .filter(r => authorGate.forall(p => GitCli.hasCommitsByAuthor(r.path, p)))
 
-  /** One run's extraction, over one `git log` revision range per repo.
-    * The tables after the commits are built on call, so a day-2 append's
-    * merges build theirs concurrently, each on its own thread. The rejects
-    * are read through `observe` applied to the flagged commits (valid and
-    * not). A `small` extraction (day-2 ranges only) reads its logs on the
-    * driver, once, so its consumers share them without a cache; any other
-    * is cached until [[release]]. */
-  private final class Extraction(spark: SparkSession, revs: Seq[(RepoInfo, String)],
+  /** One run's extraction of the repos `infos`, over their raw `git log`
+    * text `logs`. The tables after the commits are built on call, so a
+    * day-2 append's merges build theirs concurrently, each on its own
+    * thread. The rejects are read through `observe` applied to the
+    * flagged commits (valid and not). A `small` extraction (day-2 ranges
+    * read on the driver) is not cached: its consumers share the logs
+    * already read; any other is cached until [[release]]. */
+  private final class Extraction(spark: SparkSession, infos: Seq[RepoInfo], logs: DataFrame,
       observe: DataFrame => DataFrame = identity, small: Boolean = false) {
-    private val infos = revs.map(_._1)
     private val flagged = {
-      val parsed = Validate.flagCommits(GitAgg.dedupCommits(
-        GitParse.parseLog(GitCli.rawLogsOf(spark, revs, onDriver = small))))
+      val parsed = Validate.flagCommits(GitAgg.dedupCommits(GitParse.parseLog(logs)))
       if (small) parsed else parsed.cache()
     }
     private val valid = flagged.filter(col("is_valid")).drop("validation_errors", "is_valid")
@@ -154,11 +154,17 @@ object Pipeline {
     * from the header's partition stats plus the new rows. Any other repo
     * (new, branch switched, history rewritten, not exact) reads its whole
     * log and takes the keyed merge; it is exact again once the merged
-    * partition holds no more rows than the run extracted. `for-each-ref`
-    * and `ls-files` are always read in full, and tags always merge.
-    * Authors keep the re-add semantics: a bounded repo's increment is
-    * aggregated over its stored commits plus the new ones, which is
-    * exactly what a full extraction would have read.
+    * partition holds no more rows than the run extracted. A `git log`
+    * that fails for a repo whose tip resolved fails the run before its
+    * commit, so a failed read cannot pass for a range with no commits.
+    * `ls-files` is read in full on every run, and so is `for-each-ref`,
+    * once per repo, on the driver. The header records the SHA-256 of each
+    * repo's `for-each-ref` output; a repo whose output has the recorded
+    * digest is left out of the tags merge, and a run where no repo's
+    * refs changed keeps the committed tags entries with no read, no job
+    * and no write. Authors keep the re-add semantics: a bounded repo's
+    * increment is aggregated over its stored commits plus the new ones,
+    * which is exactly what a full extraction would have read.
     */
   def etlAppend(spark: SparkSession, repoPaths: Seq[String], outDir: String,
       authorGate: Option[String] = None): Unit =
@@ -168,11 +174,9 @@ object Pipeline {
     * names no commit) and, on the bounded path, the stored head it
     * extends. */
   private final case class RepoRun(info: RepoInfo, tip: Option[String], from: Option[String]) {
-    def rev: String = (from, tip) match {
-      case (Some(f), Some(t)) => s"$f..$t"
-      case (_, Some(t)) => t
-      case _ => info.branch
-    }
+    /** The `git log` range the run reads; None when there is no commit
+      * to read. */
+    def rev: Option[String] = tip.map(t => from.fold(t)(f => s"$f..$t"))
   }
 
   /** [[etlAppend]] with a step hook called at each named point of the
@@ -206,11 +210,24 @@ object Pipeline {
       }
       val bounded = runs.filter(_.from.nonEmpty).map(_.info.name)
       val full = touched.filterNot(bounded.contains)
+      // Each repo's `for-each-ref` output, read once, here. A repo whose
+      // output has the digest its tags partition was last merged from is
+      // left out of the tags merge: its rows are a function of the name
+      // and the output, and their upsert into the partition is a no-op.
+      // Two paths with one name, or a failed read, record no digest and
+      // always merge.
+      val tagsRead = infos.map(i => i -> GitCli.tagRefs(i.path))
+      val tagDigests = tagsRead.collect { case (i, Some(raw)) if !shared(i.name) =>
+        i.name -> StoreHeader.tagsDigest(raw) }.toMap
+      val tagsMerged = touched.filterNot(n => tagDigests.get(n).exists(header.tags.get(n).contains))
       // The run's valid commits by repo, observed on the rejects write;
       // the written commits partitions, observed on the commits write; the
-      // authors row count.
+      // authors row count. A range of a repo whose tip resolved names
+      // commits, so a `git log` of it that fails fails the run.
       val commitsIn, commitsOut, authorsOut = new Observation()
-      val r = new Extraction(spark, runs.map(x => x.info -> x.rev),
+      val r = new Extraction(spark, infos,
+        GitCli.rawLogsOf(spark, runs.flatMap(x => x.rev.map(x.info -> _)),
+          onDriver = full.isEmpty, strict = true),
         _.observe(commitsIn, PartStats.byRepo(when(col("is_valid"), col("repo_name"))).as("s")),
         small = full.isEmpty)
       try {
@@ -273,9 +290,16 @@ object Pipeline {
           "file_changes" -> (mergePartitioned(spark, outDir, _, "file_changes",
             "repo_name", r.fileChanges, full, bounded, append = true)(
             GitAgg.upsertKeepFirst(_, _, Seq("repo_name", "sha", "file_path")))),
-          // ON CONFLICT(repo_name, tag_name) DO UPDATE (:228-236)
-          "tags" -> (mergePartitioned(spark, outDir, _, "tags", "repo_name",
-            r.tags, touched)(GitAgg.upsertLatest(_, _, Seq("repo_name", "tag_name")))),
+          // ON CONFLICT(repo_name, tag_name) DO UPDATE (:228-236), from
+          // the outputs read above; with no repo to merge, the committed
+          // entries stand.
+          "tags" -> { mine =>
+            if (tagsMerged.isEmpty) mine
+            else mergePartitioned(spark, outDir, mine, "tags", "repo_name",
+              GitAgg.dedupTags(GitParse.parseTags(GitCli.rawTagsOf(spark, tagsRead.collect {
+                case (i, Some(raw)) if tagsMerged.contains(i.name) => i.name -> raw }))),
+              tagsMerged)(GitAgg.upsertLatest(_, _, Seq("repo_name", "tag_name")))
+          },
           // ON CONFLICT(name) DO UPDATE (:85-95)
           "repos" -> (mergePartitioned(spark, outDir, _, "repos", "name",
             repoRows, Nil, touched)(
@@ -298,7 +322,7 @@ object Pipeline {
           case (snap, (table, mine)) => replacing(snap, table)(_ => mine)
         }
         (next, StoreHeader(header.heads -- touched ++ heads, header.stats -- touched ++ stats,
-          Some(authorsOut.get("n").asInstanceOf[Long])))
+          Some(authorsOut.get("n").asInstanceOf[Long]), header.tags -- touched ++ tagDigests))
       } finally r.release()
     }
     step("after:flip")
@@ -379,7 +403,8 @@ object Pipeline {
   //
   // Header: each manifest has a [[StoreHeader]] next to it under the same
   // seq, `_store-header-<seq>`: per repo the branch, tip sha and `exact`
-  // flag its last extraction recorded, per `commits` partition its summary
+  // flag its last extraction recorded and the digest of the tag list its
+  // `tags` partition was merged from, per `commits` partition its summary
   // stats, and the `authors` row count (the format is on [[StoreHeader]]).
   // [[transact]] writes header seq+1 (through the same `GenStore.commit`,
   // replacing any orphan a crashed writer left at that seq) right before
@@ -390,8 +415,8 @@ object Pipeline {
   // as "no heads, no stats": its repos take the full path and its report
   // scans. The stats are observed (`Dataset.observe`) on the writes that
   // run anyway; a writer that rewrites partitions without producing new
-  // stats drops those partitions' stats and heads, and [[compact]] carries
-  // them forward, since it does not change content.
+  // stats drops those partitions' stats, heads and tag digests, and
+  // [[compact]] carries them forward, since it does not change content.
   //
   // `rejects` holds the invalid commits of the run's extraction: a bounded
   // run reads only the new commits, so it reports only new rejects.
@@ -645,8 +670,8 @@ object Pipeline {
     * carried forward. Without a repo list, the touched partition values
     * are read from `incoming` (one Spark job). Null values would silently
     * miss the snapshot prune and corrupt the merge — refused loudly. The
-    * header drops the touched values' heads and stats: this writer
-    * produces none. */
+    * header drops the touched values' heads, stats and tag digests: this
+    * writer produces none. */
   private[git] def publishPartitioned(spark: SparkSession, outDir: String,
       table: String, partCol: String, incoming: DataFrame)(
       merge: (DataFrame, DataFrame) => DataFrame): Unit =
@@ -687,8 +712,9 @@ object Pipeline {
     * second compact run touches nothing); each of the rest is folded into
     * one file, moved in, and committed as ONE new store manifest — readers
     * mid-compaction keep the old snapshot, whose files are dropped only
-    * after the commit. Content is untouched, so the header (heads and
-    * stats) is carried forward; only the physical file layout changes.
+    * after the commit. Content is untouched, so the header (heads, stats
+    * and tag digests) is carried forward; only the physical file layout
+    * changes.
     * Compaction is also the full junk pass: it scans EVERY partition dir
     * of the table, so files a crashed publish moved into a dir no later
     * run writes are reaped here. */

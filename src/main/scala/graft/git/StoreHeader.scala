@@ -70,37 +70,52 @@ private[git] object PartStats {
 }
 
 /** What a store snapshot holds besides its file list: the head of each
-  * repo it extracted, the stats of each `commits` partition and the
-  * `authors` row count. Stats and heads are keyed by repo name.
+  * repo it extracted, the stats of each `commits` partition, the
+  * `authors` row count and, per repo, the SHA-256 (hex) of the
+  * `for-each-ref refs/tags` output its `tags` partition was last merged
+  * from. Heads, stats and tag digests are keyed by repo name.
   *
   * Rendered as one line per item, fields separated by single spaces, repo
-  * names escaped as partition dir names (so they hold no space):
+  * names escaped as partition dir names, with spaces escaped too
+  * (`%20`), so a name is one field:
   * {{{
   *   head <repo> <branch> <sha> <exact>
   *   stats <repo> <rows> <additions> <deletions> <files> <merges> <minAt> <maxAt>
+  *   tags <repo> <sha256-hex>
   *   authors <rows>
   * }}}
-  * An absent or empty header is [[StoreHeader.empty]]: no heads, no stats. */
+  * An absent or empty header is [[StoreHeader.empty]]: no heads, no
+  * stats, no tag digests. */
 private[git] final case class StoreHeader(heads: Map[String, RepoHead],
-    stats: Map[String, PartStats], authors: Option[Long]) {
+    stats: Map[String, PartStats], authors: Option[Long],
+    tags: Map[String, String]) {
 
-  /** This header without the heads and stats of `repos`: for a writer that
-    * rewrites their partitions without producing new ones. */
+  /** This header without the heads, stats and tag digests of `repos`: for
+    * a writer that rewrites their partitions without producing new ones. */
   def without(repos: Iterable[String]): StoreHeader =
-    copy(heads = heads -- repos, stats = stats -- repos)
+    copy(heads = heads -- repos, stats = stats -- repos, tags = tags -- repos)
+
+  private def esc(repo: String): String = escapePathName(repo).replace(" ", "%20")
 
   def render: String = {
     val hs = heads.toSeq.sortBy(_._1).map { case (r, h) =>
-      s"head ${escapePathName(r)} ${h.branch} ${h.sha} ${h.exact}" }
+      s"head ${esc(r)} ${h.branch} ${h.sha} ${h.exact}" }
     val ss = stats.toSeq.sortBy(_._1).map { case (r, s) =>
-      s"stats ${escapePathName(r)} ${s.rows} ${s.additions} ${s.deletions} " +
+      s"stats ${esc(r)} ${s.rows} ${s.additions} ${s.deletions} " +
         s"${s.filesChanged} ${s.merges} ${s.minAt} ${s.maxAt}" }
-    (hs ++ ss ++ authors.map(n => s"authors $n")).map(_ + "\n").mkString
+    val ts = tags.toSeq.sortBy(_._1).map { case (r, d) => s"tags ${esc(r)} $d" }
+    (hs ++ ss ++ ts ++ authors.map(n => s"authors $n")).map(_ + "\n").mkString
   }
 }
 
 private[git] object StoreHeader {
-  val empty: StoreHeader = StoreHeader(Map.empty, Map.empty, None)
+  val empty: StoreHeader = StoreHeader(Map.empty, Map.empty, None, Map.empty)
+
+  /** The digest a `tags` line records for one `for-each-ref` output. */
+  def tagsDigest(raw: String): String =
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(raw.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .map(b => f"${b & 0xff}%02x").mkString
 
   def parse(lines: Seq[String]): StoreHeader =
     lines.map(_.split(' ').toList).foldLeft(empty) {
@@ -110,6 +125,7 @@ private[git] object StoreHeader {
         val v = n.map(_.toLong)
         h.copy(stats = h.stats + (unescapePathName(r) ->
           PartStats(v(0), v(1), v(2), v(3), v(4), v(5), v(6))))
+      case (h, "tags" :: r :: d :: Nil) => h.copy(tags = h.tags + (unescapePathName(r) -> d))
       case (h, "authors" :: n :: Nil) => h.copy(authors = Some(n.toLong))
       case (_, l) => throw new IllegalStateException(s"malformed store header line: ${l.mkString(" ")}")
     }

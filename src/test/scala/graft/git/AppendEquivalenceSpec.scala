@@ -5,6 +5,7 @@ import scala.jdk.CollectionConverters._
 import scala.sys.process._
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
 import org.apache.spark.sql.functions.col
 import org.scalatest.BeforeAndAfterAll
 
@@ -101,15 +102,27 @@ class AppendEquivalenceSpec extends SparkSpec with BeforeAndAfterAll {
   private def rows(df: DataFrame): Seq[String] =
     df.select(df.columns.sorted.map(col): _*).collect().map(_.toString).sorted.toSeq
 
-  /** The committed files of `repo`'s commits partition. */
-  private def commitFiles(out: String, repo: String): Set[String] =
+  /** The committed entries of the store at `out` under `prefix`. */
+  private def entries(out: String, prefix: String): Set[String] =
     if (!Files.exists(Paths.get(out))) Set.empty
     else {
       val s = Files.list(Paths.get(out))
       val m = try s.iterator().asScala.filter(_.getFileName.toString.startsWith("_store-manifest-"))
         .toList finally s.close()
-      Files.readAllLines(m.head).asScala.filter(_.startsWith(s"commits/repo_name=$repo/")).toSet
+      Files.readAllLines(m.head).asScala.filter(_.startsWith(prefix)).toSet
     }
+
+  /** The committed files of `repo`'s commits partition. */
+  private def commitFiles(out: String, repo: String): Set[String] =
+    entries(out, s"commits/repo_name=${escapePathName(repo)}/")
+
+  /** Every file under `dir`, relative, with its content. */
+  private def tree(dir: String): Map[String, Seq[Byte]] = {
+    val s = Files.walk(Paths.get(dir))
+    try s.iterator().asScala.filter(Files.isRegularFile(_)).map(f =>
+      Paths.get(dir).relativize(f).toString -> Files.readAllBytes(f).toSeq).toMap
+    finally s.close()
+  }
 
   /** One `Main.runAppend` of `repos` into `out`, the model advanced to the
     * same repo states, and every check of the class doc. Returns, per
@@ -274,5 +287,92 @@ class AppendEquivalenceSpec extends SparkSpec with BeforeAndAfterAll {
     }
     assert(counts.max <= 8, counts)
     assert(counts.contains(1), s"never folded: $counts")
+  }
+
+  test("an append with unchanged refs keeps the tags entries; a moved, a deleted " +
+    "or a re-messaged tag merges") {
+    val r = new Repo("tagdigest")
+    val out = root.resolve("out_tagdigest").toString
+    val model = new Model
+    val c1 = r.commit("one")("a.py" -> "1\n")
+    r.git("tag", "-a", "v1", "-m", "first release")
+    r.commit("two")("b.py" -> "2\n")
+    r.git("tag", "v2-light")
+    append(out, model, r)
+    val tagsDir = Paths.get(out, "tags").toString
+    /** Appends, then tells whether the run merged the tags partition. */
+    def merged(): Boolean = {
+      val (before, files) = (entries(out, "tags/"), tree(tagsDir))
+      append(out, model, r)
+      val kept = entries(out, "tags/") == before
+      if (kept) assert(tree(tagsDir) == files, "an unmerged run wrote tags files")
+      !kept
+    }
+    // New commits, then none, with the same refs.
+    r.commit("three", bob)("c.py" -> "3\n")
+    assert(!merged())
+    assert(!merged())
+    r.git("tag", "-f", "v2-light", r.head)
+    assert(merged(), "a moved tag")
+    assert(!merged())
+    r.git("tag", "-d", "v2-light")
+    assert(merged(), "a deleted tag")
+    r.git("tag", "-f", "-a", "v1", "-m", "first release, edited", c1)
+    assert(merged(), "an edited annotated-tag message")
+    assert(Pipeline.readSnapshot(spark, out, "tags").filter(col("tag_name") === "v1")
+      .select("message").collect().map(_.getString(0)).toSeq == Seq("first release, edited"))
+    assert(!merged())
+  }
+
+  test("two paths with one name record no tags digest and always merge their tags") {
+    val x = new Repo("dupX/dup")
+    val y = new Repo("dupY/dup")
+    val out = root.resolve("out_dup").toString
+    val model = new Model
+    x.commit("x one")("x.py" -> "1\n")
+    x.git("tag", "vx")
+    y.commit("y one", bob)("y.py" -> "1\n")
+    y.git("tag", "vy")
+    append(out, model, x, y)
+    val header = {
+      val s = Files.list(Paths.get(out))
+      val h = try s.iterator().asScala.filter(_.getFileName.toString.startsWith("_store-header-"))
+        .toList.max finally s.close()
+      Files.readAllLines(h).asScala
+    }
+    assert(!header.exists(_.startsWith("tags ")), header)
+    val before = entries(out, "tags/")
+    append(out, model, x, y)
+    assert(entries(out, "tags/") != before)
+  }
+
+  test("a repo dir name with a space and an `=` reads back from the header") {
+    val r = new Repo("two words=x")
+    val out = root.resolve("out_spaced").toString
+    val model = new Model
+    r.commit("one")("a.py" -> "1\n")
+    r.git("tag", "v1")
+    append(out, model, r)
+    r.commit("two")("b.py" -> "2\n")
+    assert(append(out, model, r) == Map("two words=x" -> true))
+  }
+
+  test("a bounded git log that fails fails the append and leaves the store as it was") {
+    val r = new Repo("lostblob")
+    val out = root.resolve("out_lostblob").toString
+    val model = new Model
+    r.commit("one")("a.py" -> "1\n")
+    append(out, model, r)
+    r.commit("two")("b.py" -> "two\n")
+    // The new commit's blob goes missing: its tip still resolves and
+    // descends from the stored head, but `git log --numstat` fails.
+    val blob = r.git("rev-parse", "HEAD:b.py").trim
+    val loose = r.dir.resolve(".git").resolve("objects").resolve(blob.take(2)).resolve(blob.drop(2))
+    Files.delete(loose)
+    val before = tree(out)
+    intercept[IllegalStateException](Main.runAppend(spark, Seq(r.path), out, None))
+    assert(tree(out) == before, "a failed append changed the store")
+    r.git("hash-object", "-w", "b.py")
+    assert(append(out, model, r) == Map("lostblob" -> true))
   }
 }

@@ -368,6 +368,8 @@ class StoreManifestSpec extends SparkSpec with BeforeAndAfterAll {
     val manifestText = Files.readAllLines(Paths.get(out, manifest.head))
 
     commitC("c2.py", 1700002100L)
+    // A new tag, so the tags merge has work too (unchanged refs skip it).
+    git(repo, 1700002100L, "tag", "c-v2")
     // One committed authors file turns to garbage: the authors merge fails,
     // the other four merges run to completion and move their files in.
     val victim = Paths.get(out, named(out).find(_.startsWith("authors/")).get)
