@@ -9,6 +9,7 @@ import scala.util.{Failure, Try}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Encoders, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.GraftShim
 
 /** E1/E2: the end-to-end ETL pipeline (SURVEY §3) — extract all repos in
   * parallel, union, transform once, write the five output tables as parquet.
@@ -165,6 +166,12 @@ object Pipeline {
     * and no write. Authors keep the re-add semantics: a bounded repo's
     * increment is aggregated over its stored commits plus the new ones,
     * which is exactly what a full extraction would have read.
+    *
+    * A run where every repo takes the bounded path plans all of its frames
+    * (the extraction, the five merges, the authors increment's stored read
+    * and the `repos` rows) on a clone of `spark` that generates no code,
+    * see [[interpreted]]; `spark`'s own conf is not changed. A run with a
+    * full-path repo keeps codegen: its extraction can be large.
     */
   def etlAppend(spark: SparkSession, repoPaths: Seq[String], outDir: String,
       authorGate: Option[String] = None): Unit =
@@ -210,6 +217,9 @@ object Pipeline {
       }
       val bounded = runs.filter(_.from.nonEmpty).map(_.info.name)
       val full = touched.filterNot(bounded.contains)
+      // A bounded-only run reads a few new commits: every frame below is
+      // planned on a session that generates no code (see `interpreted`).
+      val session = if (full.isEmpty) interpreted(spark) else spark
       // Each repo's `for-each-ref` output, read once, here. A repo whose
       // output has the digest its tags partition was last merged from is
       // left out of the tags merge: its rows are a function of the name
@@ -225,8 +235,8 @@ object Pipeline {
       // authors row count. A range of a repo whose tip resolved names
       // commits, so a `git log` of it that fails fails the run.
       val commitsIn, commitsOut, authorsOut = new Observation()
-      val r = new Extraction(spark, infos,
-        GitCli.rawLogsOf(spark, runs.flatMap(x => x.rev.map(x.info -> _)),
+      val r = new Extraction(session, infos,
+        GitCli.rawLogsOf(session, runs.flatMap(x => x.rev.map(x.info -> _)),
           onDriver = full.isEmpty, strict = true),
         _.observe(commitsIn, PartStats.byRepo(when(col("is_valid"), col("repo_name"))).as("s")),
         small = full.isEmpty)
@@ -256,7 +266,7 @@ object Pipeline {
         // no stored read; a repo without valid commits keeps its stored
         // row. The language is read while the rejects write runs.
         def repoRows = {
-          import spark.implicits._
+          import session.implicits._
           val lang = r.language.collect().map(l => l.getString(0) -> l.getString(1)).toMap
           withStored(Await.result(observed.future, Duration.Inf))
             .map { case (n, s) => (n, s.maxAt, s.rows, lang.get(n)) }
@@ -271,7 +281,7 @@ object Pipeline {
         // committed entries to its next ones.
         val merges = Seq[(String, Seq[String] => Seq[String])](
           // ON CONFLICT(repo_name, sha) DO UPDATE (database.ts:21-36)
-          "commits" -> (mergePartitioned(spark, outDir, _, "commits", "repo_name",
+          "commits" -> (mergePartitioned(session, outDir, _, "commits", "repo_name",
             r.commits, full, bounded, append = true,
             _.observe(commitsOut, PartStats.byRepo(col("repo_name")).as("s")))(
             GitAgg.upsertLatest(_, _, Seq("repo_name", "sha")))),
@@ -280,14 +290,14 @@ object Pipeline {
           "authors" -> { mine =>
             val commits =
               if (boundedFiles.isEmpty) r.commits
-              else readFiles(spark, new Path(outDir, "commits"), boundedFiles,
+              else readFiles(session, new Path(outDir, "commits"), boundedFiles,
                 r.commits.schema).unionByName(r.commits)
-            mergeWhole(spark, outDir, mine, "authors", GitAgg.authors(commits).schema,
+            mergeWhole(session, outDir, mine, "authors", GitAgg.authors(commits).schema,
               _.observe(authorsOut, count(lit(1)).as("n")))(
               _.fold(GitAgg.authors(commits))(GitAgg.addAuthors(_, commits)))
           },
           // INSERT OR IGNORE (:148-151): stored row wins
-          "file_changes" -> (mergePartitioned(spark, outDir, _, "file_changes",
+          "file_changes" -> (mergePartitioned(session, outDir, _, "file_changes",
             "repo_name", r.fileChanges, full, bounded, append = true)(
             GitAgg.upsertKeepFirst(_, _, Seq("repo_name", "sha", "file_path")))),
           // ON CONFLICT(repo_name, tag_name) DO UPDATE (:228-236), from
@@ -295,17 +305,20 @@ object Pipeline {
           // entries stand.
           "tags" -> { mine =>
             if (tagsMerged.isEmpty) mine
-            else mergePartitioned(spark, outDir, mine, "tags", "repo_name",
-              GitAgg.dedupTags(GitParse.parseTags(GitCli.rawTagsOf(spark, tagsRead.collect {
+            else mergePartitioned(session, outDir, mine, "tags", "repo_name",
+              GitAgg.dedupTags(GitParse.parseTags(GitCli.rawTagsOf(session, tagsRead.collect {
                 case (i, Some(raw)) if tagsMerged.contains(i.name) => i.name -> raw }))),
               tagsMerged)(GitAgg.upsertLatest(_, _, Seq("repo_name", "tag_name")))
           },
           // ON CONFLICT(name) DO UPDATE (:85-95)
-          "repos" -> (mergePartitioned(spark, outDir, _, "repos", "name",
+          "repos" -> (mergePartitioned(session, outDir, _, "repos", "name",
             repoRows, Nil, touched)(
             GitAgg.upsertLatest(_, _, Seq("name")))))
-        val entries = concurrently(merges.map { case (table, merge) =>
-          () => merge(entriesOf(committed, table)) } :+ rejects)
+        // The merge threads inherit `session` as their active session, so
+        // conf read outside a Dataset action (the `repos` rows' encoder) is
+        // its conf.
+        val entries = GraftShim.withActive(session)(concurrently(merges.map {
+          case (table, merge) => () => merge(entriesOf(committed, table)) } :+ rejects))
         merges.foreach { case (table, _) => step(s"after:$table") }
         step("before:flip")
         val in = observed.future.value.get.get
@@ -326,6 +339,39 @@ object Pipeline {
       } finally r.release()
     }
     step("after:flip")
+  }
+
+  /** A clone of `spark` that plans with no generated code. A clone, not
+    * `newSession`, keeps the caller's runtime SQL confs and listeners;
+    * the caller's own conf is left as it is.
+    *
+    * Spark keeps generated classes in one JVM-wide cache (100 entries by
+    * default, in 4 LRU segments). A bounded append needs more classes
+    * than that next to its caller's queries, so with codegen it
+    * recompiled 64–112 classes to process a few dozen rows; interpreted,
+    * it compiles 2. `wholeStage=false` alone leaves every operator's
+    * projections and predicates compiled: measured, 31–72 compiles per
+    * append and an op median of 1.69 s against 1.59 s with codegen. The
+    * internal `factoryMode=NO_CODEGEN` makes those factories take their
+    * interpreted form too.
+    *
+    * The 2 classes an append still compiles, about 55–90 ms together:
+    *  - the row joiner of `repoLanguage`'s partial count (3 grouping
+    *    columns + 1 buffer): a partial hash aggregate has no interpreted
+    *    joiner, whatever the task's conf says;
+    *  - the serializer of [[PartStats]]' `Map` buffer, built when an
+    *    executor serializes a task's observed metrics for the driver.
+    *    That runs after the task, on a thread that no longer carries the
+    *    session's conf, so it takes the default `FALLBACK` mode.
+    * Both are compiled again on every append: each clone gets its own
+    * executor class loader, and the class cache is keyed by class loader.
+    * Neither can go without a Spark job of its own or a driver-side copy
+    * of the language and stats logic. */
+  private def interpreted(spark: SparkSession): SparkSession = {
+    val s = GraftShim.cloneSession(spark)
+    s.conf.set("spark.sql.codegen.wholeStage", "false")
+    s.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    s
   }
 
   /** Name prefix of the threads [[etlAppend]] runs its merges on. */

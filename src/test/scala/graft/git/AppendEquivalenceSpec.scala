@@ -4,6 +4,7 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import scala.sys.process._
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
 import org.apache.spark.sql.functions.col
@@ -127,12 +128,17 @@ class AppendEquivalenceSpec extends SparkSpec with BeforeAndAfterAll {
   /** One `Main.runAppend` of `repos` into `out`, the model advanced to the
     * same repo states, and every check of the class doc. Returns, per
     * repo, whether its stored commits files were kept (the bounded path). */
-  private def append(out: String, model: Model, repos: Repo*): Map[String, Boolean] = {
+  private def append(out: String, model: Model, repos: Repo*): Map[String, Boolean] =
+    appendWith(out, model, repos)(run => run)
+
+  /** [[append]] with its `Main.runAppend` call run through `around`. */
+  private def appendWith(out: String, model: Model, repos: Seq[Repo])(
+      around: (=> Unit) => Unit): Map[String, Boolean] = {
     val paths = repos.map(_.path)
     val names = repos.map(_.dir.getFileName.toString)
     val before = names.map(n => n -> commitFiles(out, n)).toMap
     val printed = new java.io.ByteArrayOutputStream()
-    Console.withOut(printed)(Main.runAppend(spark, paths, out, None))
+    around(Console.withOut(printed)(Main.runAppend(spark, paths, out, None)))
     model.run(paths)
     Pipeline.StoreTables.foreach { t =>
       val got = Pipeline.readSnapshot(spark, out, t)
@@ -374,5 +380,41 @@ class AppendEquivalenceSpec extends SparkSpec with BeforeAndAfterAll {
     assert(tree(out) == before, "a failed append changed the store")
     r.git("hash-object", "-w", "b.py")
     assert(append(out, model, r) == Map("lostblob" -> true))
+  }
+
+  /** Drops every class in Spark's JVM-wide generated-class cache
+    * (`CodeGenerator.cache` is private), so a compile count that follows
+    * is what the code generates, whatever the cache held before. */
+  private def dropGeneratedClasses(): Unit = {
+    val gen = org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    val cache = gen.getClass.getDeclaredMethod("cache")
+    cache.setAccessible(true)
+    val c = cache.invoke(gen)
+    c.getClass.getMethod("invalidateAll").invoke(c)
+  }
+
+  test("a bounded append generates at most 2 classes and leaves the caller's " +
+    "codegen conf as it was") {
+    val r = new Repo("interpreted")
+    val out = root.resolve("out_interpreted").toString
+    val model = new Model
+    val keys = Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
+    val conf = keys.map(spark.conf.getOption)
+    r.commit("one")("a.py" -> "1\n")
+    r.git("tag", "v1")
+    append(out, model, r)
+    r.commit("two")("b.py" -> "2\n")
+    assert(append(out, model, r) == Map("interpreted" -> true), "warm-up")
+    r.commit("three", bob)("c.py" -> "3\n", "b.py" -> "2\n2\n")
+    r.git("tag", "v2")
+    dropGeneratedClasses()
+    var compiles = -1L
+    assert(appendWith(out, model, Seq(r)) { run =>
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      run
+      compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    } == Map("interpreted" -> true))
+    assert(compiles <= 2, s"$compiles classes compiled")
+    assert(keys.map(spark.conf.getOption) == conf)
   }
 }
