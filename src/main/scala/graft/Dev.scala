@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
@@ -16,14 +17,16 @@ import org.apache.spark.sql.graftshim.GraftShim
   * `time` runs each query `reps` times into the noop sink (the FULL plan;
   * count() would let Catalyst prune unreferenced projections, as in
   * Bench) and prints one `[profile]` line: the wall seconds of every rep,
-  * then the jobs, stages, tasks and summed task seconds of the last rep.
-  * A query whose wall time is mostly jobs × scheduling floor is
-  * overhead-bound; one dominated by task time is compute-bound.
+  * then the jobs, classes compiled, stages, tasks and summed task seconds
+  * of the last rep. A query whose wall time is mostly jobs × scheduling
+  * floor is overhead-bound; one dominated by task time is compute-bound;
+  * one that compiles many classes pays for codegen.
   *
   * `plans` writes each query's `explain("formatted")` to
-  * `<outDir>/<name>.txt`. Building a query's DataFrame may run its eager
-  * prologue (gates, persists, driver-side loops); the final plan itself is
-  * not executed.
+  * `<outDir>/<name>.txt`, planned on the session the query runs on (see
+  * [[GraftSession.forInput]]). Building a query's DataFrame may run its
+  * eager prologue (gates, persists, driver-side loops); the final plan
+  * itself is not executed.
   *
   * Every name is checked before anything runs. The cache is cleared
   * before each query (and each rep): queries that persist intermediates
@@ -67,20 +70,24 @@ object Dev {
         if (t.taskInfo != null) taskMs.addAndGet(t.taskInfo.duration)
       }
     }
+    var classes = 0L
     spark.sparkContext.addSparkListener(listener)
     try names.foreach { name =>
       val wall = (1 to reps).map { _ =>
         spark.catalog.clearCache()
         GraftShim.drainListeners(spark)
         Seq(jobs, stages, tasks).foreach(_.set(0)); taskMs.set(0L)
+        val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
         val t0 = System.nanoTime()
         SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
+        val t = (System.nanoTime() - t0) / 1e9
+        classes = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled
+        t
       }
       GraftShim.drainListeners(spark)
       println(f"[profile] $name%-34s ${wall.map(t => f"$t%7.2f").mkString(" ")}" +
-        f"  jobs=${jobs.get()}%4d stages=${stages.get()}%4d tasks=${tasks.get()}%6d" +
-        f" taskTime=${taskMs.get() / 1000.0}%8.2f")
+        f"  jobs=${jobs.get()}%4d classes=$classes%4d stages=${stages.get()}%4d" +
+        f" tasks=${tasks.get()}%6d taskTime=${taskMs.get() / 1000.0}%8.2f")
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 

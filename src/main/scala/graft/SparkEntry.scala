@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftshim.GraftShim
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   * Queries are declared as [[Q]] values in graft.ops.* registries; this
@@ -23,8 +24,17 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     ops.Relational.q7StarJoin.fn(spark, "/root/testdata/sf0.001")
 
+  /** Each query builds on the session [[GraftSession.forInput]] picks for
+    * its `sfDir` (an interpreted clone of the caller's session for a small
+    * input), and the returned frame carries that session into the
+    * caller's action. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    registry.map(q => q.name -> q.fn).toMap
+    registry.map { q =>
+      q.name -> { (spark: SparkSession, sfDir: String) =>
+        val s = GraftSession.forInput(spark, sfDir)
+        GraftShim.withActive(s)(q.fn(s, sfDir))
+      }
+    }.toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops. */

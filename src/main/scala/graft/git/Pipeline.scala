@@ -11,6 +11,8 @@ import org.apache.spark.sql.{DataFrame, Encoders, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.GraftShim
 
+import graft.GraftSession
+
 /** E1/E2: the end-to-end ETL pipeline (SURVEY §3) — extract all repos in
   * parallel, union, transform once, write the five output tables as parquet.
   *
@@ -170,8 +172,9 @@ object Pipeline {
     * A run where every repo takes the bounded path plans all of its frames
     * (the extraction, the five merges, the authors increment's stored read
     * and the `repos` rows) on a clone of `spark` that generates no code,
-    * see [[interpreted]]; `spark`'s own conf is not changed. A run with a
-    * full-path repo keeps codegen: its extraction can be large.
+    * see [[graft.GraftSession.interpreted]]; `spark`'s own conf is not
+    * changed. A run with a full-path repo keeps codegen: its extraction
+    * can be large.
     */
   def etlAppend(spark: SparkSession, repoPaths: Seq[String], outDir: String,
       authorGate: Option[String] = None): Unit =
@@ -218,8 +221,8 @@ object Pipeline {
       val bounded = runs.filter(_.from.nonEmpty).map(_.info.name)
       val full = touched.filterNot(bounded.contains)
       // A bounded-only run reads a few new commits: every frame below is
-      // planned on a session that generates no code (see `interpreted`).
-      val session = if (full.isEmpty) interpreted(spark) else spark
+      // planned on a session that generates no code.
+      val session = if (full.isEmpty) GraftSession.interpreted(spark) else spark
       // Each repo's `for-each-ref` output, read once, here. A repo whose
       // output has the digest its tags partition was last merged from is
       // left out of the tags merge: its rows are a function of the name
@@ -339,39 +342,6 @@ object Pipeline {
       } finally r.release()
     }
     step("after:flip")
-  }
-
-  /** A clone of `spark` that plans with no generated code. A clone, not
-    * `newSession`, keeps the caller's runtime SQL confs and listeners;
-    * the caller's own conf is left as it is.
-    *
-    * Spark keeps generated classes in one JVM-wide cache (100 entries by
-    * default, in 4 LRU segments). A bounded append needs more classes
-    * than that next to its caller's queries, so with codegen it
-    * recompiled 64–112 classes to process a few dozen rows; interpreted,
-    * it compiles 2. `wholeStage=false` alone leaves every operator's
-    * projections and predicates compiled: measured, 31–72 compiles per
-    * append and an op median of 1.69 s against 1.59 s with codegen. The
-    * internal `factoryMode=NO_CODEGEN` makes those factories take their
-    * interpreted form too.
-    *
-    * The 2 classes an append still compiles, about 55–90 ms together:
-    *  - the row joiner of `repoLanguage`'s partial count (3 grouping
-    *    columns + 1 buffer): a partial hash aggregate has no interpreted
-    *    joiner, whatever the task's conf says;
-    *  - the serializer of [[PartStats]]' `Map` buffer, built when an
-    *    executor serializes a task's observed metrics for the driver.
-    *    That runs after the task, on a thread that no longer carries the
-    *    session's conf, so it takes the default `FALLBACK` mode.
-    * Both are compiled again on every append: each clone gets its own
-    * executor class loader, and the class cache is keyed by class loader.
-    * Neither can go without a Spark job of its own or a driver-side copy
-    * of the language and stats logic. */
-  private def interpreted(spark: SparkSession): SparkSession = {
-    val s = GraftShim.cloneSession(spark)
-    s.conf.set("spark.sql.codegen.wholeStage", "false")
-    s.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    s
   }
 
   /** Name prefix of the threads [[etlAppend]] runs its merges on. */

@@ -33,8 +33,9 @@ class DevSpec extends SparkSpec {
       .filter(_.startsWith("[profile]"))
     assert(lines.map(_.split("\\s+")(1)) == Seq(q1, q7), lines)
     lines.foreach { l =>
-      val jobs = "jobs=\\s*(\\d+)".r.findFirstMatchIn(l).map(_.group(1).toInt)
-      assert(jobs.exists(_ > 0), l)
+      def field(name: String) = s"$name=\\s*(-?\\d+)".r.findFirstMatchIn(l).map(_.group(1).toInt)
+      assert(field("jobs").exists(_ > 0), l)
+      assert(field("classes").exists(_ >= 0), l)
     }
   }
 
