@@ -31,6 +31,12 @@ object PlanProbe {
   def stop(): Unit = sink = None
   def record(label: String, plan: SparkPlan): Unit = sink.foreach(_(label, plan))
 
+  /** Executions a capture listener has recorded. A session cloned from
+    * an attached one carries a copy of its listener, so one execution can
+    * reach several; only the first records it. */
+  private val seen = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[QueryExecution, java.lang.Boolean]())
+
   /** Register a capture listener on `ss` when probing is active. The
     * listener stays for the session's lifetime, but records only while
     * the probe is started (the sink check is per-event). */
@@ -38,7 +44,7 @@ object PlanProbe {
     ss.listenerManager.register(new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution,
           durationNs: Long): Unit =
-        record(s"$label/$funcName", qe.executedPlan)
+        if (seen.put(qe, true) == null) record(s"$label/$funcName", qe.executedPlan)
       override def onFailure(funcName: String, qe: QueryExecution,
           exception: Exception): Unit = ()
     })

@@ -618,19 +618,20 @@ object Pipeline {
   }
 
   /** Every data file under `dir` (recursive), `dir`-relative, skipping
-    * dot- and underscore-prefixed staging/tmp/metadata entries. */
+    * dot- and underscore-prefixed staging/tmp/metadata entries. Walks with
+    * `listStatus`: `listFiles` wraps each entry in a `LocatedFileStatus`,
+    * whose constructor reads the permission, which the local file system
+    * loads by forking `ls`. */
   private def listDataFiles(fs: FileSystem, dir: Path): Seq[String] = {
-    if (!fs.exists(dir)) return Seq.empty
-    val base = fs.makeQualified(dir).toString.stripSuffix("/") + "/"
-    val buf = scala.collection.mutable.ArrayBuffer[String]()
-    val it = fs.listFiles(dir, true)
-    while (it.hasNext) {
-      val rel = it.next().getPath.toString.stripPrefix(base)
-      if (rel.endsWith(".parquet") &&
-        !rel.split('/').exists(c => c.startsWith(".") || c.startsWith("_")))
-        buf += rel
-    }
-    buf.toSeq
+    def walk(d: Path, prefix: String): Seq[String] =
+      fs.listStatus(d).toSeq.flatMap { st =>
+        val name = st.getPath.getName
+        if (name.startsWith(".") || name.startsWith("_")) Nil
+        else if (st.isDirectory) walk(st.getPath, s"$prefix$name/")
+        else if (name.endsWith(".parquet")) Seq(prefix + name)
+        else Nil
+      }
+    if (fs.exists(dir)) walk(dir, "") else Seq.empty
   }
 
   /** Delete the data files in `dirs` (table-relative; "" = the table

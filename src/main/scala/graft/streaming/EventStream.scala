@@ -14,23 +14,22 @@ import org.apache.spark.sql.types._
 object EventStream {
 
   /** Streaming source over the events directory, ts normalized to µs
-    * TimestampType. readStream needs an explicit schema, and the stored
-    * `ts` physical type has varied across data drops (TIMESTAMP(NANOS)
-    * readable only as Long, TIMESTAMP(MICROS) without tz read as NTZ), so
-    * the schema is inferred from a zero-cost batch footer read of the
-    * same path and `ts` is normalized exactly as in [[graft.Tables]]. */
-  def events(spark: SparkSession, sfDir: String): DataFrame = {
+    * TimestampType exactly as in [[graft.Tables]]. readStream needs an
+    * explicit schema, `stored`: the events layout as stored, whose `ts`
+    * physical type has varied across data drops (TIMESTAMP(NANOS) readable
+    * only as Long, TIMESTAMP(MICROS) without tz read as NTZ). A caller
+    * streaming a fresh copy of a table passes the schema pinned for the
+    * original, so nothing is inferred. */
+  def events(spark: SparkSession, sfDir: String, stored: StructType): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val stored = spark.read.parquet(s"$sfDir/events.parquet").schema
-    val raw = spark.readStream
-      .schema(stored)
-      .parquet(s"$sfDir/events.parquet")
-    stored("ts").dataType match {
-      case LongType => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case TimestampType => raw
-      case _ => raw.withColumn("ts", col("ts").cast(TimestampType))
-    }
+    graft.Tables.normalizeTs(
+      spark.readStream.schema(stored).parquet(s"$sfDir/events.parquet"))
   }
+
+  /** [[events]] with the schema [[graft.Tables.stored]] pins for
+    * `<sfDir>/events.parquet`. */
+  def events(spark: SparkSession, sfDir: String): DataFrame =
+    events(spark, sfDir, graft.Tables.stored(spark, sfDir, "events"))
 
   /** 10-minute tumbling counts with a 1-hour watermark (late data beyond an
     * hour is dropped; state is bounded per window × type). */

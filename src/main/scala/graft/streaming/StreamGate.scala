@@ -6,7 +6,9 @@ import graft.{Q, Tables}
 import org.apache.commons.io.FileUtils
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graftshim.GraftShim
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types.{BooleanType, DoubleType, LongType, StringType, StructType,
@@ -63,7 +65,7 @@ object StreamGate {
   /** Stage `<dir>/events.parquet` (a single file in the driver testdata
     * layout) into `<work>/in/events.parquet/` as a DIRECTORY of files —
     * the streaming file source only accepts directories. Returns the
-    * source root to hand to `EventStream.events`. */
+    * source root to hand to [[stagedEvents]]. */
   private def stageEvents(dir: String, work: Path): String = {
     val in = work.resolve("in").resolve("events.parquet")
     Files.createDirectories(in)
@@ -80,13 +82,21 @@ object StreamGate {
     work.resolve("in").toString
   }
 
+  /** The events source over `srcRoot`, a staged copy of
+    * `<dir>/events.parquet`, on a fresh [[streamSession]]; it reads with
+    * the schema pinned for the original, so the copy is never inferred. */
+  private def stagedEvents(s: SparkSession, dir: String, srcRoot: String): DataFrame =
+    EventStream.events(streamSession(s), srcRoot, Tables.stored(s, dir, "events"))
+
   /** [[stageEvents]] plus sentinel rows `leadMicros` past the real maximum
     * `ts`; each sentinel is (event_id, user_id, event_type) with value 0.0
     * and empty props. Sentinels are written in the staged files' STORED
     * ts layout — the testdata's physical type has varied across drops
     * (Long nanos / µs NTZ / µs UTC, see [[graft.Tables]]), and a sentinel
     * file whose `ts` type disagrees with the staged files would fail the
-    * stream's schema. Returns the source root. */
+    * stream's schema. The staged files are copies of `<dir>/events.parquet`,
+    * so that layout is the schema pinned for it ([[Tables.stored]]); the
+    * fresh staged copy is never inferred. Returns the source root. */
   private def stageWithSentinels(s: SparkSession, dir: String, work: Path,
       leadMicros: Long,
       sentinels: Seq[(Long, Long, String)] = Seq((-1L, -1L, Sentinel))): String = {
@@ -94,8 +104,7 @@ object StreamGate {
     val in = Paths.get(srcRoot, "events.parquet").toString
     val micros = Tables(s, dir, "events")
       .agg(max(unix_micros(col("ts")))).collect()(0).getLong(0) + leadMicros
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val stored = s.read.parquet(in).schema
+    val stored = Tables.stored(s, dir, "events")
     val ts: Any = stored("ts").dataType match {
       case LongType => micros * 1000L
       case TimestampNTZType =>
@@ -114,25 +123,35 @@ object StreamGate {
     srcRoot
   }
 
-  /** A dedicated child session for one stream execution: same
-    * SparkContext, ISOLATED SQLConf, so the state-partition cap below
-    * never touches the caller's session (safe under concurrent use — the
-    * old set/restore on the shared conf assumed strictly sequential
-    * queries).
+  /** A dedicated child session for one stream execution: a clone of the
+    * caller ([[GraftShim.cloneSession]]) over the same SparkContext, so it
+    * keeps the caller's conf (an interpreted caller's codegen-off flags
+    * included) and the caller's pinned table schemas ([[Tables.share]]),
+    * while conf set on it never touches the caller's session (safe under
+    * concurrent use).
     *
     * State-partition sizing: a streaming query creates one state store per
     * shuffle partition, a FIXED per-run cost (store setup + checkpoint
     * files) regardless of data volume. The gates process bounded test
     * tables, so the child session is capped at 8 partitions (measured:
     * q94 8.1 s → 3.1 s warm at local[32]); at 100 TB the same dial is
-    * sized UP to the key cardinality instead. */
+    * sized UP to the key cardinality instead.
+    *
+    * Checkpoint files go through [[FileSystemBasedCheckpointFileManager]],
+    * the `FileSystem` of the path and so `fs.file.impl`. Spark's default,
+    * FileContext-based manager reaches Hadoop's `RawLocalFs`, which builds
+    * its own `RawLocalFileSystem` and forks `readlink` per rename and
+    * `chmod` per file: about 285 processes per q96 run. */
   private def streamSession(s: SparkSession): SparkSession = {
-    val ss = s.newSession()
+    val ss = GraftShim.cloneSession(s)
     if (scala.util.Try(
         ss.conf.get("spark.sql.shuffle.partitions").toInt).toOption.forall(_ > 8))
       ss.conf.set("spark.sql.shuffle.partitions", "8")
-    // Child sessions have their own listener manager — re-attach the plan
-    // probe (no-op unless the standing plan audit is capturing).
+    ss.conf.set("spark.sql.streaming.checkpointFileManagerClass",
+      classOf[FileSystemBasedCheckpointFileManager].getName)
+    Tables.share(s, ss)
+    // The clone copies the caller's listeners; the plan probe records
+    // each plan once however many of its listeners a session carries.
     graft.PlanProbe.attach(ss, "stream-child")
     ss
   }
@@ -172,12 +191,13 @@ object StreamGate {
       work)
 
   /** Run `df` through the shared parquet sink (append) under `work` and
-    * return the output path for read-back. */
-  private def runToParquet(df: DataFrame, work: Path): String = {
+    * read the output back on `s`, with `df`'s schema (the sink writes
+    * exactly that, so no inference job runs). */
+  private def runToParquet(s: SparkSession, df: DataFrame, work: Path): DataFrame = {
     val out = work.resolve("out").toString
     finish(df.writeStream.format("parquet").option("path", out)
       .outputMode("append"), work)
-    out
+    s.read.schema(df.schema).parquet(out)
   }
 
   /** Stage `df` as two deterministic micro-batches under `<work>/in`:
@@ -345,14 +365,14 @@ object StreamGate {
        |       ${Q.oSum6("value")} AS sum_value
        |FROM events GROUP BY 1, 2 ORDER BY win_start, event_type""".stripMargin) { (s, dir, work) =>
     val srcRoot = stageWithSentinels(s, dir, work, 80L * 60 * 1000000)
-    val agg = EventStream.events(streamSession(s), srcRoot)
+    val agg = stagedEvents(s, dir, srcRoot)
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "10 minutes"), col("event_type"))
       .agg(count(lit(1)).as("n"), Q.dsum6(col("value")).as("sum_value"))
       .select(
         unix_timestamp(col("window.start")).as("win_start"),
         col("event_type"), col("n"), col("sum_value"))
-    s.read.parquet(runToParquet(agg, work))
+    runToParquet(s, agg, work)
       .filter(col("event_type") =!= Sentinel)
       .orderBy(col("win_start"), col("event_type"))
   }
@@ -379,14 +399,14 @@ object StreamGate {
        |       ${Q.oSum6("value")} AS sum_value
        |FROM x GROUP BY 1, 2 ORDER BY win_start, event_type""".stripMargin) { (s, dir, work) =>
     val srcRoot = stageWithSentinels(s, dir, work, 100L * 60 * 1000000)
-    val agg = EventStream.events(streamSession(s), srcRoot)
+    val agg = stagedEvents(s, dir, srcRoot)
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "20 minutes", "10 minutes"), col("event_type"))
       .agg(count(lit(1)).as("n"), Q.dsum6(col("value")).as("sum_value"))
       .select(
         unix_timestamp(col("window.start")).as("win_start"),
         col("event_type"), col("n"), col("sum_value"))
-    s.read.parquet(runToParquet(agg, work))
+    runToParquet(s, agg, work)
       .filter(col("event_type") =!= Sentinel)
       .orderBy(col("win_start"), col("event_type"))
   }
@@ -412,8 +432,8 @@ object StreamGate {
       | AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 30 MINUTE
       |ORDER BY c.user_id, click_id, buy_id""".stripMargin) { (s, dir, work) =>
     val joined = EventStream.attributionJoin(
-      EventStream.events(streamSession(s), stageEvents(dir, work)))
-    s.read.parquet(runToParquet(joined, work))
+      stagedEvents(s, dir, stageEvents(dir, work)))
+    runToParquet(s, joined, work)
       .orderBy(col("user_id"), col("click_id"), col("buy_id"))
   }
 
@@ -444,8 +464,8 @@ object StreamGate {
     // session's end (≤ max + 30 min). The sentinel's session stays open.
     val srcRoot = stageWithSentinels(s, dir, work, 2L * 60 * 60 * 1000000)
     val sessions = EventStream.sessionCounts(
-      EventStream.events(streamSession(s), srcRoot))
-    s.read.parquet(runToParquet(sessions, work))
+      stagedEvents(s, dir, srcRoot))
+    runToParquet(s, sessions, work)
       .filter(col("user_id") >= 0)
       .orderBy(col("user_id"), col("sess_start"))
   }
@@ -483,10 +503,10 @@ object StreamGate {
     }
 
     val deduped = EventStream.dedupEvents(
-      EventStream.events(streamSession(s), srcRoot))
+      stagedEvents(s, dir, srcRoot))
       .select(col("event_id"), unix_timestamp(col("ts")).as("ts_s"),
         col("user_id"), col("event_type"), col("value"), col("props"))
-    s.read.parquet(runToParquet(deduped, work)).orderBy(col("event_id"))
+    runToParquet(s, deduped, work).orderBy(col("event_id"))
   }
 
   /** q99: the INCREMENTAL near-dup pipeline run as a stream — document
@@ -925,8 +945,8 @@ object StreamGate {
     val srcRoot = stageWithSentinels(s, dir, work, 3L * 60 * 60 * 1000000,
       Seq((-1L, -1L, "click"), (-2L, -2L, "purchase")))
     val joined = EventStream.attributionJoin(
-      EventStream.events(streamSession(s), srcRoot), "left_outer")
-    s.read.parquet(runToParquet(joined, work))
+      stagedEvents(s, dir, srcRoot), "left_outer")
+    runToParquet(s, joined, work)
       .filter(col("user_id") >= 0)
       .orderBy(col("user_id"), col("click_id"), col("buy_id"))
   }
@@ -953,19 +973,20 @@ object StreamGate {
     // 3 h past max: final watermark = max + 2 h, past every 1-hour
     // window's end (≤ max + 1 h); the sentinel's own window stays open.
     val srcRoot = stageWithSentinels(s, dir, work, 3L * 60 * 60 * 1000000)
-    val ss = streamSession(s)
+    val ev = stagedEvents(s, dir, srcRoot)
+    val ss = ev.sparkSession
     val dim = broadcast(Tables(ss, dir, "customer")
       .join(Tables(ss, dir, "nation"),
         col("c_nationkey") === col("n_nationkey"))
       .select(col("c_custkey"), col("n_name").as("nation")))
-    val agg = EventStream.events(ss, srcRoot)
+    val agg = ev
       .withWatermark("ts", "1 hour")
       .join(dim, col("user_id") === col("c_custkey"))
       .groupBy(window(col("ts"), "1 hour"), col("nation"))
       .agg(count(lit(1)).as("n"), Q.dsum6(col("value")).as("sum_value"))
       .select(unix_timestamp(col("window.start")).as("win_start"),
         col("nation"), col("n"), col("sum_value"))
-    s.read.parquet(runToParquet(agg, work))
+    runToParquet(s, agg, work)
       .orderBy(col("win_start"), col("nation"))
   }
 
@@ -1049,7 +1070,7 @@ object StreamGate {
         col("event_id"), col("event_type"))
       .as(Encoders.product[TransitionStream.Ev])
     val edges = TransitionStream.transitions(stream)
-    s.read.parquet(runToParquet(edges.toDF(), work))
+    runToParquet(s, edges.toDF(), work)
       .groupBy(col("from_type"), col("to_type"))
       .agg(count(lit(1)).as("n"))
       .orderBy(col("from_type"), col("to_type"))
@@ -1070,7 +1091,7 @@ object StreamGate {
       .select(col("user_id"), col("event_type"))
       .as(Encoders.product[CrosstabStream.Ev])
     val cells = CrosstabStream.crosstab(stream)
-    s.read.parquet(runToParquet(cells.toDF(), work))
+    runToParquet(s, cells.toDF(), work)
       .groupBy(col("user_id"), col("event_type"))
       .agg(max(col("n")).as("n"))
       .orderBy(col("user_id"), col("event_type"))
@@ -1098,7 +1119,7 @@ object StreamGate {
         col("event_id"))
       .as(Encoders.product[RecentBuffer.Ev])
     val out = RecentBuffer.recent(stream)
-    s.read.parquet(runToParquet(out.toDF(), work))
+    runToParquet(s, out.toDF(), work)
       .groupBy(col("user_id"))
       .agg(max(col("n_seen")).as("n_seen"),
         max_by(col("last5"), col("n_seen")).as("last5"))
