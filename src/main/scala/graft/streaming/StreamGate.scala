@@ -141,14 +141,21 @@ object StreamGate {
     * the `FileSystem` of the path and so `fs.file.impl`. Spark's default,
     * FileContext-based manager reaches Hadoop's `RawLocalFs`, which builds
     * its own `RawLocalFileSystem` and forks `readlink` per rename and
-    * `chmod` per file: about 285 processes per q96 run. */
-  private def streamSession(s: SparkSession): SparkSession = {
+    * `chmod` per file: about 285 processes per q96 run. The session's
+    * Hadoop conf, which the checkpoint, state store and sink all use, sets
+    * `fs.file.impl` to [[graft.NoForkLocalFileSystem]] whatever the
+    * caller's is, uncached: Hadoop caches one `file:` instance per JVM,
+    * keyed without the conf. Under a caller with the default local file
+    * system that is the other 77 forks (`chmod`) of a q96 run. */
+  private[streaming] def streamSession(s: SparkSession): SparkSession = {
     val ss = GraftShim.cloneSession(s)
     if (scala.util.Try(
         ss.conf.get("spark.sql.shuffle.partitions").toInt).toOption.forall(_ > 8))
       ss.conf.set("spark.sql.shuffle.partitions", "8")
     ss.conf.set("spark.sql.streaming.checkpointFileManagerClass",
       classOf[FileSystemBasedCheckpointFileManager].getName)
+    ss.conf.set("fs.file.impl", classOf[graft.NoForkLocalFileSystem].getName)
+    ss.conf.set("fs.file.impl.disable.cache", "true")
     Tables.share(s, ss)
     // The clone copies the caller's listeners; the plan probe records
     // each plan once however many of its listeners a session carries.

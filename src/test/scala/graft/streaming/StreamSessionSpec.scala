@@ -1,12 +1,16 @@
 package graft.streaming
 
-import graft.{PlanProbe, ResultDigest, SparkEntry, SparkSpec}
+import graft.{NoForkLocalFileSystem, PlanProbe, ResultDigest, SparkEntry, SparkSpec}
+import org.apache.hadoop.fs.{LocalFileSystem, Path}
 import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.graftshim.GraftShim
 
 /** A stream gate's child session is a clone of the session the gate runs
   * on: at a small input it keeps the interpreted clone's codegen-off conf,
-  * so a repeated run compiles (almost) nothing. */
+  * so a repeated run compiles (almost) nothing, and it writes its
+  * checkpoint, state and sink files through [[NoForkLocalFileSystem]]. */
 class StreamSessionSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
   private val q96 = "q96_stream_dedup"
@@ -32,5 +36,15 @@ class StreamSessionSpec extends SparkSpec {
     assert(plans.nonEmpty, "no streaming plan captured")
     assert(!plans.exists(_.collectWithSubqueries { case w: WholeStageCodegenExec => w }.nonEmpty),
       "the stream session generated whole-stage code")
+  }
+
+  test("the stream session writes through the fork-free local file system") {
+    def localFs(s: SparkSession) =
+      new Path("file:///").getFileSystem(s.sessionState.newHadoopConf())
+    val caller = GraftShim.cloneSession(spark)
+    caller.conf.set("fs.file.impl", classOf[LocalFileSystem].getName)
+    caller.conf.set("fs.file.impl.disable.cache", "true")
+    assert(localFs(caller).getClass == classOf[LocalFileSystem])
+    assert(localFs(StreamGate.streamSession(caller)).isInstanceOf[NoForkLocalFileSystem])
   }
 }
